@@ -28,7 +28,6 @@ from ..functions.text import (
     normalize_text,
     shingles_from_tokens,
     tokens,
-    word_shingles,
 )
 from .parallelism import widen
 
@@ -215,12 +214,6 @@ def minhash_signature_from_shingles(shingles: Column, num_hashes: int = 64) -> C
         return F.array_min(F.transform(base, lambda b: F.xxhash64(F.lit(seed), b)))
 
     return F.array(*[_seed_min(i) for i in range(num_hashes)])
-
-
-def minhash_signature(text: Column, num_hashes: int = 64, shingle_size: int = 3) -> Column:
-    """MinHash signature straight from a text column."""
-    sh = F.array_distinct(word_shingles(text, shingle_size))
-    return minhash_signature_from_shingles(sh, num_hashes)
 
 
 def _band_hashes_expr(sig_attr: str, bands: int, rows: int) -> Column:

@@ -27,7 +27,7 @@ argmax (ivf.py's contract), ADC via zip_with/element_at/aggregate.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm
@@ -121,19 +121,6 @@ def _lut_literal(tables: np.ndarray) -> str:
             for row in tables
         )
         + ")"
-    )
-
-
-def adc_score(codes: Column, lut_sql: str) -> Column:
-    """sum over subspaces of LUT[s][code_s] — the ADC inner product."""
-    return F.aggregate(
-        F.zip_with(
-            codes,
-            F.expr(lut_sql),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
 
 

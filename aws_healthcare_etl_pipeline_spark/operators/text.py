@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint_md5, normalize_text, token_count
+from ..functions.text import normalize_text, token_count
 
 # Tiny per-language marker lexicons for the heuristic language ID.
 # (The fixture corpus shares one vocabulary across langs, so accuracy
@@ -72,11 +72,6 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.round(avg_tok, 6).alias("avg_token_len"),
         F.round(score, 6).alias("quality_score"),
     )
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """md5 fingerprint of normalized text — the exact-dedup key."""
-    return df.withColumn("fingerprint", fingerprint_md5(F.col(text_col)))
 
 
 def winnowing_fingerprints(

@@ -328,7 +328,10 @@ def graph_dag_critical_path(
         F.lit(1).cast("long").alias("cnt"),
     )
     for lvl in range(_CP_LAYERS - 1):
-        wc = F.lit(widths[lvl + 1]).cast("long")
+        # An empty layer has no row in `widths` and no node for the
+        # join below to match, so every path stops there and the result
+        # is empty. A stand-in width of 1 keeps the modulo defined.
+        wc = F.lit(widths.get(lvl + 1, 1)).cast("long")
         cand = (
             cur.select(
                 F.explode(

@@ -1,8 +1,7 @@
 """Deltalite: a dependency-free transactional table format — parquet
 data files + a JSON snapshot log — giving the lakehouse semantics the
 reference's curated layer lacks (and that Delta/Iceberg would provide
-if their jars shipped in this environment; `sources/formats.py` keeps
-the real connectors env-gated).
+if their jars were on the classpath).
 
 Layout:
     <path>/part-<uuid>.parquet            immutable data files

@@ -1,10 +1,8 @@
 """Source/sink format coverage beyond the reference's CSV->Parquet pair.
 
-The reference touches exactly two formats (CSV in, Parquet out). A
-complete engine also speaks JSON-lines and ORC (both built into Spark),
-and can attach JDBC sources; Delta/Iceberg/Hudi need jars not present
-in this environment, so their connectors are gated stubs that fail
-loudly with guidance rather than at import time.
+The reference touches exactly two formats (CSV in, Parquet out). The
+engine also speaks JSON-lines and ORC, both built into Spark. Lakehouse
+tables use the in-repo transaction log in ``deltalite.py``.
 """
 
 from __future__ import annotations
@@ -34,38 +32,3 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).orc(path)
-
-
-def read_jdbc(
-    spark: SparkSession, url: str, table: str, properties: dict[str, str] | None = None
-) -> DataFrame:
-    """JDBC source — requires the driver jar for ``url`` on the
-    classpath (none ships in this environment; wiring is standard
-    spark.jars config at session build)."""
-    return spark.read.jdbc(url, table, properties=properties or {})
-
-
-_LAKEHOUSE_HINT = (
-    "{fmt} requires its runtime jar on the Spark classpath "
-    "(spark.jars.packages={pkg}); not available in this environment."
-)
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        return spark.read.format("delta").load(path)
-    except Exception as e:  # jar missing -> actionable error
-        raise NotImplementedError(
-            _LAKEHOUSE_HINT.format(fmt="Delta Lake", pkg="io.delta:delta-spark_2.13")
-        ) from e
-
-
-def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    try:
-        return spark.read.format("iceberg").load(table)
-    except Exception as e:
-        raise NotImplementedError(
-            _LAKEHOUSE_HINT.format(
-                fmt="Apache Iceberg", pkg="org.apache.iceberg:iceberg-spark-runtime"
-            )
-        ) from e

@@ -11,6 +11,9 @@ Each query is forced end-to-end with the noop sink (full materialization,
 no driver collect), so timings reflect the distributed plan, not
 driver-side transfer. Per query: one untimed warmup, then min of
 $SPARK_GRAFT_BENCH_RUNS (default 2) timed runs — the steady-state time.
+
+``session`` and ``time_query`` are the one measurement path: the tools
+in scripts/ import them, so every timing shares bench's session confs.
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -726,19 +730,23 @@ def _calibration_sec(spark, runs: int) -> tuple[float, list[float]]:
     return min(raw), raw
 
 
-def main() -> None:
-    # sf0.1 parquet files are ~1-25 MB — at the default 128 MB split
-    # size every scan is 1 task. Small splits give the 32 local cores
-    # work; on a real cluster at 100 TB the default (set in session.py)
-    # is correct and this override would be dropped. r11 re-tuned the
-    # value 4 MB -> 16 MB with a measured A/B over scan-bound, CPU-
-    # bound (dedup/minhash — whose compute parallelism comes from
-    # operators/parallelism.widen, not scan splits) and multimodal
-    # queries: per-task overhead is ~20 ms on this host, so 4 MB
-    # splits taxed every scan ~-12% net; 32 MB over-coarsens
-    # (q5/emb_knn/audio regress). See OPTIMIZATION_r11.md.
+def session(app_name: str):
+    """The one measurement session: every tool that times a query
+    builds it here, so their numbers compare with bench's.
+
+    sf0.1 parquet files are ~1-25 MB — at the default 128 MB split
+    size every scan is 1 task. Small splits give the 32 local cores
+    work; on a real cluster at 100 TB the default (set in session.py)
+    is correct and this override would be dropped. r11 re-tuned the
+    value 4 MB -> 16 MB with a measured A/B over scan-bound, CPU-
+    bound (dedup/minhash — whose compute parallelism comes from
+    operators/parallelism.widen, not scan splits) and multimodal
+    queries: per-task overhead is ~20 ms on this host, so 4 MB
+    splits taxed every scan ~-12% net; 32 MB over-coarsens
+    (q5/emb_knn/audio regress). See OPTIMIZATION_r11.md.
+    """
     spark = get_spark(
-        app_name="bench",
+        app_name=app_name,
         extra_conf={
             "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
             # progress bars shared the driver's captured output window in
@@ -753,6 +761,38 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     # warm the session (JVM + parquet footer reads) outside timed region
     spark.range(1).count()
+    return spark
+
+
+def time_query(
+    spark, name: str, sf_dir: str, runs: int, warmup: bool = True
+) -> tuple[float, list[float], int]:
+    """One untimed warmup (codegen + parquet footer/IO cache), then
+    ``runs`` timed noop-sink runs: full materialization, no driver
+    collect. Returns (min, every timed run, jobs of the min run); each
+    run's jobs are counted through its own job group."""
+    fn = REGISTRY[name].fn
+    sc = spark.sparkContext
+    if warmup:
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    raw: list[float] = []
+    jobs: list[int] = []
+    for _ in range(runs):
+        group = f"time_query:{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            raw.append(round(time.perf_counter() - t0, 3))
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    best = min(raw)
+    return best, raw, jobs[raw.index(best)]
+
+
+def main() -> None:
+    spark = session("bench")
 
     # TIERED protocol (round 6). With 400+ headline queries, warmup +
     # min-of-2 for everything (~3 executions/query) cannot fit any
@@ -817,7 +857,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     raw_runs: dict[str, list[float]] = {}
     for name in ordered:
-        spec = REGISTRY[name]
         over = (time.perf_counter() - bench_t0) > budget * 0.8
         # Canaries are EXEMPT from the forced-cold guard: the panel
         # exists for within-tier round-over-round comparison, so a
@@ -841,17 +880,9 @@ def main() -> None:
             if warm_q
             else ("forced_cold" if (forced and name in warm_set) else "cold")
         )
-        if warm_q:
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(runs if warm_q else 1):
-            t0 = time.perf_counter()
-            df = spec.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            raw_runs.setdefault(name, []).append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 3)
+        timings[name], raw_runs[name], _ = time_query(
+            spark, name, SF_DIR, runs if warm_q else 1, warmup=warm_q
+        )
         print(f"# {name}: {timings[name]:.2f}s [{tiers[name]}]", file=sys.stderr)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]

@@ -1,44 +1,87 @@
 #!/usr/bin/env python
-"""Builder-side replica of the driver correctness gate at any SF.
+"""Replica of the driver correctness gate, run through __spark_entry__.
 
-Runs each named query through __spark_entry__.queries() on a HOSTILE
-plain session (driver-style: its own SparkSession, non-UTC default
-until _prepared fixes it) and its oracle through DuckDB on the same
-parquet, comparing with tests/oracle_compare.compare_frames (stricter
-than the driver's hash).
+The session is the driver's, not ours: a plain SparkSession on
+local[16] with 8g and the hostile America/New_York timezone, so any
+conf the engine needs must come from __spark_entry__._prepared. Run it
+from a cwd outside the repo: that catches Pandas-UDF closures that
+pickle by reference to a module the workers cannot import.
+
+It calls entry(spark), then runs each chosen queries() entry and its
+oracle_sql() through DuckDB over the same parquet, comparing with
+tests/oracle_compare.compare_frames (stricter than the driver's hash).
+Queries without an oracle must run and return columns. ``--out FILE``
+writes one record per query (rows_match, schema_match, hash_match,
+spark_rows, oracle_rows, err); exits 1 if any query fails.
 
 Usage:
-  python scripts/driver_sim.py [--sf DIR] query [query ...]
-  python scripts/driver_sim.py --sf /root/testdata/sf0.01 --all
+  cd /tmp && python <repo>/scripts/driver_sim.py [--sf DIR] q1 q2 ...
+  cd /tmp && python <repo>/scripts/driver_sim.py --all --out ds.json
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tests"))
 
 import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from oracle_compare import compare_frames  # noqa: E402
+from tests.conftest import SF_CORRECTNESS  # noqa: E402
+from tests.oracle_compare import _normalize, compare_frames  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = (
+    "region nation customer supplier part orders lineitem "
+    "events documents embeddings"
+).split()
+
+
+def _kind(s) -> str:
+    return {"u": "i"}.get(s.dtype.kind, s.dtype.kind)
+
+
+def check(fn, oracle: str | None, spark, duck, sf: str, name: str) -> dict:
+    rec = {
+        "rows_match": False, "schema_match": False, "hash_match": False,
+        "spark_rows": None, "oracle_rows": None, "err": None,
+    }
+    try:
+        spark_pdf = fn(spark, sf).toPandas()
+        rec["spark_rows"] = len(spark_pdf)
+        if not oracle:
+            # rows-only: nulls tell "ran without error" from "matched"
+            rec["rows_match"] = rec["schema_match"] = rec["hash_match"] = None
+            if not len(spark_pdf.columns):
+                rec["err"] = "empty schema"
+            return rec
+        duck_pdf = duck.execute(oracle).fetchdf()
+        rec["oracle_rows"] = len(duck_pdf)
+        rec["rows_match"] = len(spark_pdf) == len(duck_pdf)
+        a, b = _normalize(spark_pdf), _normalize(duck_pdf)
+        rec["schema_match"] = list(a.columns) == list(b.columns) and all(
+            _kind(a[c]) == _kind(b[c]) for c in a.columns
+        )
+        problems = compare_frames(spark_pdf, duck_pdf, name)
+        rec["hash_match"] = not problems
+        if problems:
+            rec["err"] = "; ".join(problems[:3])
+    except Exception as e:  # noqa: BLE001 — record, keep sweeping
+        rec["err"] = f"{type(e).__name__}: {e}"[:500]
+    return rec
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--all", action="store_true")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf", default=SF_CORRECTNESS, metavar="DIR")
+    ap.add_argument("--all", action="store_true", help="every queries() entry")
+    ap.add_argument("--out", default=None, metavar="FILE")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -46,43 +89,53 @@ def main() -> None:
     oracles = entrymod.oracle_sql()
     names = list(qs) if args.all else args.names
     unknown = [n for n in names if n not in qs]
-    if unknown:
-        raise SystemExit(f"unknown queries: {unknown}")
+    if unknown or not names:
+        ap.error(f"unknown queries: {unknown}" if unknown else "name queries or pass --all")
 
     spark = (
-        SparkSession.builder.master("local[*]")
+        SparkSession.builder.master("local[16]")
         .appName("driver_sim")
         .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.session.timeZone", "America/New_York")
+        .config("spark.driver.memory", "8g")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+    print(f"session timezone: {spark.conf.get('spark.sql.session.timeZone')}")
     duck = duckdb.connect()
     for t in TABLES:
         duck.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
         )
 
-    n_fail = 0
-    for name in names:
+    t0 = time.perf_counter()
+    rows = entrymod.entry(spark).collect()
+    print(f"entry(): {len(rows)} rows ({time.perf_counter() - t0:.1f}s)", flush=True)
+
+    t_all = time.perf_counter()
+    results: dict[str, dict] = {}
+    fails = []
+    for i, name in enumerate(names):
         t0 = time.perf_counter()
-        try:
-            spark_pdf = qs[name](spark, args.sf).toPandas()
-            if name in oracles:
-                duck_pdf = duck.execute(oracles[name]).fetchdf()
-                problems = compare_frames(spark_pdf, duck_pdf, name)
-            else:
-                problems = [] if len(spark_pdf.columns) else [f"{name}: empty schema"]
-        except Exception as exc:  # surface, keep sweeping
-            problems = [f"{name}: ERROR {type(exc).__name__}: {exc}"]
-        dt = time.perf_counter() - t0
-        status = "PASS" if not problems else "FAIL"
-        if problems:
-            n_fail += 1
-        print(f"{status} {name} ({dt:.1f}s)")
-        for p in problems[:3]:
-            print(f"  {p}")
-    print(f"\n{len(names) - n_fail}/{len(names)} green")
-    sys.exit(1 if n_fail else 0)
+        rec = check(qs[name], oracles.get(name), spark, duck, args.sf, name)
+        results[name] = rec
+        ok = rec["hash_match"] in (True, None) and rec["err"] is None
+        if not ok:
+            fails.append(name)
+        print(
+            f"[{i + 1}/{len(names)}] {'PASS' if ok else 'FAIL'} {name} "
+            f"({time.perf_counter() - t0:.1f}s)" + ("" if ok else f"\n  {rec['err']}"),
+            flush=True,
+        )
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(results, f, indent=1)
+    print(
+        f"\n{len(names) - len(fails)}/{len(names)} green, fails={len(fails)}: "
+        f"{fails} ({time.perf_counter() - t_all:.0f}s)",
+        flush=True,
+    )
+    sys.exit(1 if fails else 0)
 
 
 if __name__ == "__main__":

@@ -1,22 +1,24 @@
 #!/usr/bin/env python
-"""Per-query optimization profiler (round 11).
+"""Per-query profile on bench's measurement session.
 
-For each named registry query at $SPARK_GRAFT_SF_DIR (default sf0.1):
-  - t_build : Python-side DataFrame construction (py4j plan building)
-  - t_first : first noop-sink execution (codegen compile + exec)
-  - t_warm  : min of N warm noop-sink runs (steady state, guide §1.4)
-  - n_jobs  : Spark jobs triggered by one warm run
-  - plan    : .explain("formatted"), optionally written to --plans DIR
+A host-speed calibration first (bench._calibration_sec, so readings
+normalize against any bench table), then for each named registry query:
+  - build : Python-side DataFrame construction (py4j plan building)
+  - first : first noop-sink execution of that plan (codegen + exec),
+            which is also the warmup
+  - min, raw, jobs : bench.time_query over ``--runs`` timed runs
+and, with ``--plans DIR``, the .explain("formatted") text per query.
+Prints one JSON document as the last stdout line.
 
-Timing methodology matches bench.py (same session factory, same
-maxPartitionBytes override, noop sink). Usage:
-
-  python scripts/profile_query.py [--plans DIR] [--runs N] q1 q2 ...
+Usage:
+  python scripts/profile_query.py --sf DIR [--runs N] \\
+      [--plans DIR] [--suffix _after] q1 q2 ...
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import time
@@ -24,78 +26,58 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import bench  # noqa: E402
 from aws_healthcare_etl_pipeline_spark.plans import REGISTRY  # noqa: E402
-from aws_healthcare_etl_pipeline_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf", required=True, metavar="DIR")
+    ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--plans", default=None, help="dir for explain dumps")
     ap.add_argument("--suffix", default="", help="plan file suffix (_before/_after)")
-    ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
     if args.runs < 1:
         ap.error("--runs must be >= 1")
+    unknown = [n for n in args.names if n not in REGISTRY]
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
 
-    spark = get_spark(
-        app_name="profile",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1).count()
-    tracker = spark.sparkContext.statusTracker()
-
+    spark = bench.session("profile")
+    calib, calib_raw = bench._calibration_sec(spark, args.runs)
+    out: dict[str, object] = {
+        "calibration_sec": calib,
+        "calibration_raw": calib_raw,
+        "sf": args.sf,
+        "queries": {},
+    }
     for name in args.names:
-        spec = REGISTRY[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
         t0 = time.perf_counter()
-        df = spec.fn(spark, SF_DIR)
-        t_build = time.perf_counter() - t0
-
+        df = REGISTRY[name].fn(spark, args.sf)
+        build = round(time.perf_counter() - t0, 3)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             plan_txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(
-                os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w"
-            ) as f:
+            with open(os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w") as f:
                 f.write(plan_txt)
-
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
-        t_first = time.perf_counter() - t0
-
-        # Jobs per warm run via the PUBLIC job-group API (the r11 form
-        # read dagScheduler().nextJobId(), a private accessor that went
-        # away in Spark 4.1): tag one run with a unique group id and
-        # count the group's job ids afterwards.
-        best, jobs_delta = None, None
-        for r in range(args.runs):
-            group = f"profile:{name}:{r}"
-            spark.sparkContext.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            d2 = spec.fn(spark, SF_DIR)
-            d2.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            spark.sparkContext.setJobGroup(None, None)
-            best = dt if best is None else min(best, dt)
-            try:
-                jobs_delta = len(tracker.getJobIdsForGroup(group))
-            except Exception:
-                jobs_delta = -1
-        print(
-            f"{name}: build={t_build:.3f}s first={t_first:.3f}s "
-            f"warm_min={best:.3f}s jobs~{jobs_delta}",
-            flush=True,
+        first = round(time.perf_counter() - t0, 3)
+        best, raw, jobs = bench.time_query(
+            spark, name, args.sf, args.runs, warmup=False
         )
-        spark.sparkContext.setJobDescription(None)
+        out["queries"][name] = {
+            "build": build, "first": first, "min": best, "raw": raw, "jobs": jobs,
+        }
+        print(
+            f"# {name}: build={build:.3f}s first={first:.3f}s "
+            f"min={best:.3f}s raw={raw} jobs={jobs}",
+            file=sys.stderr,
+        )
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

@@ -1,13 +1,10 @@
-"""Round-trip tests for the non-reference formats (JSON-lines, ORC) and
-the gated lakehouse stubs."""
+"""Round-trip tests for the non-reference formats (JSON-lines, ORC)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from aws_healthcare_etl_pipeline_spark.sources.formats import (
-    read_delta,
     read_jsonl,
     read_orc,
     write_jsonl,
@@ -32,8 +29,3 @@ def test_orc_roundtrip_and_pushdown(spark, sf_dir, tmp_path):
     plan = filtered._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "c_custkey" in plan  # ORC pushdown too
     assert filtered.count() == 10
-
-
-def test_lakehouse_stub_fails_actionably(spark, tmp_path):
-    with pytest.raises(NotImplementedError, match="delta-spark"):
-        read_delta(spark, str(tmp_path / "nowhere"))
