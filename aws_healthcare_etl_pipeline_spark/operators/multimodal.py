@@ -27,16 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-METADATA_SCHEMA = T.StructType(
-    [
-        T.StructField("format", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("checksum_md5", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
 
 def attach_binary_payload(
     df: DataFrame, source_col: str, fmt: str = "raw/utf-8"

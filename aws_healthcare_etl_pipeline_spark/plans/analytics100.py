@@ -21,37 +21,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import SQL_SEG_SCORE, query, seg_score, sql_hex8
 
 # --------------------------------------------- McNemar
 
-_SEG_W = (
-    "CASE c_mktsegment WHEN 'AUTOMOBILE' THEN 120 WHEN 'BUILDING' THEN 80 "
-    "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
-)
 _CHI2_05_MILLI = 3841
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
 
 
 @query(
     "ml_mcnemar_paired_classifiers",
     oracle=f"""
         WITH scored AS (
-            SELECT CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                        AS BIGINT) // 100
-                   + CAST({_SEG_W} AS BIGINT) * 10 AS score,
-                   CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                             AS BIGINT) // 100
-                             + CAST({_SEG_W} AS BIGINT) * 10
-                             + ({_hex8_sql(
+            SELECT {SQL_SEG_SCORE} AS score,
+                   CASE WHEN {SQL_SEG_SCORE}
+                             + ({sql_hex8(
                                  "'noise:' || CAST(c_custkey"
                                  " AS VARCHAR)")}) % 4000 > 8000
                         THEN 1 ELSE 0 END AS y
@@ -95,10 +78,7 @@ def ml_mcnemar_paired_classifiers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    score = F.expr(
-        f"CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100 AS BIGINT) div 100"
-        f" + CAST({_SEG_W} AS BIGINT) * 10"
-    )
+    score = seg_score()
     noise = F.expr(
         "CAST(conv(substring(md5(concat('noise:', CAST(c_custkey"
         " AS STRING))), 1, 8), 16, 10) AS BIGINT) % 4000"

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import heavy_trade, query
 
 # ---------------------------------------- link prediction
 
@@ -91,36 +91,8 @@ from .registry import query
 def graph_jaccard_link_prediction(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    line = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    cn = F.col("c_nationkey")
-    sn = F.col("s_nationkey")
-    trade = (
-        line.join(orders, orders.o_orderkey == line.l_orderkey)
-        .join(F.broadcast(customer), customer.c_custkey == orders.o_custkey)
-        .join(F.broadcast(supplier), supplier.s_suppkey == line.l_suppkey)
-        .where(cn != sn)
-        .groupBy(
-            F.least(cn, sn).alias("u"), F.greatest(cn, sn).alias("v")
-        )
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(15,2)") * 100)
-            .cast("long")
-            .alias("w")
-        )
-    )
-    st = trade.agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("w").cast("long").alias("tot"),
-    )
-    heavy = (
-        trade.crossJoin(F.broadcast(st))
-        .where(F.col("w") * F.col("cnt") * 2 >= 3 * F.col("tot"))
-        .select("u", "v")
-        .localCheckpoint(eager=False)  # reused: edges + anti join
-    )
+    # reused: edges + anti join
+    heavy = heavy_trade(spark, sf_dir).localCheckpoint(eager=False)
     edges = heavy.unionAll(
         heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)

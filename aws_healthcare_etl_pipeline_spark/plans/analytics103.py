@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import convert_events_ts, events_read_schema, load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------- streaming windowed top-k
 
@@ -112,15 +112,6 @@ def streaming_windowed_topk_types(
 # --------------------------------------------- Kingman VUT
 
 
-def _hex8_sql_text() -> str:
-    h = "md5('svc:' || CAST(event_id AS VARCHAR))"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
 @query(
     "ops_kingman_vut_approximation",
     oracle="""
@@ -164,7 +155,7 @@ def _hex8_sql_text() -> str:
                    AS wq_micros
         FROM amom a JOIN smom s ON s.event_type = a.event_type
         ORDER BY a.event_type
-    """.format(h=_hex8_sql_text()),
+    """.format(h=sql_hex8("'svc:' || CAST(event_id AS VARCHAR)")),
     description="Kingman's VUT formula — THE back-of-envelope law of "
     "queueing (waiting ~= Variability x Utilization x Time): per "
     "event type, arrival variability Ca^2 comes from exact "
@@ -185,19 +176,7 @@ def ops_kingman_vut_approximation(
 ) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     svc = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("svc:"), F.col("event_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex8(F.concat(F.lit("svc:"), F.col("event_id").cast("string")))
         % 1000
         + 1
     )

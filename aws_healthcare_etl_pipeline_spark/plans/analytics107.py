@@ -20,12 +20,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.keyscan import keyed_pandas_scan
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------------------- NDR
 
@@ -124,19 +124,6 @@ def finance_net_dollar_retention(
 # ------------------------------------------- CUSUM ARL
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 _REPS = 50
 
 # shared recurrence text: S' = max(0, S + noise - k); alarm at S' > h
@@ -160,7 +147,7 @@ _STEP = "greatest(CAST(0 AS BIGINT), s.cusum + g.noise - g.k)"
             FROM daily
         ), spine AS MATERIALIZED (
             SELECT r.r, i.i, c.nd, c.mad // 2 AS k, 4 * c.mad AS h,
-                   ({_hex8_sql(
+                   ({sql_hex8(
                        "'arl:' || CAST(r.r AS VARCHAR) || ':' "
                        "|| CAST(i.i AS VARCHAR)")})
                        % (4 * c.mad + 1) - 2 * c.mad AS noise
@@ -259,7 +246,7 @@ def stats_cusum_arl_calibration(
             "k",
             "h",
             (
-                _hex8_spark(
+                hex8(
                     F.concat(
                         F.lit("arl:"),
                         F.col("r").cast("string"),

@@ -18,32 +18,15 @@ PageRank.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import SQL_SEG_SCORE, heavy_trade, hex8, query, seg_score, sql_hex8
 
 
 # ------------------------------------------------ k-fold CV
 
-_SEG_W = (
-    "CASE c_mktsegment WHEN 'AUTOMOBILE' THEN 120 WHEN 'BUILDING' THEN 80 "
-    "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
-)
 _FOLDS = 5
 
 
@@ -51,15 +34,11 @@ _FOLDS = 5
     "ml_kfold_cv_accuracy",
     oracle=f"""
         WITH scored AS (
-            SELECT ({_hex8_sql("'cv:' || CAST(c_custkey AS VARCHAR)")})
+            SELECT ({sql_hex8("'cv:' || CAST(c_custkey AS VARCHAR)")})
                        % {_FOLDS} AS fold,
-                   CASE WHEN (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                                   AS BIGINT) // 100
-                              + CAST({_SEG_W} AS BIGINT) * 10 > 10000)
-                             = (CAST(CAST(c_acctbal AS DECIMAL(15,2))
-                                     * 100 AS BIGINT) // 100
-                                + CAST({_SEG_W} AS BIGINT) * 10
-                                + ({_hex8_sql(
+                   CASE WHEN ({SQL_SEG_SCORE} > 10000)
+                             = ({SQL_SEG_SCORE}
+                                + ({sql_hex8(
                                     "'noise:' || CAST(c_custkey"
                                     " AS VARCHAR)")}) % 4000 > 8000)
                         THEN 1 ELSE 0 END AS ok
@@ -89,21 +68,14 @@ _FOLDS = 5
 )
 def ml_kfold_cv_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
-    score = F.expr(
-        f"CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100 AS BIGINT) div 100"
-        f" + CAST({_SEG_W} AS BIGINT) * 10"
-    )
+    score = seg_score()
     noise = (
-        _hex8_spark(
-            F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
-        )
+        hex8(F.concat(F.lit("noise:"), F.col("c_custkey").cast("string")))
         % 4000
     )
     scored = cust.select(
         (
-            _hex8_spark(
-                F.concat(F.lit("cv:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("cv:"), F.col("c_custkey").cast("string")))
             % _FOLDS
         ).alias("fold"),
         F.when((score > 10000) == (score + noise > 8000), 1)
@@ -225,35 +197,7 @@ def _ppr_oracle() -> str:
 def graph_personalized_pagerank(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    line = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    cn = F.col("c_nationkey")
-    sn = F.col("s_nationkey")
-    trade = (
-        line.join(orders, orders.o_orderkey == line.l_orderkey)
-        .join(F.broadcast(customer), customer.c_custkey == orders.o_custkey)
-        .join(F.broadcast(supplier), supplier.s_suppkey == line.l_suppkey)
-        .where(cn != sn)
-        .groupBy(
-            F.least(cn, sn).alias("u"), F.greatest(cn, sn).alias("v")
-        )
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(15,2)") * 100)
-            .cast("long")
-            .alias("w")
-        )
-    )
-    stt = trade.agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("w").cast("long").alias("tot"),
-    )
-    heavy = (
-        trade.crossJoin(F.broadcast(stt))
-        .where(F.col("w") * F.col("cnt") * 2 >= 3 * F.col("tot"))
-        .select("u", "v")
-    )
+    heavy = heavy_trade(spark, sf_dir)
     edges = heavy.unionAll(
         heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

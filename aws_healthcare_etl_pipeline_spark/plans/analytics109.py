@@ -21,11 +21,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------------- arc elasticity
 
@@ -144,35 +144,22 @@ _GRID = 32
 _Z_FLAG_MILLI = 2000  # |z| >= 2 sigma
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 @query(
     "geo_getis_ord_hotspots",
     oracle=f"""
         WITH pts AS (
             SELECT CASE WHEN event_type = 'purchase'
-                        THEN (({_hex8_sql(
+                        THEN (({sql_hex8(
                             "'gx:' || CAST(user_id AS VARCHAR)")})
                               % {_GRID}) // 4 * 4
-                        ELSE ({_hex8_sql(
+                        ELSE ({sql_hex8(
                             "'gx:' || CAST(user_id AS VARCHAR)")})
                              % {_GRID} END AS cx,
                    CASE WHEN event_type = 'purchase'
-                        THEN (({_hex8_sql(
+                        THEN (({sql_hex8(
                             "'gy:' || CAST(user_id AS VARCHAR)")})
                               % {_GRID}) // 4 * 4
-                        ELSE ({_hex8_sql(
+                        ELSE ({sql_hex8(
                             "'gy:' || CAST(user_id AS VARCHAR)")})
                              % {_GRID} END AS cy
             FROM events
@@ -227,12 +214,8 @@ def _hex8_spark(col: Column) -> Column:
 )
 def geo_getis_ord_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    hx = _hex8_spark(
-        F.concat(F.lit("gx:"), F.col("user_id").cast("string"))
-    ) % _GRID
-    hy = _hex8_spark(
-        F.concat(F.lit("gy:"), F.col("user_id").cast("string"))
-    ) % _GRID
+    hx = hex8(F.concat(F.lit("gx:"), F.col("user_id").cast("string"))) % _GRID
+    hy = hex8(F.concat(F.lit("gy:"), F.col("user_id").cast("string"))) % _GRID
     is_p = F.col("event_type") == "purchase"
     pts = events.select(
         F.when(is_p, F.expr(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import buyers_1996, query
 
 # --------------------------------------- Brier decomposition
 
@@ -94,25 +94,10 @@ from .registry import query
 def ml_brier_murphy_decomposition(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    lab = (
-        customer.join(
-            orders, orders.o_custkey == customer.c_custkey, "left"
-        )
-        .groupBy(
-            customer.c_custkey.alias("k"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-        .agg(
-            F.when(
-                F.count(F.when(F.year("o_orderdate") == 1996, 1)) > 0, 1
-            )
-            .otherwise(0)
-            .alias("y")
-        )
-        .localCheckpoint(eager=False)  # feeds train AND test splits
-    )
+    # feeds train AND test splits
+    lab = buyers_1996(
+        spark, sf_dir, F.col("c_mktsegment").alias("seg")
+    ).localCheckpoint(eager=False)
     train = (
         lab.where(F.col("k") % 2 == 0)
         .groupBy("seg")

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------------------ RRF fusion
 
@@ -147,15 +147,6 @@ _COLS = ("l_returnflag", "l_linestatus", "shipmm")
 _BUCKET = 1 << 24  # 256 buckets over the 32-bit hash domain
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
 def _rle_oracle() -> str:
     per_col = []
     for c in _COLS:
@@ -185,7 +176,7 @@ def _rle_oracle() -> str:
             SELECT l_orderkey AS okey, l_linenumber AS oline,
                    l_returnflag, l_linestatus,
                    EXTRACT(month FROM l_shipdate) AS shipmm,
-                   {_hex8_sql(
+                   {sql_hex8(
                        "CAST(l_orderkey AS VARCHAR) || ':' "
                        "|| CAST(l_linenumber AS VARCHAR)")} AS hv
             FROM lineitem
@@ -224,23 +215,13 @@ def layout_sort_order_rle_bakeoff(
         F.col("l_returnflag"),
         F.col("l_linestatus"),
         F.month("l_shipdate").cast("long").alias("shipmm"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("l_orderkey").cast("string"),
-                        F.lit(":"),
-                        F.col("l_linenumber").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("hv"),
+        hex8(
+            F.concat(
+                F.col("l_orderkey").cast("string"),
+                F.lit(":"),
+                F.col("l_linenumber").cast("string"),
+            )
+        ).alias("hv"),
     ).localCheckpoint(eager=False)  # reused per column
     n_row = base.agg(F.count(F.lit(1)).cast("long").alias("n"))
     # distributed lag: in-bucket lag + boundary stitch per column

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import buyers_1996, query
 
 # ------------------------------------------- MDE power analysis
 
@@ -70,24 +70,7 @@ _Z_SUM_MILLI = 2800  # z_{0.975} + z_{0.8} = 1.960 + 0.840
 def experiment_mde_power_analysis(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    lab = (
-        customer.join(
-            orders, orders.o_custkey == customer.c_custkey, "left"
-        )
-        .groupBy(
-            customer.c_custkey.alias("k"),
-            F.col("c_mktsegment").alias("seg"),
-        )
-        .agg(
-            F.when(
-                F.count(F.when(F.year("o_orderdate") == 1996, 1)) > 0, 1
-            )
-            .otherwise(0)
-            .alias("y")
-        )
-    )
+    lab = buyers_1996(spark, sf_dir, F.col("c_mktsegment").alias("seg"))
     rates = lab.groupBy("seg").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.expr("CAST(SUM(y) * 1000 div COUNT(*) AS LONG)").alias("p_m"),

@@ -18,32 +18,14 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import SQL_SEG_SCORE, hex8, query, seg_score, sql_hex8
 
 
 # --------------------------------------------- equalized odds
-
-_SEG_W = (
-    "CASE c_mktsegment WHEN 'AUTOMOBILE' THEN 120 WHEN 'BUILDING' THEN 80 "
-    "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
-)
 
 
 @query(
@@ -51,14 +33,10 @@ _SEG_W = (
     oracle=f"""
         WITH scored AS (
             SELECT c_mktsegment AS seg,
-                   CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                             AS BIGINT) // 100
-                             + CAST({_SEG_W} AS BIGINT) * 10 > 10000
+                   CASE WHEN {SQL_SEG_SCORE} > 10000
                         THEN 1 ELSE 0 END AS pred,
-                   CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                             AS BIGINT) // 100
-                             + CAST({_SEG_W} AS BIGINT) * 10
-                             + ({_hex8_sql(
+                   CASE WHEN {SQL_SEG_SCORE}
+                             + ({sql_hex8(
                                  "'noise:' || CAST(c_custkey"
                                  " AS VARCHAR)")}) % 4000 > 8000
                         THEN 1 ELSE 0 END AS y
@@ -108,14 +86,9 @@ def fairness_equalized_odds_audit(
     from pyspark.sql import Window
 
     cust = load_table(spark, sf_dir, "customer")
-    score = F.expr(
-        f"CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100 AS BIGINT) div 100"
-        f" + CAST({_SEG_W} AS BIGINT) * 10"
-    )
+    score = seg_score()
     noise = (
-        _hex8_spark(
-            F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
-        )
+        hex8(F.concat(F.lit("noise:"), F.col("c_custkey").cast("string")))
         % 4000
     )
     scored = cust.select(

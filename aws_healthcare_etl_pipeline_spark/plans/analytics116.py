@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import buyers_1996, query
 
 # ------------------------------------- cost-optimal threshold
 
@@ -101,25 +101,10 @@ _C_FN = 5
 def ml_cost_optimal_threshold(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    lab = (
-        customer.join(
-            orders, orders.o_custkey == customer.c_custkey, "left"
-        )
-        .groupBy(
-            customer.c_custkey.alias("k"),
-            (F.col("c_acctbal").cast("decimal(15,2)") * 100)
-            .cast("long")
-            .alias("v"),
-        )
-        .agg(
-            F.when(
-                F.count(F.when(F.year("o_orderdate") == 1996, 1)) > 0, 1
-            )
-            .otherwise(0)
-            .alias("y")
-        )
+    lab = buyers_1996(
+        spark,
+        sf_dir,
+        (F.col("c_acctbal").cast("decimal(15,2)") * 100).cast("long").alias("v"),
     )
     hist = lab.groupBy("v").agg(
         F.sum("y").cast("long").alias("p_v"),

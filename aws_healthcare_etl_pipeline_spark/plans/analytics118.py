@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------------ apportionment
 
@@ -195,19 +195,6 @@ _CP_MULT = 7
 _CP_WMOD = 1000
 
 
-def _cp_hash_sql(expr: str) -> str:
-    """16-bit md5 nibble ladder (the repo's portable hash idiom)."""
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
-
-
 @query(
     "graph_dag_critical_path",
     oracle=f"""
@@ -216,7 +203,7 @@ def _cp_hash_sql(expr: str) -> str:
                    ROW_NUMBER() OVER (
                        PARTITION BY s_suppkey % {_CP_LAYERS}
                        ORDER BY s_suppkey) - 1 AS i,
-                   ({_cp_hash_sql(
+                   ({sql_hex4(
                        "'cp:' || CAST(s_suppkey AS VARCHAR)"
                    )}) % {_CP_WMOD} AS w,
                    s_suppkey
@@ -292,20 +279,7 @@ def graph_dag_critical_path(
         .withColumn(
             "w",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("cp:"),
-                                F.col("s_suppkey").cast("string"),
-                            )
-                        ),
-                        1,
-                        4,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                hex4(F.concat(F.lit("cp:"), F.col("s_suppkey").cast("string")))
                 % _CP_WMOD
             ),
         )

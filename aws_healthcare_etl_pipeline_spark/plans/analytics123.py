@@ -31,23 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------------ stable matching
 
 _GS_ROUNDS = 16
-
-
-def _hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
 
 
 def _gs_oracle() -> str:
@@ -92,14 +80,14 @@ def _gs_oracle() -> str:
             SELECT n_nationkey AS k FROM nation
         ), pm AS MATERIALIZED (
             SELECT a.k AS m, b.k AS w,
-                   ({_hex4(
+                   ({sql_hex4(
                        "'gs-m:' || CAST(a.k AS VARCHAR) || ':'"
                        " || CAST(b.k AS VARCHAR)"
                    )}) AS r
             FROM ids a, ids b
         ), pw AS MATERIALIZED (
             SELECT a.k AS w, b.k AS m,
-                   ({_hex4(
+                   ({sql_hex4(
                        "'gs-w:' || CAST(a.k AS VARCHAR) || ':'"
                        " || CAST(b.k AS VARCHAR)"
                    )}) AS r
@@ -168,22 +156,14 @@ def match_stable_assignment(
     b = ids.select(F.col("k").alias("w"))
 
     def hx(prefix: str) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(prefix),
-                        F.col("m").cast("string"),
-                        F.lit(":"),
-                        F.col("w").cast("string"),
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
+        return hex4(
+            F.concat(
+                F.lit(prefix),
+                F.col("m").cast("string"),
+                F.lit(":"),
+                F.col("w").cast("string"),
+            )
+        )
 
     # Both 625-row preference matrices are computed IN SPARK (one
     # tiny job) so the md5 nibble-ladder matches the oracle
@@ -204,24 +184,14 @@ def match_stable_assignment(
         .select(
             "w",
             "m",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("gs-w:"),
-                            F.col("w").cast("string"),
-                            F.lit(":"),
-                            F.col("m").cast("string"),
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("r"),
+            hex4(
+                F.concat(
+                    F.lit("gs-w:"),
+                    F.col("w").cast("string"),
+                    F.lit(":"),
+                    F.col("m").cast("string"),
+                )
+            ).alias("r"),
         )
         .collect()
     )

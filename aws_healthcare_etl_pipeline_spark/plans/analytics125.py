@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------------ FK inference
 
@@ -164,18 +164,6 @@ _CEM_EFFECT_CENTS = 777
 _CEM_STRATA = 10
 
 
-def _cem_hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
-
-
 @query(
     "causal_coarsened_exact_matching",
     oracle=f"""
@@ -189,10 +177,10 @@ def _cem_hex4(expr: str) -> str:
             SELECT (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                     AS BIGINT) - lo) * {_CEM_STRATA}
                        // (hi - lo + 1) AS d,
-                   ({_cem_hex4(
+                   ({sql_hex4(
                        "'cem:' || CAST(c_custkey AS VARCHAR)"
                    )}) % 100 AS u_t,
-                   ({_cem_hex4(
+                   ({sql_hex4(
                        "'cemy:' || CAST(c_custkey AS VARCHAR)"
                    )}) % 1000 AS noise
             FROM customer, ext
@@ -274,21 +262,7 @@ def causal_coarsened_exact_matching(
     ext = customer.agg(
         F.min(bal).alias("lo"), F.max(bal).alias("hi")
     )
-    h = lambda prefix: (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(prefix), F.col("c_custkey").cast("string")
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("long")
-    )
+    h = lambda prefix: hex4(F.concat(F.lit(prefix), F.col("c_custkey").cast("string")))
     units = customer.crossJoin(F.broadcast(ext)).select(
         F.expr(
             f"(CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100 AS BIGINT)"

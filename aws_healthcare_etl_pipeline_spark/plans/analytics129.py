@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------- trace variants + conformance
 
@@ -224,18 +224,6 @@ def process_trace_variants_conformance(
 # ------------------------------------- Lindley queue replay
 
 
-def _ql_hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
-
-
 @query(
     "queue_lindley_wait_replay",
     oracle=f"""
@@ -244,7 +232,7 @@ def _ql_hex4(expr: str) -> str:
                    CAST(date_diff('day', DATE '1995-01-01',
                         o_orderdate) AS BIGINT) * 86400
                    + o_orderkey % 86400 AS a,
-                   30 + ({_ql_hex4(
+                   30 + ({sql_hex4(
                        "'svc:' || CAST(o_orderkey AS VARCHAR)"
                    )}) % 120 AS s,
                    strftime(o_orderdate, '%Y-%m') AS month
@@ -302,20 +290,7 @@ def queue_lindley_wait_replay(
         ).alias("a"),
         (
             30
-            + F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("svc:"),
-                            F.col("o_orderkey").cast("string"),
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long")
+            + hex4(F.concat(F.lit("svc:"), F.col("o_orderkey").cast("string")))
             % 120
         ).alias("s"),
         F.date_format("o_orderdate", "yyyy-MM").alias("month"),

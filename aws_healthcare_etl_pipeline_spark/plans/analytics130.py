@@ -29,23 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------------ TSP NN + 2-opt
 
 _TSP_N = 25  # cities = nations (constant dimension)
-
-
-def _hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
 
 
 def _tsp_oracle() -> str:
@@ -73,9 +61,9 @@ def _tsp_oracle() -> str:
     return f"""
         WITH coords AS MATERIALIZED (
             SELECT n_nationkey AS k,
-                   ({_hex4("'tspx:' || CAST(n_nationkey AS VARCHAR)")})
+                   ({sql_hex4("'tspx:' || CAST(n_nationkey AS VARCHAR)")})
                        % 1000 AS x,
-                   ({_hex4("'tspy:' || CAST(n_nationkey AS VARCHAR)")})
+                   ({sql_hex4("'tspy:' || CAST(n_nationkey AS VARCHAR)")})
                        % 1000 AS y
             FROM nation
         ), t0 AS MATERIALIZED (
@@ -209,7 +197,7 @@ def routing_tsp_nn_2opt(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH cur AS MATERIALIZED (
             SELECT n_nationkey AS k,
-                   100 + ({_hex4(
+                   100 + ({sql_hex4(
                        "'fxv:' || CAST(n_nationkey AS VARCHAR)"
                    )}) % 900 AS v
             FROM nation
@@ -262,20 +250,7 @@ def finance_fx_triangulation_audit(
         F.col("n_nationkey").alias("k"),
         (
             100
-            + F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("fxv:"),
-                            F.col("n_nationkey").cast("string"),
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long")
+            + hex4(F.concat(F.lit("fxv:"), F.col("n_nationkey").cast("string")))
             % 900
         ).alias("v"),
     )

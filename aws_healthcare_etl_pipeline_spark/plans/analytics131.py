@@ -25,28 +25,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 _EL_CANDS = 5
 _EL_ROUNDS = 4  # eliminate down to a winner
 
 
-def _hex4(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
-
-
 _BALLOTS_SQL = f"""ballots AS MATERIALIZED (
             SELECT c_custkey AS voter, cand.c AS cand,
                    ROW_NUMBER() OVER (PARTITION BY c_custkey
-                       ORDER BY ({_hex4(
+                       ORDER BY ({sql_hex4(
                            "'vote:' || CAST(c_custkey AS VARCHAR)"
                            " || ':' || CAST(cand.c AS VARCHAR)"
                        )}), cand.c) AS rnk
@@ -129,22 +117,14 @@ def election_irv_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "h",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("vote:"),
-                            F.col("voter").cast("string"),
-                            F.lit(":"),
-                            F.col("cand").cast("string"),
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            hex4(
+                F.concat(
+                    F.lit("vote:"),
+                    F.col("voter").cast("string"),
+                    F.lit(":"),
+                    F.col("cand").cast("string"),
+                )
+            ),
         )
         .withColumn("rnk", F.row_number().over(wb))
         .select("voter", "cand", "rnk")
@@ -256,22 +236,14 @@ def election_voting_rules_compared(
         customer.select(F.col("c_custkey").alias("voter"), cands)
         .withColumn(
             "h",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("vote:"),
-                            F.col("voter").cast("string"),
-                            F.lit(":"),
-                            F.col("cand").cast("string"),
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("long"),
+            hex4(
+                F.concat(
+                    F.lit("vote:"),
+                    F.col("voter").cast("string"),
+                    F.lit(":"),
+                    F.col("cand").cast("string"),
+                )
+            ),
         )
         .withColumn("rnk", F.row_number().over(wb))
         .select("voter", "cand", "rnk")

@@ -24,27 +24,14 @@ introspection surface a production lakehouse needs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _RP_BUCKETS = 16  # target partition count for the bake-off
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 @query(
@@ -73,7 +60,7 @@ def _hex8_spark(col: Column) -> Column:
             SELECT h.v, h.cnt,
                    (SELECT COUNT(*) FROM cuts WHERE h.v > cuts.cut)
                        AS range_b,
-                   {_hex8_sql("concat('rq:', CAST(h.v AS VARCHAR))")}
+                   {sql_hex8("concat('rq:', CAST(h.v AS VARCHAR))")}
                        % {_RP_BUCKETS} AS hashkey_b
             FROM hist h
         ), range_loads AS (
@@ -81,7 +68,7 @@ def _hex8_spark(col: Column) -> Column:
         ), hashkey_loads AS (
             SELECT hashkey_b AS b, SUM(cnt) AS load FROM vmap GROUP BY 1
         ), hashrow_loads AS (
-            SELECT {_hex8_sql(
+            SELECT {sql_hex8(
                 "concat('rr:', CAST(l_orderkey AS VARCHAR), ':', "
                 "CAST(l_linenumber AS VARCHAR))"
             )} % {_RP_BUCKETS} AS b,
@@ -162,9 +149,7 @@ def layout_range_partition_balance(
             .cast("long")
             .alias("range_b"),
             (
-                _hex8_spark(
-                    F.concat(F.lit("rq:"), F.col("v").cast("string"))
-                )
+                hex8(F.concat(F.lit("rq:"), F.col("v").cast("string")))
                 % _RP_BUCKETS
             ).alias("hashkey_b"),
         )
@@ -177,7 +162,7 @@ def layout_range_partition_balance(
     )
     hashrow_loads = li.groupBy(
         (
-            _hex8_spark(
+            hex8(
                 F.concat(
                     F.lit("rr:"),
                     F.col("l_orderkey").cast("string"),

@@ -31,27 +31,14 @@ deterministic-geometry idiom); squared distances stay < 2^42.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _GRID = 1 << 20  # 2^20 x 2^20 integer lattice
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 def _pow2_width_case(var: str) -> str:
@@ -67,9 +54,9 @@ def _pow2_width_case(var: str) -> str:
     oracle=f"""
         WITH pts AS (
             SELECT c_nationkey AS nk, c_custkey AS id,
-                   {_hex8_sql("concat('cpx:', CAST(c_custkey AS VARCHAR))")}
+                   {sql_hex8("concat('cpx:', CAST(c_custkey AS VARCHAR))")}
                        % {_GRID} AS x,
-                   {_hex8_sql("concat('cpy:', CAST(c_custkey AS VARCHAR))")}
+                   {sql_hex8("concat('cpy:', CAST(c_custkey AS VARCHAR))")}
                        % {_GRID} AS y
             FROM customer
         ), pairs AS MATERIALIZED (
@@ -114,15 +101,11 @@ def geo_closest_pair_pernation(
         F.col("c_nationkey").alias("nk"),
         F.col("c_custkey").alias("id"),
         (
-            _hex8_spark(
-                F.concat(F.lit("cpx:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("cpx:"), F.col("c_custkey").cast("string")))
             % _GRID
         ).alias("x"),
         (
-            _hex8_spark(
-                F.concat(F.lit("cpy:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("cpy:"), F.col("c_custkey").cast("string")))
             % _GRID
         ).alias("y"),
     ).localCheckpoint(eager=False)  # md5 projection feeds 3 consumers

@@ -25,19 +25,10 @@ from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, sql_hex8
 
 _HLL_M = 64  # registers
 _HLL_WBITS = 26  # 32-bit hash minus 6 bucket bits
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
 
 
 def _rho_case(var: str) -> str:
@@ -57,7 +48,7 @@ def _rho_case(var: str) -> str:
     "approx_hll_register_audit",
     oracle=f"""
         WITH hashed AS (
-            SELECT {_hex8_sql("concat('hll:', CAST(o_custkey AS VARCHAR))")}
+            SELECT {sql_hex8("concat('hll:', CAST(o_custkey AS VARCHAR))")}
                        AS h,
                    o_custkey AS ck
             FROM orders

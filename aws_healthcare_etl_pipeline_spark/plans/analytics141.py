@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, sql_hex8
 
 # (rule id, portable SQL condition that SHOULD hold)
 _RULES: list[tuple[str, str]] = [
@@ -120,22 +120,13 @@ def dq_constraint_mining_audit(
 _MOM_GROUPS = 32
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
 @query(
     "stats_median_of_means",
     oracle=f"""
         WITH tagged AS (
             SELECT CAST(CAST(o_totalprice AS DECIMAL(15,2)) * 100
                         AS BIGINT) AS v,
-                   {_hex8_sql(
+                   {sql_hex8(
                        "concat('mom:', CAST(o_orderkey AS VARCHAR))")}
                        % {_MOM_GROUPS} AS g
             FROM orders

@@ -18,11 +18,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _NULL_PANEL = 500
 
@@ -141,29 +141,16 @@ _IT_GRID = 1024  # lattice for event locations
 _IT_SPEED = 1  # threshold: 1 lattice unit per second
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 @query(
     "sec_impossible_travel_audit",
     oracle=f"""
         WITH pts AS (
             SELECT user_id, event_type, epoch_us(ts) AS ts_us,
                    event_id,
-                   {_hex8_sql(
+                   {sql_hex8(
                        "concat('itx:', CAST(event_id AS VARCHAR))")}
                        % {_IT_GRID} AS x,
-                   {_hex8_sql(
+                   {sql_hex8(
                        "concat('ity:', CAST(event_id AS VARCHAR))")}
                        % {_IT_GRID} AS y
             FROM events
@@ -215,15 +202,11 @@ def sec_impossible_travel_audit(
         F.unix_micros("ts").alias("ts_us"),
         "event_id",
         (
-            _hex8_spark(
-                F.concat(F.lit("itx:"), F.col("event_id").cast("string"))
-            )
+            hex8(F.concat(F.lit("itx:"), F.col("event_id").cast("string")))
             % _IT_GRID
         ).alias("x"),
         (
-            _hex8_spark(
-                F.concat(F.lit("ity:"), F.col("event_id").cast("string"))
-            )
+            hex8(F.concat(F.lit("ity:"), F.col("event_id").cast("string")))
             % _IT_GRID
         ).alias("y"),
     )

@@ -19,27 +19,14 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _SYS_TARGET = 1000
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 @query(
@@ -68,7 +55,7 @@ def _hex8_spark(col: Column) -> Column:
             SELECT CAST(COUNT(*) AS BIGINT) AS n_hash,
                    CAST(SUM(b.v) // COUNT(*) AS BIGINT) AS mean_hash
             FROM base b CROSS JOIN tot t
-            WHERE {_hex8_sql("concat('sysh:', CAST(b.k AS VARCHAR))")}
+            WHERE {sql_hex8("concat('sysh:', CAST(b.k AS VARCHAR))")}
                   % t.step = 0
         )
         SELECT t.n,
@@ -132,9 +119,7 @@ def sampling_systematic_vs_hash(
         base.crossJoin(F.broadcast(tot))
         .where(
             (
-                _hex8_spark(
-                    F.concat(F.lit("sysh:"), F.col("k").cast("string"))
-                )
+                hex8(F.concat(F.lit("sysh:"), F.col("k").cast("string")))
                 % F.col("step")
             )
             == 0

@@ -26,19 +26,7 @@ from pyspark.sql import functions as F
 
 from ..operators.keyscan import keyed_pandas_scan
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hexstr8_sql(var: str) -> str:
-    """First 8 hex chars of an EXISTING hex string -> BIGINT."""
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = (
-            f"(strpos('0123456789abcdef', substr({var}, {i + 1}, 1))"
-            f" - 1)"
-        )
-        out = f"({out} * 16 + {nib})"
-    return out
+from .registry import query, sql_hexstr8
 
 
 @query(
@@ -69,7 +57,7 @@ def _hexstr8_sql(var: str) -> str:
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
                CAST(COUNT(DISTINCT h) AS BIGINT) AS distinct_heads,
-               CAST(SUM({_hexstr8_sql("h")}) AS BIGINT)
+               CAST(SUM({sql_hexstr8("h")}) AS BIGINT)
                    AS head_checksum
         FROM heads
     """,

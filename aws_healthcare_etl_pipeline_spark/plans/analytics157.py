@@ -27,18 +27,9 @@ from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, sql_hex8
 
 _KEM_CANDS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "MACHINERY")
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
 
 
 def _hex8_spark_sql(expr: str) -> str:
@@ -48,9 +39,9 @@ def _hex8_spark_sql(expr: str) -> str:
 
 
 def _kem_pref_sql(a: str, b: str, key: str, strty: str) -> str:
-    hex8 = _hex8_sql if strty == "VARCHAR" else _hex8_spark_sql
-    ha = hex8(f"concat('km:', CAST({key} AS {strty}), ':{a}')")
-    hb = hex8(f"concat('km:', CAST({key} AS {strty}), ':{b}')")
+    draw = sql_hex8 if strty == "VARCHAR" else _hex8_spark_sql
+    ha = draw(f"concat('km:', CAST({key} AS {strty}), ':{a}')")
+    hb = draw(f"concat('km:', CAST({key} AS {strty}), ':{b}')")
     return f"SUM(CASE WHEN {ha} < {hb} THEN 1 ELSE 0 END)"
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, split_top_level
 
 _POC_PREDS = {
     "A": "l_quantity >= 25",
@@ -100,7 +100,7 @@ def optimizer_predicate_order_cost(
     cube = li.selectExpr("*").agg(
         *[
             F.expr(p)
-            for p in _split_top_level(_poc_cube_cols())
+            for p in split_top_level(_poc_cube_cols())
         ]
     )
     scored = cube.selectExpr(
@@ -120,24 +120,6 @@ def optimizer_predicate_order_cost(
         )
         .orderBy("cost_rank")
     )
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas at paren depth 0 (CASE/DECIMAL commas safe)."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
 
 
 @query(

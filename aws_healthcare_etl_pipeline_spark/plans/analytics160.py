@@ -21,16 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
+from .registry import query, sql_hex8
 
 
 @query(
@@ -39,7 +30,7 @@ def _hex8_sql(expr: str) -> str:
         WITH masked AS (
             SELECT c_name AS orig,
                    concat(regexp_replace(c_name, '[0-9]+', '', 'g'),
-                          lpad(CAST({_hex8_sql(
+                          lpad(CAST({sql_hex8(
                               "concat('fpe:', c_name)")} % 1000000000
                                AS VARCHAR), 9, '0')) AS m
             FROM customer

@@ -22,18 +22,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, sql_hex8
 
 _TS_KEEP = 4  # keep edges with hash % 4 == 0 -> p = 1/4
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
 
 
 def _tri_sql(edges_cte: str) -> str:
@@ -64,7 +55,7 @@ def _tri_sql(edges_cte: str) -> str:
             WHERE da.d <= 8 AND db.d <= 8
         ), sampled AS MATERIALIZED (
             SELECT u, v FROM pairs
-            WHERE {_hex8_sql(
+            WHERE {sql_hex8(
                 "concat('ts:', CAST(u AS VARCHAR), ':',"
                 " CAST(v AS VARCHAR))")} % {_TS_KEEP} = 0
         ), exact_t AS ({_tri_sql("pairs")}),

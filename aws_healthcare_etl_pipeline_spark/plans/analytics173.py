@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, split_top_level
 
 _CM_MEASURES = {
     "qty": "CAST(l_quantity AS BIGINT)",
@@ -103,7 +103,7 @@ def dq_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments = vals.agg(
         *[
             F.expr(p)
-            for p in _split_top_level(_cm_sums("DECIMAL(38,0)"))
+            for p in split_top_level(_cm_sums("DECIMAL(38,0)"))
         ]
     )
     rows = _cm_pair_rows(
@@ -115,26 +115,9 @@ def dq_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         body = lane.replace("SELECT ", "", 1).replace(
             " FROM moments", ""
         )
-        cur = moments.selectExpr(*_split_top_level(body))
+        cur = moments.selectExpr(*split_top_level(body))
         out = cur if out is None else out.unionAll(cur)
     return out.orderBy("pair")
-
-
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
 
 
 @query(

@@ -20,20 +20,11 @@ from pyspark.sql import functions as F
 
 from ..operators.money import allocate_largest_remainder
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _RSC_BUDGET = 1_000_000  # release token budget
 _RSC_MIN_T, _RSC_MAX_T = 20, 200  # quality band
 _RSC_MAXLEN = 12  # mean token length cap
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
 
 
 @query(
@@ -84,7 +75,7 @@ def _hex8_sql(expr: str) -> str:
             FROM alloc0
         ), digests AS (
             SELECT source,
-                   CAST(SUM({_hex8_sql("concat('m:', fp)")})
+                   CAST(SUM({sql_hex8("concat('m:', fp)")})
                        AS BIGINT) AS manifest_checksum
             FROM kept GROUP BY source
         )
@@ -173,15 +164,7 @@ def pipeline_release_scorecard_capstone(
         )
         .groupBy("source")
         .agg(
-            F.sum(
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("m:"), F.col("fp"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            )
+            F.sum(hex8(F.concat(F.lit("m:"), F.col("fp"))))
             .cast("long")
             .alias("manifest_checksum")
         )

@@ -17,11 +17,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _BM_NS = (6, 12, 24)
 
@@ -115,24 +115,11 @@ def risk_block_maxima_return_level(
 _HT_BITS = (16, 24, 32)
 
 
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
 @query(
     "hash_truncation_collision_audit",
     oracle=f"""
         WITH hashed AS MATERIALIZED (
-            SELECT {_hex8_sql(
+            SELECT {sql_hex8(
                 "concat('htc:', CAST(o_orderkey AS VARCHAR))")} AS h
             FROM orders
         ), tot AS (
@@ -167,9 +154,7 @@ def hash_truncation_collision_audit(
 ) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     hashed = orders.select(
-        _hex8_spark(
-            F.concat(F.lit("htc:"), F.col("o_orderkey").cast("string"))
-        ).alias("h")
+        hex8(F.concat(F.lit("htc:"), F.col("o_orderkey").cast("string"))).alias("h")
     ).localCheckpoint(eager=False)  # three truncation lanes
     tot = hashed.agg(F.count(F.lit(1)).cast("long").alias("n"))
     lanes = []

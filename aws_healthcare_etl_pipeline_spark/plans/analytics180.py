@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, split_top_level
 
 _MAH_FEATS = {
     "f1": "CAST(CAST(o_totalprice AS DECIMAL(15,2)) * 100 AS BIGINT)",
@@ -106,7 +106,7 @@ def anomaly_mahalanobis_diag_topk(
     moments = vals.agg(
         *[
             F.expr(p)
-            for p in _mah_split(_mah_moments(_MAH_FEATS, "DECIMAL(38,0)"))
+            for p in split_top_level(_mah_moments(_MAH_FEATS, "DECIMAL(38,0)"))
         ]
     )
     scored = vals.crossJoin(F.broadcast(moments)).selectExpr(
@@ -123,20 +123,3 @@ def anomaly_mahalanobis_diag_topk(
         )
         .orderBy("rnk")
     )
-
-
-def _mah_split(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out

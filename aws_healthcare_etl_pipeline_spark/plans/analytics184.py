@@ -33,29 +33,12 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .llm_dedup import SQL_CORPUS_SHINGLES, perturbed_corpus
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ----------------------------------------------- count-min sketch
 
 CM_W = 256  # counters per row
 CM_D = 3  # hash rows
-
-
-def _hex4_duck(expr: str) -> str:
-    """First 4 md5 hex nibbles as an integer, DuckDB grammar."""
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return (
-        f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16"
-        f" + {nibs[3]})"
-    )
-
-
-def _hex4_spark(col: F.Column) -> F.Column:
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
 
 
 @query(
@@ -68,7 +51,7 @@ def _hex4_spark(col: F.Column) -> F.Column:
             FROM ev GROUP BY k
         ), rows_h AS (
             SELECT e.k, j.j,
-                   ({_hex4_duck(
+                   ({sql_hex4(
                        "'cm' || CAST(j.j AS VARCHAR) || ':'"
                        " || CAST(e.k AS VARCHAR)"
                    )}) % {CM_W} AS bucket
@@ -78,7 +61,7 @@ def _hex4_spark(col: F.Column) -> F.Column:
             FROM rows_h GROUP BY j, bucket
         ), key_h AS (
             SELECT t.k, t.true_n, j.j,
-                   ({_hex4_duck(
+                   ({sql_hex4(
                        "'cm' || CAST(j.j AS VARCHAR) || ':'"
                        " || CAST(t.k AS VARCHAR)"
                    )}) % {CM_W} AS bucket
@@ -127,7 +110,7 @@ def approx_countmin_sketch_audit(
 
     def bucket(jcol: F.Column, kcol: F.Column) -> F.Column:
         return (
-            _hex4_spark(
+            hex4(
                 F.concat(
                     F.lit("cm"),
                     jcol.cast("string"),
@@ -208,7 +191,7 @@ BF_K = 3  # hash functions
         ), hs AS (SELECT unnest(range(0, {BF_K})) AS j),
         bits AS (
             SELECT DISTINCT
-                   ({_hex4_duck(
+                   ({sql_hex4(
                        "'bl' || CAST(hs.j AS VARCHAR) || ':'"
                        " || CAST(m.k AS VARCHAR)"
                    )}) % {BF_M} AS pos
@@ -219,7 +202,7 @@ BF_K = 3  # hash functions
                        AS hits
             FROM probes p CROSS JOIN hs
             LEFT JOIN bits b
-              ON b.pos = ({_hex4_duck(
+              ON b.pos = ({sql_hex4(
                   "'bl' || CAST(hs.j AS VARCHAR) || ':'"
                   " || CAST(p.k AS VARCHAR)"
               )}) % {BF_M}
@@ -267,7 +250,7 @@ def sketch_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos(jcol: F.Column, kcol: F.Column) -> F.Column:
         return (
-            _hex4_spark(
+            hex4(
                 F.concat(
                     F.lit("bl"),
                     jcol.cast("string"),

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dec, query
+from .registry import dec, hex4, query, sql_hex4
 
 
 def _nib5_parity_sql(expr: str) -> str:
@@ -26,21 +26,6 @@ def _nib5_parity_sql(expr: str) -> str:
     return (f"((strpos('0123456789abcdef', substr(md5({expr}), 5, 1)) - 1)"
             " % 2)"
     )
-
-
-def _hex4_sql(expr: str) -> str:
-    """DuckDB: integer value of the first 4 hex nibbles of md5(expr)."""
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
-
-
-def _hex4(col: F.Column) -> F.Column:
-    """Spark: same 16-bit md5 draw as ``_hex4_sql``."""
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
 
 
 # ------------------------------- bloom-prefiltered join equivalence
@@ -56,7 +41,7 @@ _BF_K = 3
         WITH dim AS (
             SELECT s_suppkey FROM supplier WHERE s_acctbal >= 9000.00
         ), dimpos AS (
-            SELECT ({_hex4_sql(
+            SELECT ({sql_hex4(
                 "'bf' || CAST(i AS VARCHAR) || ':' || CAST(s_suppkey AS VARCHAR)"
             )}) % {_BF_BITS} AS pos
             FROM dim CROSS JOIN (SELECT UNNEST(range(3)) AS i)
@@ -70,7 +55,7 @@ _BF_K = 3
             FROM lineitem GROUP BY 1
         ), probes AS (
             SELECT k, cnt,
-                   ({_hex4_sql(
+                   ({sql_hex4(
                 "'bf' || CAST(i AS VARCHAR) || ':' || CAST(k AS VARCHAR)"
             )}) % {_BF_BITS} AS pos
             FROM keys CROSS JOIN (SELECT UNNEST(range(3)) AS i)
@@ -136,7 +121,7 @@ def join_bloom_prefilter_equivalence(
 
     def pos_col(key: F.Column) -> F.Column:
         return (
-            _hex4(
+            hex4(
                 F.concat(
                     F.lit("bf"),
                     F.col("i").cast("string"),
@@ -237,7 +222,7 @@ _CS_PANEL = 20
     oracle=f"""
         WITH cells AS (
             SELECT r,
-                   ({_hex4_sql(
+                   ({sql_hex4(
                 "'cs' || CAST(r AS VARCHAR) || ':' || CAST(l_partkey AS VARCHAR)"
             )}) % {_CS_W} AS bucket,
                    CAST(SUM(CASE WHEN ({_nib5_parity_sql(
@@ -257,7 +242,7 @@ _CS_PANEL = 20
                 "'cs' || CAST(c.r AS VARCHAR) || ':' || CAST(p.k AS VARCHAR)"
             )}) = 0 THEN c.val ELSE -c.val END AS est
             FROM panel p JOIN cells c
-              ON c.bucket = ({_hex4_sql(
+              ON c.bucket = ({sql_hex4(
                 "'cs' || CAST(c.r AS VARCHAR) || ':' || CAST(p.k AS VARCHAR)"
             )}) % {_CS_W}
         ), med AS (
@@ -452,7 +437,7 @@ def anomaly_hbos_bincount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH masked AS (
             SELECT event_type, user_id, ts, event_id,
-                   CASE WHEN ({_hex4_sql("'nn:' || CAST(event_id AS VARCHAR)")})
+                   CASE WHEN ({sql_hex4("'nn:' || CAST(event_id AS VARCHAR)")})
                              % 5 = 0
                         THEN NULL
                         ELSE CAST(CAST(value AS DECIMAL(10,2)) * 100 AS BIGINT)
@@ -501,7 +486,7 @@ def window_ignore_nulls_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         F.when(
-            _hex4(F.concat(F.lit("nn:"), F.col("event_id").cast("string")))
+            hex4(F.concat(F.lit("nn:"), F.col("event_id").cast("string")))
             % 5
             == 0,
             F.lit(None).cast("long"),
@@ -984,9 +969,9 @@ _TC_BINS = 64
     oracle=f"""
         WITH balls AS (
             SELECT event_id,
-                   ({_hex4_sql("'tc1:' || CAST(event_id AS VARCHAR)")})
+                   ({sql_hex4("'tc1:' || CAST(event_id AS VARCHAR)")})
                        % {_TC_BINS} AS h1,
-                   ({_hex4_sql("'tc2:' || CAST(event_id AS VARCHAR)")})
+                   ({sql_hex4("'tc2:' || CAST(event_id AS VARCHAR)")})
                        % {_TC_BINS} AS h2
             FROM events
         ), load1 AS (
@@ -1040,11 +1025,11 @@ def dist_two_choice_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     balls = events.select(
         "event_id",
         (
-            _hex4(F.concat(F.lit("tc1:"), F.col("event_id").cast("string")))
+            hex4(F.concat(F.lit("tc1:"), F.col("event_id").cast("string")))
             % _TC_BINS
         ).alias("h1"),
         (
-            _hex4(F.concat(F.lit("tc2:"), F.col("event_id").cast("string")))
+            hex4(F.concat(F.lit("tc2:"), F.col("event_id").cast("string")))
             % _TC_BINS
         ).alias("h2"),
     )
@@ -1119,7 +1104,7 @@ def _pak_case(k: int) -> str:
                        PARTITION BY l_partkey
                        ORDER BY l_orderkey, l_linenumber, l_extendedprice,
                                 l_quantity, l_suppkey) AS attempt,
-                   CASE WHEN ({_hex4_sql(
+                   CASE WHEN ({sql_hex4(
                 "'pk:' || CAST(l_orderkey AS VARCHAR) || ':' || "
                 "CAST(l_linenumber AS VARCHAR) || ':' || "
                 "CAST(l_partkey AS VARCHAR)"
@@ -1158,7 +1143,7 @@ def eval_pass_at_k_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("task"),
         F.row_number().over(w).alias("attempt"),
         F.when(
-            _hex4(
+            hex4(
                 F.concat(
                     F.lit("pk:"),
                     F.col("l_orderkey").cast("string"),
@@ -1332,16 +1317,16 @@ _MISS_COLS = ("ship_ref", "contact", "promo_code", "channel")
 
 
 def _hex4_spark_sql(expr: str) -> str:
-    """Spark SQL: same 16-bit md5 draw as ``_hex4_sql`` (conv-based)."""
+    """Spark SQL: same 16-bit md5 draw as ``sql_hex4`` (conv-based)."""
     return f"CAST(conv(substring(md5({expr}), 1, 4), 16, 10) AS BIGINT)"
 
 
 def _miss_sql(okey: str, spark_dialect: bool = False) -> dict[str, str]:
     """Planted co-missingness masks: contact co-misses with ship_ref."""
-    hex4 = _hex4_spark_sql if spark_dialect else _hex4_sql
+    draw = _hex4_spark_sql if spark_dialect else sql_hex4
     key_str = f"CAST({okey} AS {'STRING' if spark_dialect else 'VARCHAR'})"
     h0, h1, h2, h3, h4 = (
-        hex4(f"'m{i}:' || " + key_str) for i in range(5)
+        draw(f"'m{i}:' || " + key_str) for i in range(5)
     )
     base = f"({h0}) % 100"
     return {

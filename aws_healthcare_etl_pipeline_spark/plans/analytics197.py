@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 from .analytics86 import _HOPS, _bfs_cte_chain
-from .registry import dec, query
+from .registry import SQL_HEAVY_TRADE, dec, heavy_trade, query
 
 # ------------------------------------------------ LPT list scheduling
 
@@ -535,27 +535,7 @@ def alloc_talmud_bankruptcy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_harmonic_centrality",
     oracle=f"""
-        WITH trade AS (
-            SELECT least(cn.n_nationkey, sn.n_nationkey) AS u,
-                   greatest(cn.n_nationkey, sn.n_nationkey) AS v,
-                   CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(15,2)) * 100)
-                        AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON o.o_orderkey = l.l_orderkey
-            JOIN customer c ON c.c_custkey = o.o_custkey
-            JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-            JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-            WHERE cn.n_nationkey <> sn.n_nationkey
-            GROUP BY 1, 2
-        ), st AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
-                   CAST(SUM(w) AS BIGINT) AS tot
-            FROM trade
-        ), heavy AS (
-            SELECT u, v FROM trade CROSS JOIN st
-            WHERE w * cnt * 2 >= 3 * tot
-        ), edges AS MATERIALIZED (
+        WITH {SQL_HEAVY_TRADE}, edges AS MATERIALIZED (
             SELECT u, v FROM heavy
             UNION ALL SELECT v AS u, u AS v FROM heavy
         ), nodes AS MATERIALIZED (
@@ -583,33 +563,7 @@ def alloc_talmud_bankruptcy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "BFS runs on <= 625 bounded rows with localCheckpoint per round.",
 )
 def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    line = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    cn = F.col("c_nationkey")
-    sn = F.col("s_nationkey")
-    trade = (
-        line.join(orders, orders.o_orderkey == line.l_orderkey)
-        .join(F.broadcast(customer), customer.c_custkey == orders.o_custkey)
-        .join(F.broadcast(supplier), supplier.s_suppkey == line.l_suppkey)
-        .where(cn != sn)
-        .groupBy(F.least(cn, sn).alias("u"), F.greatest(cn, sn).alias("v"))
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(15,2)") * 100)
-            .cast("long")
-            .alias("w")
-        )
-    )
-    st = trade.agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("w").cast("long").alias("tot"),
-    )
-    heavy = (
-        trade.crossJoin(F.broadcast(st))
-        .where(F.col("w") * F.col("cnt") * 2 >= 3 * F.col("tot"))
-        .select("u", "v")
-    )
+    heavy = heavy_trade(spark, sf_dir)
     edges = heavy.unionAll(
         heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dec, query
+from .registry import SQL_NATION_TRADE, dec, heavy_trade, query
 
 # ------------------------------------------ Jonckheere-Terpstra test
 
@@ -197,24 +197,7 @@ def _bridge_bfs_sql() -> str:
 @query(
     "graph_bridge_edges",
     oracle=f"""
-        WITH trade AS (
-            SELECT least(cn.n_nationkey, sn.n_nationkey) AS u,
-                   greatest(cn.n_nationkey, sn.n_nationkey) AS v,
-                   CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(15,2)) * 100)
-                        AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON o.o_orderkey = l.l_orderkey
-            JOIN customer c ON c.c_custkey = o.o_custkey
-            JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-            JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-            WHERE cn.n_nationkey <> sn.n_nationkey
-            GROUP BY 1, 2
-        ), st AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
-                   CAST(SUM(w) AS BIGINT) AS tot
-            FROM trade
-        ), heavy AS MATERIALIZED (
+        WITH {SQL_NATION_TRADE}, heavy AS MATERIALIZED (
             SELECT u, v, u * 100 + v AS eid
             FROM trade CROSS JOIN st
             WHERE w * cnt * 2 >= 3 * tot
@@ -252,31 +235,8 @@ def _bridge_bfs_sql() -> str:
     "nodes (<= 40 x 25) with localCheckpoint per round.",
 )
 def graph_bridge_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    line = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    cn = F.col("c_nationkey")
-    sn = F.col("s_nationkey")
-    trade = (
-        line.join(orders, orders.o_orderkey == line.l_orderkey)
-        .join(F.broadcast(customer), customer.c_custkey == orders.o_custkey)
-        .join(F.broadcast(supplier), supplier.s_suppkey == line.l_suppkey)
-        .where(cn != sn)
-        .groupBy(F.least(cn, sn).alias("u"), F.greatest(cn, sn).alias("v"))
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(15,2)") * 100)
-            .cast("long")
-            .alias("w")
-        )
-    )
-    st = trade.agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("w").cast("long").alias("tot"),
-    )
     heavy = (
-        trade.crossJoin(F.broadcast(st))
-        .where(F.col("w") * F.col("cnt") * 2 >= 3 * F.col("tot"))
+        heavy_trade(spark, sf_dir)
         .select("u", "v", (F.col("u") * 100 + F.col("v")).alias("eid"))
         .localCheckpoint(eager=False)
     )

@@ -48,24 +48,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 _D38 = "decimal(38,0)"
-
-
-def _hex4_sql(expr: str) -> str:
-    """DuckDB: integer value of the first 4 hex nibbles of md5(expr)."""
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
-
-
-def _hex4(col: F.Column) -> F.Column:
-    """Spark: same 16-bit md5 draw as ``_hex4_sql``."""
-    return F.conv(F.substring(F.md5(col), 1, 4), 16, 10).cast("long")
 
 
 # ------------------------------------------- Durbin-Watson statistic
@@ -308,9 +293,9 @@ def _shamir_recon_sql(t: tuple[int, int, int]) -> str:
             SELECT c_custkey,
                    ((CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100 AS BIGINT)
                      % {_SH_P}) + {_SH_P}) % {_SH_P} AS s,
-                   {_hex4_sql("'sh1:' || CAST(c_custkey AS VARCHAR)")}
+                   {sql_hex4("'sh1:' || CAST(c_custkey AS VARCHAR)")}
                        % {_SH_P} AS a1,
-                   {_hex4_sql("'sh2:' || CAST(c_custkey AS VARCHAR)")}
+                   {sql_hex4("'sh2:' || CAST(c_custkey AS VARCHAR)")}
                        % {_SH_P} AS a2
             FROM customer
         ), shares AS (
@@ -360,9 +345,9 @@ def privacy_shamir_secret_sharing(spark: SparkSession, sf_dir: str) -> DataFrame
                 .cast("long") % p + p
             ) % p
         ).alias("s"),
-        (_hex4(F.concat(F.lit("sh1:"), F.col("c_custkey").cast("string"))) % p)
+        (hex4(F.concat(F.lit("sh1:"), F.col("c_custkey").cast("string"))) % p)
         .alias("a1"),
-        (_hex4(F.concat(F.lit("sh2:"), F.col("c_custkey").cast("string"))) % p)
+        (hex4(F.concat(F.lit("sh2:"), F.col("c_custkey").cast("string"))) % p)
         .alias("a2"),
     )
     shares = base.select(
@@ -409,7 +394,7 @@ _AIMD_LOSS_MOD = 20  # md5 draw % 20 == 0  ->  5% deterministic loss
     oracle=f"""
         WITH RECURSIVE ship AS (
             SELECT l.l_suppkey AS sk,
-                   CASE WHEN {_hex4_sql(
+                   CASE WHEN {sql_hex4(
                        "'ld:' || CAST(l.l_orderkey AS VARCHAR) || ':' "
                        "|| CAST(l.l_linenumber AS VARCHAR)"
                    )} % {_AIMD_LOSS_MOD} = 0 THEN 1 ELSE 0 END AS loss,
@@ -472,7 +457,7 @@ def ops_aimd_cwnd_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship = lineitem.select(
         F.col("l_suppkey").alias("sk"),
         F.when(
-            _hex4(
+            hex4(
                 F.concat(
                     F.lit("ld:"),
                     F.col("l_orderkey").cast("string"),

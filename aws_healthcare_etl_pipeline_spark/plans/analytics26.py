@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, sql_hex4
 
 # ------------------------------------------------ BFS k-hop reachability
 
@@ -181,20 +181,13 @@ def _geo_w_sql() -> str:
     )
 
 
-def _geo_hex4(expr: str) -> str:
-    """DuckDB: integer value of the first 4 hex nibbles of md5(expr)."""
-    h = f"md5({expr})"
-    nibs = [f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)" for i in range(4)]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
-
-
 @query(
     "geo_grid_radius_join",
     oracle=f"""
         WITH wsel AS {_geo_w_sql()}, pts AS (
             SELECT c_custkey AS id,
-                   ({_geo_hex4("'x:' || CAST(c_custkey AS VARCHAR)")}) % w.w AS x,
-                   ({_geo_hex4("'y:' || CAST(c_custkey AS VARCHAR)")}) % w.w AS y
+                   ({sql_hex4("'x:' || CAST(c_custkey AS VARCHAR)")}) % w.w AS x,
+                   ({sql_hex4("'y:' || CAST(c_custkey AS VARCHAR)")}) % w.w AS y
             FROM customer, wsel w
         ),
         pairs AS (

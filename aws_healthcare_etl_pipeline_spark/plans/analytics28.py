@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------------ phrase search
 
@@ -147,12 +147,6 @@ def _dp_case(h_expr: str) -> str:
     return f"CASE {arms} ELSE {_DP_CLAMP} END"
 
 
-def _hex4_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)" for i in range(4)]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
-
-
 _DP_KEY_SQL = "'dp-r1:' || CAST(n_nationkey AS VARCHAR) || ':' || c_mktsegment"
 
 
@@ -166,7 +160,7 @@ _DP_KEY_SQL = "'dp-r1:' || CAST(n_nationkey AS VARCHAR) || ':' || c_mktsegment"
             GROUP BY n.n_name, n.n_nationkey, c.c_mktsegment
         ), noised AS (
             SELECT n_name, c_mktsegment, true_count,
-                   ({_dp_case(_hex4_sql(_DP_KEY_SQL))}) AS noise
+                   ({_dp_case(sql_hex4(_DP_KEY_SQL))}) AS noise
             FROM counts
         )
         SELECT n_name, c_mktsegment,
@@ -198,22 +192,14 @@ def privacy_dp_geometric_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name", "n_nationkey", "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("true_count"))
     )
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("dp-r1:"),
-                    F.col("n_nationkey").cast("string"),
-                    F.lit(":"),
-                    F.col("c_mktsegment"),
-                )
-            ),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = hex4(
+        F.concat(
+            F.lit("dp-r1:"),
+            F.col("n_nationkey").cast("string"),
+            F.lit(":"),
+            F.col("c_mktsegment"),
+        )
+    )
     noise = F.lit(_DP_CLAMP)
     for k, t in reversed(list(zip(range(-_DP_CLAMP, _DP_CLAMP + 1), _DP_T))):
         noise = F.when(h < t, F.lit(k)).otherwise(noise)

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..operators.cumsum import distributed_running_total
 from ..operators.keyscan import keyed_pandas_scan
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------------ capped running balance
 
@@ -138,19 +138,13 @@ def inventory_capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFr
 _SHARD_BUDGET = 2000  # tokens per shard
 
 
-def _hex4_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)" for i in range(4)]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
-
-
 @query(
     "pipeline_dataset_shard_manifest",
     oracle=f"""
         WITH docs AS (
             SELECT doc_id,
                    CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens,
-                   ({_hex4_sql("'m:' || CAST(doc_id AS VARCHAR)")}) AS fp
+                   ({sql_hex4("'m:' || CAST(doc_id AS VARCHAR)")}) AS fp
             FROM documents
         ), cum AS (
             SELECT doc_id, tokens, fp,
@@ -186,13 +180,7 @@ def pipeline_dataset_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("tokens"),
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("m:"), F.col("doc_id").cast("string"))), 1, 4),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("fp"),
+        hex4(F.concat(F.lit("m:"), F.col("doc_id").cast("string"))).alias("fp"),
     )
     withbucket = docs.withColumn("bucket", F.expr("doc_id div 64"))
     cum = distributed_running_total(

@@ -24,20 +24,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 _MST_ROUNDS = 40  # hard cap only; the loop exits when no cross edge
 # remains. Star-hooking contracts partially, so rounds ~ 2*log2(n);
 # 40 covers nations far beyond any realistic supplier count.
-
-
-def _hex4_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
 
 
 @query(
@@ -50,7 +41,7 @@ def _hex4_sql(expr: str) -> str:
             FROM supplier
         ), edges AS (
             SELECT a.na, a.sk AS ea, b.sk AS eb,
-                   CAST({_hex4_sql(
+                   CAST({sql_hex4(
                        "'e:' || CAST(a.sk AS VARCHAR) || ':' "
                        "|| CAST(b.sk AS VARCHAR)")} AS BIGINT) AS w
             FROM ranked a JOIN ranked b
@@ -136,24 +127,14 @@ def graph_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.na").alias("na"),
             F.col("a.sk").alias("ea"),
             F.col("b.sk").alias("eb"),
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.lit("e"),
-                            F.col("a.sk").cast("string"),
-                            F.col("b.sk").cast("string"),
-                        )
-                    ),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            )
-            .cast("long")
-            .alias("w"),
+            hex4(
+                F.concat_ws(
+                    ":",
+                    F.lit("e"),
+                    F.col("a.sk").cast("string"),
+                    F.col("b.sk").cast("string"),
+                )
+            ).alias("w"),
         )
         .localCheckpoint(eager=True)
     )

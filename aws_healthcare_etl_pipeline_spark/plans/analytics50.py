@@ -20,23 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 _SHARDS = 4  # shards s0..s3; the rebalance adds s4
 _VNODES = 16  # virtual nodes per shard (ring variant)
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col):
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 # ------------------------------------------------ consistent-hash ring
@@ -48,14 +35,14 @@ def _ring_oracle() -> str:
         for v in range(_VNODES):
             seed = "'v:s%d:%d'" % (s, v)
             parts.append(
-                "SELECT 's%d' AS shard, %s AS pos" % (s, _hex8_sql(seed))
+                "SELECT 's%d' AS shard, %s AS pos" % (s, sql_hex8(seed))
             )
     vn_rows = " UNION ALL ".join(parts)
     return f"""
         WITH vn AS ({vn_rows}),
         keys_h AS (
             SELECT c_custkey AS k,
-                   {_hex8_sql("'k:' || CAST(c_custkey AS VARCHAR)")} AS pos
+                   {sql_hex8("'k:' || CAST(c_custkey AS VARCHAR)")} AS pos
             FROM customer
         ), own AS (
             SELECT k.k,
@@ -117,12 +104,10 @@ def dist_consistent_hash_rebalance(
     ]
     vn = spark.createDataFrame(
         vn_rows, schema="shard string, seed string"
-    ).select("shard", _hex8_spark(F.col("seed")).alias("pos"))
+    ).select("shard", hex8(F.col("seed")).alias("pos"))
     keys_h = cust.select(
         F.col("c_custkey").alias("k"),
-        _hex8_spark(
-            F.concat(F.lit("k:"), F.col("c_custkey").cast("string"))
-        ).alias("pos"),
+        hex8(F.concat(F.lit("k:"), F.col("c_custkey").cast("string"))).alias("pos"),
     )
     old = F.col("shard") != f"s{_SHARDS}"
     own = (
@@ -194,7 +179,7 @@ def _hrw_oracle() -> str:
     shard_rows_after = " UNION ALL ".join(
         f"SELECT 's{s}' AS shard" for s in range(_SHARDS + 1)
     )
-    wexpr = _hex8_sql("s.shard || ':' || CAST(k.c_custkey AS VARCHAR)")
+    wexpr = sql_hex8("s.shard || ':' || CAST(k.c_custkey AS VARCHAR)")
     return f"""
         WITH before AS (
             SELECT k.c_custkey AS ck, s.shard,
@@ -252,7 +237,7 @@ def dist_rendezvous_hash_rebalance(
         # greatest() fold over the fixed shard list: struct(weight, shard)
         cands = [
             F.struct(
-                _hex8_spark(
+                hex8(
                     F.concat(
                         F.lit(f"s{s}:"), F.col("ck").cast("string")
                     )

@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from ..operators.clusters import connected_components
 from ..sources.tables import load_table
-from .analytics26 import _GEO_LADDER, _GEO_W_MAX, _geo_hex4, _geo_w_sql
-from .registry import query
+from .analytics26 import _GEO_LADDER, _GEO_W_MAX, _geo_w_sql
+from .registry import query, sql_hex4
 
 # --------------------------------------------- DBSCAN-lite on the grid
 
@@ -43,9 +43,9 @@ _DB_PACK = 1 << 20  # cell-key packing, > max cells per axis
     oracle=f"""
         WITH RECURSIVE wsel AS {_geo_w_sql()}, pts AS (
             SELECT c_custkey AS id,
-                   ({_geo_hex4("'x:' || CAST(c_custkey AS VARCHAR)")})
+                   ({sql_hex4("'x:' || CAST(c_custkey AS VARCHAR)")})
                        % w.w AS x,
-                   ({_geo_hex4("'y:' || CAST(c_custkey AS VARCHAR)")})
+                   ({sql_hex4("'y:' || CAST(c_custkey AS VARCHAR)")})
                        % w.w AS y
             FROM customer, wsel w
         ), cells AS (

@@ -24,21 +24,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex4, query, sql_hex4
 
 # ------------------------------------------- bounded-hop SSSP
 
 _SSSP_PART_CAP = 400  # same bounded co-supply graph as MST/triangles
 _SSSP_HOPS = 6
-
-
-def _hex4_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    nibs = [
-        f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        for i in range(4)
-    ]
-    return f"((({nibs[0]} * 16 + {nibs[1]}) * 16 + {nibs[2]}) * 16 + {nibs[3]})"
 
 
 @query(
@@ -54,7 +45,7 @@ def _hex4_sql(expr: str) -> str:
               ON a.l_partkey = b.l_partkey AND a.l_suppkey < b.l_suppkey
         ), wedges AS (
             SELECT u, v,
-                   CAST({_hex4_sql(
+                   CAST({sql_hex4(
                        "'e:' || CAST(u AS VARCHAR) || ':' "
                        "|| CAST(v AS VARCHAR)")} AS BIGINT) AS w
             FROM co
@@ -128,24 +119,11 @@ def graph_sssp_khop_cheapest(spark: SparkSession, sf_dir: str) -> DataFrame:
     wedges = co.select(
         "u",
         "v",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.lit("e"),
-                        F.col("u").cast("string"),
-                        F.col("v").cast("string"),
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("w"),
+        hex4(
+            F.concat_ws(
+                ":", F.lit("e"), F.col("u").cast("string"), F.col("v").cast("string")
+            )
+        ).alias("w"),
     )
     nsup = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("sk"), F.col("s_nationkey").alias("na")

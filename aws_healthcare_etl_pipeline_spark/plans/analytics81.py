@@ -19,30 +19,16 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------------------ count-min sketch
 
 _CMS_W = 512  # cells per row
 _CMS_D = 4  # independent rows
-
-
-def _hex8_sql(expr: str) -> str:
-    """DuckDB: first 8 hex chars of md5(expr) as a BIGINT."""
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 @query(
@@ -54,7 +40,7 @@ def _hex8_spark(col: Column) -> Column:
         ), keypos AS (
             {" UNION ALL ".join(
                 f"SELECT k, c, {d} AS d, "
-                f"({_hex8_sql(chr(39) + f'cms{d}:' + chr(39) + ' || CAST(k AS VARCHAR)')}) % {_CMS_W} AS pos "
+                f"({sql_hex8(chr(39) + f'cms{d}:' + chr(39) + ' || CAST(k AS VARCHAR)')}) % {_CMS_W} AS pos "
                 "FROM exact"
                 for d in range(_CMS_D)
             )}
@@ -105,9 +91,7 @@ def approx_cms_count_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c",
             F.lit(d).alias("d"),
             (
-                _hex8_spark(
-                    F.concat(F.lit(f"cms{d}:"), F.col("k").cast("string"))
-                )
+                hex8(F.concat(F.lit(f"cms{d}:"), F.col("k").cast("string")))
                 % _CMS_W
             ).alias("pos"),
         )

@@ -18,26 +18,13 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------------------------- CUPED
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 # VARCHAR-routed DECIMAL(38)->DOUBLE (portable above 2^53)
@@ -49,7 +36,7 @@ _D = "CAST(CAST({x} AS VARCHAR) AS DOUBLE)"
     oracle=f"""
         WITH units AS (
             SELECT c.c_custkey AS k,
-                   {_hex8_sql("'arm:' || CAST(c.c_custkey AS VARCHAR)")} % 2
+                   {sql_hex8("'arm:' || CAST(c.c_custkey AS VARCHAR)")} % 2
                        AS arm,
                    CAST(COALESCE(SUM(CASE
                        WHEN EXTRACT(year FROM o.o_orderdate) = 1995
@@ -157,7 +144,7 @@ def experiment_cuped_variance_reduction(
         )
         .select(
             (
-                _hex8_spark(
+                hex8(
                     F.concat(
                         F.lit("arm:"), F.col("c_custkey").cast("string")
                     )
@@ -281,9 +268,9 @@ def _pip_oracle() -> str:
     return f"""
         WITH pts AS (
             SELECT user_id,
-                   {_hex8_sql("'px:' || CAST(user_id AS VARCHAR)")}
+                   {sql_hex8("'px:' || CAST(user_id AS VARCHAR)")}
                        % {_LAT} AS px,
-                   {_hex8_sql("'py:' || CAST(user_id AS VARCHAR)")}
+                   {sql_hex8("'py:' || CAST(user_id AS VARCHAR)")}
                        % {_LAT} AS py,
                    CAST(COUNT(*) AS BIGINT) AS ne
             FROM events GROUP BY user_id
@@ -316,15 +303,11 @@ def geo_point_in_polygon_winding(
         F.count(F.lit(1)).cast("long").alias("ne")
     ).select(
         (
-            _hex8_spark(
-                F.concat(F.lit("px:"), F.col("user_id").cast("string"))
-            )
+            hex8(F.concat(F.lit("px:"), F.col("user_id").cast("string")))
             % _LAT
         ).alias("px"),
         (
-            _hex8_spark(
-                F.concat(F.lit("py:"), F.col("user_id").cast("string"))
-            )
+            hex8(F.concat(F.lit("py:"), F.col("user_id").cast("string")))
             % _LAT
         ).alias("py"),
         "ne",

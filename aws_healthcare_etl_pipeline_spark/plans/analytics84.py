@@ -17,24 +17,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import hex8, query, sql_hex8
 
 
 # ------------------------------------------------ bootstrap CI
@@ -58,7 +45,7 @@ _B = 200  # resamples — fixed, data-volume-independent
             SELECT CAST(COUNT(*) AS BIGINT) AS n FROM spine
         ), draws AS (
             SELECT r.b, s.pos,
-                   ({_hex8_sql(
+                   ({sql_hex8(
                        "'bs:' || CAST(r.b AS VARCHAR) || ':' "
                        "|| CAST(s.pos AS VARCHAR)")})
                        % t.n + 1 AS j
@@ -115,7 +102,7 @@ def stats_bootstrap_ci_deterministic(
         .select(
             "b",
             (
-                _hex8_spark(
+                hex8(
                     F.concat(
                         F.lit("bs:"),
                         F.col("b").cast("string"),
@@ -159,7 +146,7 @@ def stats_bootstrap_ci_deterministic(
             SELECT c.c_custkey AS k,
                    CAST(CAST(c.c_acctbal AS DECIMAL(15,2)) * 100
                         AS BIGINT) AS score,
-                   {_hex8_sql("'qarm:' || CAST(c.c_custkey AS VARCHAR)")}
+                   {sql_hex8("'qarm:' || CAST(c.c_custkey AS VARCHAR)")}
                        % 2 AS arm,
                    CAST(COALESCE(SUM(CASE
                        WHEN EXTRACT(year FROM o.o_orderdate) = 1996
@@ -236,7 +223,7 @@ def ml_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("score"),
             (
-                _hex8_spark(
+                hex8(
                     F.concat(
                         F.lit("qarm:"), customer.c_custkey.cast("string")
                     )

@@ -22,11 +22,11 @@ feature importance.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import SEG_W, hex8, query, sql_hex8
 
 # ------------------------------------------- asymmetric containment
 
@@ -147,25 +147,7 @@ def dedup_containment_asymmetric(
 # -------------------------------------- permutation importance
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 _PANEL = 2000  # target eval-panel size (fixed regardless of SF)
-
-_SEG_W = (
-    "CASE c_mktsegment WHEN 'AUTOMOBILE' THEN 120 WHEN 'BUILDING' THEN 80 "
-    "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
-)
 
 # Known-truth label: y = 1 iff f1/100 + 10*f2 + md5-noise%4000 > 8000.
 # The frozen "model" is a miscalibrated copy of that truth (threshold
@@ -183,8 +165,8 @@ _TRUTH_SQL = "f1 // 100 + f2 * 10 + noise > 8000"
             SELECT c_custkey AS k,
                    CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
                         AS BIGINT) AS f1,
-                   CAST({_SEG_W} AS BIGINT) AS f2,
-                   ({_hex8_sql("'noise:' || CAST(c_custkey AS VARCHAR)")})
+                   CAST({SEG_W} AS BIGINT) AS f2,
+                   ({sql_hex8("'noise:' || CAST(c_custkey AS VARCHAR)")})
                        % 4000 AS noise
             FROM customer
         ), lab AS (
@@ -196,7 +178,7 @@ _TRUTH_SQL = "f1 // 100 + f2 * 10 + noise > 8000"
         ), panel AS (
             SELECT k, f1, f2, y,
                    CAST(ROW_NUMBER() OVER (ORDER BY
-                       {_hex8_sql("'pfi:' || CAST(k AS VARCHAR)")}, k)
+                       {sql_hex8("'pfi:' || CAST(k AS VARCHAR)")}, k)
                        AS BIGINT) AS r
             FROM lab CROSS JOIN nn
             WHERE k % greatest(1, n // {_PANEL}) = 0
@@ -254,11 +236,9 @@ def ml_permutation_feature_importance(
         (F.col("c_acctbal").cast("decimal(15,2)") * 100)
         .cast("long")
         .alias("f1"),
-        F.expr(_SEG_W).cast("long").alias("f2"),
+        F.expr(SEG_W).cast("long").alias("f2"),
         (
-            _hex8_spark(
-                F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("noise:"), F.col("c_custkey").cast("string")))
             % 4000
         ).alias("noise"),
     )
@@ -283,9 +263,7 @@ def ml_permutation_feature_importance(
             F.row_number()
             .over(
                 Window.orderBy(
-                    _hex8_spark(
-                        F.concat(F.lit("pfi:"), F.col("k").cast("string"))
-                    ),
+                    hex8(F.concat(F.lit("pfi:"), F.col("k").cast("string"))),
                     "k",
                 )
             )

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import SQL_HEAVY_TRADE, heavy_trade, query
 
 # ------------------------------------------- betweenness centrality
 
@@ -57,27 +57,7 @@ def _bfs_cte_chain() -> str:
 @query(
     "graph_betweenness_nations",
     oracle=f"""
-        WITH trade AS (
-            SELECT least(cn.n_nationkey, sn.n_nationkey) AS u,
-                   greatest(cn.n_nationkey, sn.n_nationkey) AS v,
-                   CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(15,2)) * 100)
-                        AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON o.o_orderkey = l.l_orderkey
-            JOIN customer c ON c.c_custkey = o.o_custkey
-            JOIN supplier s ON s.s_suppkey = l.l_suppkey
-            JOIN nation cn ON cn.n_nationkey = c.c_nationkey
-            JOIN nation sn ON sn.n_nationkey = s.s_nationkey
-            WHERE cn.n_nationkey <> sn.n_nationkey
-            GROUP BY 1, 2
-        ), st AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
-                   CAST(SUM(w) AS BIGINT) AS tot
-            FROM trade
-        ), heavy AS (
-            SELECT u, v FROM trade CROSS JOIN st
-            WHERE w * cnt * 2 >= 3 * tot
-        ), edges AS MATERIALIZED (
+        WITH {SQL_HEAVY_TRADE}, edges AS MATERIALIZED (
             SELECT u, v FROM heavy
             UNION ALL SELECT v AS u, u AS v FROM heavy
         ), nodes AS MATERIALIZED (
@@ -123,35 +103,7 @@ def _bfs_cte_chain() -> str:
     "aggregated entity graphs, not raw events.",
 )
 def graph_betweenness_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    line = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    supplier = load_table(spark, sf_dir, "supplier")
-    cn = F.col("c_nationkey")
-    sn = F.col("s_nationkey")
-    trade = (
-        line.join(orders, orders.o_orderkey == line.l_orderkey)
-        .join(F.broadcast(customer), customer.c_custkey == orders.o_custkey)
-        .join(F.broadcast(supplier), supplier.s_suppkey == line.l_suppkey)
-        .where(cn != sn)
-        .groupBy(
-            F.least(cn, sn).alias("u"), F.greatest(cn, sn).alias("v")
-        )
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(15,2)") * 100)
-            .cast("long")
-            .alias("w")
-        )
-    )
-    st = trade.agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum("w").cast("long").alias("tot"),
-    )
-    heavy = (
-        trade.crossJoin(F.broadcast(st))
-        .where(F.col("w") * F.col("cnt") * 2 >= 3 * F.col("tot"))
-        .select("u", "v")
-    )
+    heavy = heavy_trade(spark, sf_dir)
     edges = heavy.unionAll(
         heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).localCheckpoint(eager=False)  # tiny; reused every BFS round

@@ -21,25 +21,12 @@ optimizer histogram selectivity audit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import hex8, query, sql_hex8
 
 
 # ------------------------------------------- randomized response
@@ -52,7 +39,7 @@ def _hex8_spark(col: Column) -> Column:
             SELECT c_mktsegment AS seg,
                    CASE WHEN CAST(c_acctbal AS DECIMAL(15,2)) * 100 > 500000
                         THEN 1 ELSE 0 END AS truth,
-                   CASE WHEN ({_hex8_sql(
+                   CASE WHEN ({sql_hex8(
                        "'rr:' || CAST(c_custkey AS VARCHAR)")}) % 4 = 0
                         THEN 1 ELSE 0 END AS lie
             FROM customer
@@ -94,9 +81,7 @@ def privacy_randomized_response_estimate(
         .otherwise(0)
         .alias("truth"),
         F.when(
-            _hex8_spark(
-                F.concat(F.lit("rr:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("rr:"), F.col("c_custkey").cast("string")))
             % 4
             == 0,
             1,

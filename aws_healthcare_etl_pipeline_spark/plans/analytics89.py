@@ -28,12 +28,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.keyscan import keyed_pandas_scan
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # ------------------------------------------------ Holt replay
 
@@ -151,19 +151,6 @@ def forecast_holt_linear_replay(
 # ----------------------------------------- IPW / stratification
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 @query(
     "experiment_ipw_confounder_correction",
     oracle=f"""
@@ -176,7 +163,7 @@ def _hex8_spark(col: Column) -> Column:
             GROUP BY 1
         ), assigned AS (
             SELECT k, s, y,
-                   CASE WHEN ({_hex8_sql(
+                   CASE WHEN ({sql_hex8(
                        "'ipw:' || CAST(k AS VARCHAR)")}) % 12
                              < 2 + least(s, 8)
                         THEN 1 ELSE 0 END AS t
@@ -256,9 +243,7 @@ def experiment_ipw_confounder_correction(
         "s",
         "y",
         F.when(
-            _hex8_spark(
-                F.concat(F.lit("ipw:"), F.col("k").cast("string"))
-            )
+            hex8(F.concat(F.lit("ipw:"), F.col("k").cast("string")))
             % 12
             < 2 + F.least(F.col("s"), F.lit(8)),
             1,

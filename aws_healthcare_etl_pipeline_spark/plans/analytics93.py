@@ -23,12 +23,12 @@ quality audit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.cumsum import distributed_running_total
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # --------------------------------------------- pitch autocorr
 
@@ -159,19 +159,6 @@ def multimodal_audio_pitch_autocorr(
 # ------------------------------------- dataloader shuffle audit
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 _EPOCHS = 4
 
 
@@ -183,7 +170,7 @@ _EPOCHS = 4
         ), ranks AS (
             SELECT e.e, k,
                    CAST(ROW_NUMBER() OVER (PARTITION BY e.e ORDER BY
-                       {_hex8_sql(
+                       {sql_hex8(
                            "'ep:' || CAST(e.e AS VARCHAR) || ':' "
                            "|| CAST(k AS VARCHAR)")}, k)
                        AS BIGINT) AS r
@@ -233,7 +220,7 @@ def pipeline_dataloader_shuffle_audit(
     ).select(
         "e",
         "k",
-        _hex8_spark(
+        hex8(
             F.concat(
                 F.lit("ep:"),
                 F.col("e").cast("string"),

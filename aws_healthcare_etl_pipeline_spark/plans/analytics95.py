@@ -20,24 +20,11 @@ stylometry.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
-
-
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+from .registry import hex8, query, sql_hex8
 
 
 # ------------------------------------------- exact permutation
@@ -58,7 +45,7 @@ _NT = 8  # treated count
             SELECT CAST(COUNT(*) AS BIGINT) AS n FROM units
         ), pool AS (
             SELECT k, y,
-                   {_hex8_sql("'perm:' || CAST(k AS VARCHAR)")} AS hv
+                   {sql_hex8("'perm:' || CAST(k AS VARCHAR)")} AS hv
             FROM units CROSS JOIN nn
             WHERE k % greatest(1, n // 32) = 0
         ), panel AS (
@@ -125,9 +112,7 @@ def stat_exact_permutation_pvalue(
         .select(
             "k",
             "y",
-            _hex8_spark(
-                F.concat(F.lit("perm:"), F.col("k").cast("string"))
-            ).alias("hv"),
+            hex8(F.concat(F.lit("perm:"), F.col("k").cast("string"))).alias("hv"),
         )
     )
     # bounded pool (~32 rows): ordered window OK

@@ -20,11 +20,11 @@ guardrail.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import hex8, query, sql_hex8
 
 # --------------------------------------------- newsvendor
 
@@ -193,19 +193,6 @@ def inventory_newsvendor_quantile(
 # --------------------------------------------- SRM guardrail
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
 _CHI2_05_MILLI = 3841  # chi-square critical value, 1 df, alpha=0.05
 _BUGGY_SEGMENT = "BUILDING"
 
@@ -215,10 +202,10 @@ _BUGGY_SEGMENT = "BUILDING"
     oracle=f"""
         WITH assigned AS (
             SELECT c_mktsegment AS seg,
-                   CASE WHEN ({_hex8_sql(
+                   CASE WHEN ({sql_hex8(
                        "'srm:' || CAST(c_custkey AS VARCHAR)")}) % 2 = 0
                         THEN 1 ELSE 0 END AS t,
-                   CASE WHEN ({_hex8_sql(
+                   CASE WHEN ({sql_hex8(
                        "'drop:' || CAST(c_custkey AS VARCHAR)")}) % 5 = 0
                         THEN 1 ELSE 0 END AS dropped
             FROM customer
@@ -259,9 +246,7 @@ def experiment_srm_guardrail(
     assigned = cust.select(
         F.col("c_mktsegment").alias("seg"),
         F.when(
-            _hex8_spark(
-                F.concat(F.lit("srm:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("srm:"), F.col("c_custkey").cast("string")))
             % 2
             == 0,
             1,
@@ -269,9 +254,7 @@ def experiment_srm_guardrail(
         .otherwise(0)
         .alias("t"),
         F.when(
-            _hex8_spark(
-                F.concat(F.lit("drop:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("drop:"), F.col("c_custkey").cast("string")))
             % 5
             == 0,
             1,

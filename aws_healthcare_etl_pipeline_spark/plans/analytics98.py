@@ -18,11 +18,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import SEG_W, SQL_SEG_SCORE, hex8, query, sql_hex8
 
 # --------------------------------------------- jackknife
 
@@ -118,23 +118,6 @@ def stats_jackknife_ratio_variance(
 # ------------------------------------------ eval-set sizing
 
 
-def _hex8_sql(expr: str) -> str:
-    h = f"md5({expr})"
-    out = "CAST(0 AS BIGINT)"
-    for i in range(8):
-        nib = f"(strpos('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        out = f"({out} * 16 + {nib})"
-    return out
-
-
-def _hex8_spark(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-
-
-_SEG_W = (
-    "CASE c_mktsegment WHEN 'AUTOMOBILE' THEN 120 WHEN 'BUILDING' THEN 80 "
-    "WHEN 'FURNITURE' THEN 40 WHEN 'MACHINERY' THEN 160 ELSE 0 END"
-)
 _FRACTIONS = (1, 2, 4, 8, 16)  # sixteenths, nested
 
 
@@ -142,15 +125,11 @@ _FRACTIONS = (1, 2, 4, 8, 16)  # sixteenths, nested
     "ml_evalset_sizing_curve",
     oracle=f"""
         WITH scored AS (
-            SELECT ({_hex8_sql("'lc:' || CAST(c_custkey AS VARCHAR)")})
+            SELECT ({sql_hex8("'lc:' || CAST(c_custkey AS VARCHAR)")})
                        % 16 AS bucket,
-                   CASE WHEN (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                                   AS BIGINT) // 100
-                              + CAST({_SEG_W} AS BIGINT) * 10 > 10000)
-                             = (CAST(CAST(c_acctbal AS DECIMAL(15,2)) * 100
-                                     AS BIGINT) // 100
-                                + CAST({_SEG_W} AS BIGINT) * 10
-                                + ({_hex8_sql(
+                   CASE WHEN ({SQL_SEG_SCORE} > 10000)
+                             = ({SQL_SEG_SCORE}
+                                + ({sql_hex8(
                                     "'noise:' || CAST(c_custkey"
                                     " AS VARCHAR)")}) % 4000 > 8000)
                         THEN 1 ELSE 0 END AS ok
@@ -186,11 +165,9 @@ _FRACTIONS = (1, 2, 4, 8, 16)  # sixteenths, nested
 def ml_evalset_sizing_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     f1 = (F.col("c_acctbal").cast("decimal(15,2)") * 100).cast("long")
-    f2 = F.expr(_SEG_W).cast("long")
+    f2 = F.expr(SEG_W).cast("long")
     noise = (
-        _hex8_spark(
-            F.concat(F.lit("noise:"), F.col("c_custkey").cast("string"))
-        )
+        hex8(F.concat(F.lit("noise:"), F.col("c_custkey").cast("string")))
         % 4000
     )
     model = F.expr("f1 div 100") + F.col("f2") * 10 > 10000
@@ -199,9 +176,7 @@ def ml_evalset_sizing_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = cust.select(
         (
-            _hex8_spark(
-                F.concat(F.lit("lc:"), F.col("c_custkey").cast("string"))
-            )
+            hex8(F.concat(F.lit("lc:"), F.col("c_custkey").cast("string")))
             % 16
         ).alias("bucket"),
         f1.alias("f1"),

@@ -27,9 +27,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to always broadcast in a star join.
-BROADCAST_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
-
 
 # The events fixture has shipped ts in two parquet vintages:
 #  - TIMESTAMP(NANOS): Spark has no native type for it (SPARK-40819) —
@@ -78,19 +75,6 @@ def events_read_schema(path: str) -> T.StructType:
             T.StructField("props", T.StringType()),
         ]
     )
-
-
-# legacy alias (nanos vintage) kept for callers that staged nanos files
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),  # epoch nanos
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
 
 def convert_events_ts(df: DataFrame) -> DataFrame:

@@ -17,10 +17,14 @@ equivalent of the always-on event rule.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.csv_ingest import IngestConfig, utc_ingest_date, write_partitioned
+from ..sources.csv_ingest import (
+    IngestConfig,
+    transform,
+    utc_ingest_date,
+    write_partitioned,
+)
 
 
 def start_incremental_ingest(
@@ -45,10 +49,9 @@ def start_incremental_ingest(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        stamped = batch_df.withColumn(
-            "ingest_date", F.lit(cfg.ingest_date or utc_ingest_date())
+        write_partitioned(
+            transform(batch_df, cfg.ingest_date or utc_ingest_date()), cfg
         )
-        write_partitioned(stamped, cfg)
 
     writer = (
         stream.writeStream.foreachBatch(sink)

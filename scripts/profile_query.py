@@ -7,7 +7,10 @@ normalize against any bench table), then for each named registry query:
   - first : first noop-sink execution of that plan (codegen + exec),
             which is also the warmup
   - min, raw, jobs : bench.time_query over ``--runs`` timed runs
-and, with ``--plans DIR``, the .explain("formatted") text per query.
+and, with ``--plans DIR``, the .explain("formatted") text per query with
+the per-session counters stripped (expression ids ``#12L``, exchange
+``plan_id=`` and ``RDD[n]`` numbers), so ``--suffix _before`` and
+``_after`` dumps of an unchanged plan diff to empty.
 Prints one JSON document as the last stdout line.
 
 Usage:
@@ -20,6 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -62,7 +66,7 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted"
             )
             with open(os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w") as f:
-                f.write(plan_txt)
+                f.write(re.sub(r"#\d+L?|(?<=plan_id=)\d+|(?<=RDD\[)\d+", "", plan_txt))
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         first = round(time.perf_counter() - t0, 3)
