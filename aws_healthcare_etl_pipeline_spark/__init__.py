@@ -23,6 +23,18 @@ Design stance (100 TB): declare logical plans with DataFrame/SQL and let
 Catalyst/AQE choose physical strategy; broadcast small dims; keep
 expressions inside whole-stage codegen; Pandas UDFs only where built-ins
 cannot express the semantics.
+
+Python workers may start from a cwd where this package is not
+importable, so the package and its submodules are pickled BY VALUE:
+a ``mapInPandas`` closure may call any module-level function here
+(e.g. ``operators.multimodal.decode_image``) and the worker receives
+its code, not an import by name.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -1,20 +1,2 @@
-from .vectors import cosine_similarity, dot, l2_norm, scale_by
-from .text import (
-    fingerprint_md5,
-    normalize_text,
-    token_count,
-    tokens,
-    word_shingles,
-)
-
-__all__ = [
-    "cosine_similarity",
-    "dot",
-    "l2_norm",
-    "scale_by",
-    "fingerprint_md5",
-    "normalize_text",
-    "token_count",
-    "tokens",
-    "word_shingles",
-]
+"""Column-level helpers (vector math, text normalization); import the
+submodules directly."""

@@ -52,9 +52,3 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
         ),
     )
 
-
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """n-word shingles straight from a text column — convenience form
-    for small inputs/tests; hot paths should materialize tokens first
-    and use ``shingles_from_tokens`` (see its docstring)."""
-    return shingles_from_tokens(tokens(normalize_text(c)), n)

@@ -32,23 +32,3 @@ def l2_norm(a: Column) -> Column:
         F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
     )
 
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def scale_by(a: Column, divisor: Column) -> Column:
-    """Divide every element by ``divisor``.
-
-    PERFORMANCE CONTRACT: ``divisor`` must be a cheap expression or a
-    materialized column reference — anything referenced inside the
-    lambda is re-evaluated per array element. Unit-normalizing is
-    therefore two projections:
-
-        df.withColumn("n", l2_norm(F.col("v")))
-          .withColumn("unit", scale_by(F.col("v"), F.col("n")))
-
-    (an inline ``scale_by(v, l2_norm(v))`` would recompute the norm per
-    element — O(d^2) per vector).
-    """
-    return F.transform(_as_double(a), lambda x: x / divisor)

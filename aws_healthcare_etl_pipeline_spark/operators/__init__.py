@@ -1,50 +1,2 @@
-from .asof import asof_join
-from .clusters import connected_components
-from .ivf import ivf_top_k, train_ivf_centroids
-from .scd import scd2_apply, upsert_snapshot
-from .skew import salted_aggregate, salted_join
-from .topk import top_k_per_group
-from .dedup import (
-    drop_exact_duplicates,
-    exact_duplicate_clusters,
-    minhash_near_duplicates,
-    ngram_jaccard_pairs,
-    simhash_near_duplicates,
-)
-from .similarity import brute_force_top_k, lsh_top_k
-from .text import language_id, quality_scores
-from .multimodal import (
-    attach_binary_payload,
-    decode_image,
-    decode_image_stub,
-    encode_bmp,
-    encode_ppm,
-    extract_features,
-)
-
-__all__ = [
-    "asof_join",
-    "connected_components",
-    "ivf_top_k",
-    "train_ivf_centroids",
-    "scd2_apply",
-    "upsert_snapshot",
-    "salted_aggregate",
-    "salted_join",
-    "top_k_per_group",
-    "drop_exact_duplicates",
-    "exact_duplicate_clusters",
-    "minhash_near_duplicates",
-    "ngram_jaccard_pairs",
-    "simhash_near_duplicates",
-    "brute_force_top_k",
-    "lsh_top_k",
-    "language_id",
-    "quality_scores",
-    "attach_binary_payload",
-    "decode_image",
-    "decode_image_stub",
-    "encode_bmp",
-    "encode_ppm",
-    "extract_features",
-]
+"""Composed relational and LLM-data-pipeline operators; import the
+submodules directly."""

@@ -1,14 +1,14 @@
 """Deduplication family for large-scale text corpora (SURVEY.md §2.8).
 
 All four flavors are expressed with built-in Catalyst expressions only
-(xxhash64 / array transforms / bit ops) — no Python UDFs — so every
+(xxhash64 / md5 / array transforms / bit ops) — no Python UDFs — so every
 stage is whole-stage-codegen'd, shuffles only on compact keys, and
 scales linearly with the corpus:
 
   exact      : md5-of-normalized-text groupBy (one shuffle on a 32-byte key)
   MinHash+LSH: shingle -> H seeded xxhash64 minima -> B bands ->
                bucket self-join -> exact-Jaccard verify
-  SimHash    : 64-bit sign-sum signature -> 16-bit band blocking ->
+  SimHash    : 60-bit md5-token sign-sum signature -> 15-bit band blocking ->
                hamming<=k verify (bit_count(xor))
   n-gram Jaccard: blocked exact Jaccard over distinct shingle sets
 
@@ -34,16 +34,13 @@ from .parallelism import widen
 
 # ---------------------------------------------------------------- exact
 
-def drop_exact_duplicates(
-    df: DataFrame, text_col: str, id_col: str, normalized: bool = True
-) -> DataFrame:
+def drop_exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Keep exactly one row (lowest id) per distinct text.
 
     Deterministic alternative to ``dropDuplicates`` (which keeps an
     arbitrary row). One shuffle on the md5 fingerprint.
     """
-    key = fingerprint_md5(F.col(text_col)) if normalized else F.md5(F.encode(F.col(text_col), "UTF-8"))
-    w = Window.partitionBy(key).orderBy(F.col(id_col).asc())
+    w = Window.partitionBy(fingerprint_md5(F.col(text_col))).orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -73,7 +70,7 @@ def exact_duplicate_clusters(df: DataFrame, text_col: str, id_col: str) -> DataF
 # (e.g. thousands of near-empty documents) would dominate the whole
 # job with quadratic TOTAL work no matter how it is distributed.
 # Floods that big are exact-dup-shaped — the md5 path owns them.
-# Drops are never silent: pass ``observation`` to count them.
+# Drops are never silent: ``_bucket_pairs(observation=)`` counts them.
 MAX_BUCKET_SIZE = 10_000
 
 # Buckets above this size are not expanded inside one task (a 10k
@@ -261,7 +258,6 @@ def minhash_near_duplicates(
     bands: int = 16,
     shingle_size: int = 3,
     threshold: float = 0.7,
-    observation=None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, jaccard >= threshold).
 
@@ -303,7 +299,7 @@ def minhash_near_duplicates(
     # candidate pairs: docs sharing any (band, band_hash) bucket — via
     # one groupBy + in-bucket pair expansion (single shuffle of compact
     # (id, band_hash) rows; ~35% faster than the bucket self-join).
-    candidates = _bucket_pairs(buckets, ["band", "band_hash"], observation=observation)
+    candidates = _bucket_pairs(buckets, ["band", "band_hash"])
     sh = sigs.select("doc_id", "shingles")
     verified = (
         candidates.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("shingles", "sh_a"), "id_a")
@@ -317,12 +313,25 @@ def minhash_near_duplicates(
 
 # ------------------------------------------------------------- SimHash
 
-def _simhash_from_hashes(hashes: Column, n_bits: int) -> Column:
-    """SimHash signature from a per-token int64 hash array.
+PORTABLE_SIMHASH_BITS = 60
+
+
+def simhash_portable(text: Column) -> Column:
+    """60-bit SimHash over distinct normalized whitespace tokens, unit
+    weights, whose token hash is md5-derived — bit-identical across
+    engines (md5 is standardized; xxhash64 seeds/variants are not), so
+    an external SQL engine can recompute the signature for
+    cross-engine verification. 15 hex digits = 60 bits keeps the value
+    inside a signed int64 in every engine.
 
     Per bit position: sum of (+1/-1); signature bit j set iff the sum
     is positive. Entirely array/bit expressions.
     """
+    hashes = F.transform(
+        F.array_distinct(F.split(normalize_text(text), r"\s+")),
+        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
+    )
+    n_bits = PORTABLE_SIMHASH_BITS
     # bit_sums[j] = sum over tokens of (bit j of hash ? 1 : -1).
     # bit_get accepts a Column position (shiftright does not).
     bit_sums = F.aggregate(
@@ -339,49 +348,11 @@ def _simhash_from_hashes(hashes: Column, n_bits: int) -> Column:
     )
     # fold positive-sum bits into one int64; bit positions are disjoint
     # so plain addition assembles the signature
-    # bit 63 must be the int64 sign bit: -(2^63) wraps to the right pattern
-    powers = F.array(
-        *[
-            F.lit((1 << j) if j < 63 else -(1 << 63)).cast("long")
-            for j in range(n_bits)
-        ]
-    )
+    powers = F.array(*[F.lit(1 << j).cast("long") for j in range(n_bits)])
     signed = F.zip_with(
         bit_sums, powers, lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("long"))
     )
     return F.aggregate(signed, F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
-def _normalized_tokens(text: Column) -> Column:
-    return F.array_distinct(F.split(normalize_text(text), r"\s+"))
-
-
-def simhash64(text: Column) -> Column:
-    """Classic 64-bit SimHash over whitespace tokens, unit weights.
-
-    xxhash64 token hashing — the production default (fastest JVM path).
-    """
-    return _simhash_from_hashes(
-        F.transform(_normalized_tokens(text), lambda t: F.xxhash64(t)), 64
-    )
-
-
-PORTABLE_SIMHASH_BITS = 60
-
-
-def simhash_portable(text: Column) -> Column:
-    """60-bit SimHash whose token hash is md5-derived — bit-identical
-    across engines (md5 is standardized; xxhash64 seeds/variants are
-    not), so an external SQL engine can recompute the signature for
-    cross-engine verification. 15 hex digits = 60 bits keeps the value
-    inside a signed int64 in every engine. Production paths should use
-    ``simhash64``; this variant costs an md5 per token.
-    """
-    hashes = F.transform(
-        _normalized_tokens(text),
-        lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
-    )
-    return _simhash_from_hashes(hashes, PORTABLE_SIMHASH_BITS)
 
 
 def simhash_near_duplicates(
@@ -389,10 +360,9 @@ def simhash_near_duplicates(
     text_col: str,
     id_col: str,
     max_hamming: int = 8,
-    portable: bool = False,
-    observation=None,
 ) -> DataFrame:
-    """Pairs with hamming(simhash_a, simhash_b) <= max_hamming.
+    """Pairs with hamming(simhash_a, simhash_b) <= max_hamming over the
+    md5-derived ``simhash_portable`` signature.
 
     Blocking: the signature split into 4 equal bands; by pigeonhole
     any pair at hamming <= 3 shares an exact band — so with
@@ -400,19 +370,12 @@ def simhash_near_duplicates(
     result (zero false negatives, a deterministic set). At the default
     8 most near-pairs still collide in >=1 band but recall < 1.
     Verify is ``bit_count(xor)`` on the full signature.
-
-    ``portable=True`` switches to the md5-derived 60-bit signature
-    (`simhash_portable`) so an external engine can recompute it.
     """
-    if portable:
-        sig_expr = simhash_portable(F.col(text_col))
-        band_bits = PORTABLE_SIMHASH_BITS // 4
-    else:
-        sig_expr = simhash64(F.col(text_col))
-        band_bits = 16
+    band_bits = PORTABLE_SIMHASH_BITS // 4
     mask = (1 << band_bits) - 1
     sigs = widen(df, id_col).select(
-        F.col(id_col).alias("doc_id"), sig_expr.alias("simhash")
+        F.col(id_col).alias("doc_id"),
+        simhash_portable(F.col(text_col)).alias("simhash"),
     )
     banded = sigs.select(
         "doc_id",
@@ -427,7 +390,7 @@ def simhash_near_duplicates(
             )
         ).alias("band", "band_val"),
     )
-    candidates = _bucket_pairs(banded, ["band", "band_val"], observation=observation)
+    candidates = _bucket_pairs(banded, ["band", "band_val"])
     s = sigs
     return (
         candidates.join(

@@ -65,7 +65,6 @@ def edit_distance_candidates(
     str_col: str,
     k: int = 2,
     block_cols: tuple[str, ...] = (),
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Candidate pairs (a_*, b_*) for a levenshtein <= k self-join.
 
@@ -74,15 +73,14 @@ def edit_distance_candidates(
     post-filtering) keeps candidates that will be discarded anyway
     from ever being generated — on data where near-names are dense
     (sequential ids), the attribute restriction can be the larger
-    selectivity factor. ``carry_cols`` ride along un-joined.
+    selectivity factor.
 
     Returns distinct pairs with ``a_<id> < b_<id>``, each side
-    carrying ``str_col``, ``block_cols`` and ``carry_cols`` (prefixed
-    a_/b_). The result is a SUPERSET of the true block-equal <= k
+    carrying ``str_col`` and ``block_cols`` (prefixed a_/b_). The result is a SUPERSET of the true block-equal <= k
     pair set (no false negatives — see module docstring); callers
     apply the residual ``levenshtein(..., k) >= 0`` verify.
     """
-    side_cols = (str_col, *block_cols, *carry_cols)
+    side_cols = (str_col, *block_cols)
     # variant generation is pure per-row CPU (1 + L + C(L,2) string
     # builds + hashes): widen a coarse-grained scan so it doesn't
     # serialize on one task; no-op on an already-wide production scan

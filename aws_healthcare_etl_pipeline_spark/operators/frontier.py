@@ -10,34 +10,25 @@ identical points don't dominate each other. Comparisons only; no
 float arithmetic can perturb membership.
 
 The strictly-smaller-x minimum is computed like the running totals in
-``cumsum.py`` (min is associative too): rows bucket by a monotone
-function of x (default: x itself — right for discrete domains like
-sizes/grades; pass ``x_bucket=floor(x/w)`` for continuous x), bucket
-minima form a bounded spine whose exclusive running min is each
-bucket's carry-in, and a bucket-partitioned ROWS window over the
-DISTINCT-x grain covers strictly-smaller x within the bucket — exact
-for any ordered x type, integer or continuous. r2 ran one
+``cumsum.py`` (min is associative too): rows bucket by x itself
+(right for discrete domains like sizes/grades), bucket minima form a
+bounded spine whose exclusive running min is each bucket's carry-in,
+and a bucket-partitioned ROWS window over the DISTINCT-x grain covers
+strictly-smaller x within the bucket — exact for any ordered x type,
+integer or continuous. r2 ran one
 unpartitioned RANGE window over the full frame — a single-task sort
 at scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pareto_frontier_2d(
-    df: DataFrame, x: str, y: str, x_bucket: Column | None = None
-) -> DataFrame:
-    """Rows of ``df`` on the (min ``x``, min ``y``) Pareto frontier.
-
-    ``x_bucket`` must be a monotone non-decreasing function of ``x``
-    (default ``F.col(x)``): equal buckets may contain equal-or-larger
-    x, strictly prior buckets contain strictly smaller x.
-    """
-    b = x_bucket if x_bucket is not None else F.col(x)
-    pts = df.withColumn("_xb", b)
+def pareto_frontier_2d(df: DataFrame, x: str, y: str) -> DataFrame:
+    """Rows of ``df`` on the (min ``x``, min ``y``) Pareto frontier."""
+    pts = df.withColumn("_xb", F.col(x))
     sub = pts.groupBy("_xb").agg(F.min(y).alias("_m"))
     spine = Window.orderBy("_xb").rowsBetween(Window.unboundedPreceding, -1)
     carry = sub.select("_xb", F.min("_m").over(spine).alias("_carry"))
@@ -45,9 +36,8 @@ def pareto_frontier_2d(
     # after the (bucket, x) groupBy each partition holds one row per x
     # value, so a ROWS frame ending at -1 is exactly {x' < x} for ANY
     # ordered x type. (A rangeBetween(..., -1) offset frame is only
-    # equivalent on integer-valued x — with a continuous x and
-    # x_bucket=floor(x/w), same-bucket dominators at x-1 < x' < x would
-    # slip through the offset frame.)
+    # equivalent on integer-valued x — with a continuous x, dominators
+    # at x-1 < x' < x would slip through the offset frame.)
     xgrain = pts.groupBy("_xb", x).agg(F.min(y).alias("_xm"))
     within = (
         Window.partitionBy("_xb")

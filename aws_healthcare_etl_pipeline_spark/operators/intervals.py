@@ -33,23 +33,13 @@ def bucketed_point_interval_join(
     start_col: str,
     end_col: str,
     bucket_width: int,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join point rows to every interval row with
+    """Inner-join point rows to every interval row with
     ``start <= t < end``. All three columns must be LONG in the same
     unit (epoch days/seconds/micros). Intervals are half-open.
 
-    Only ``how='inner'`` is supported: the interval containment
-    predicate is applied as a post-join filter, which would silently
-    drop unmatched outer-side rows and collapse any outer variant
-    back to inner semantics — so anything else is rejected loudly."""
-    if how != "inner":
-        raise ValueError(
-            "bucketed_point_interval_join supports how='inner' only: the "
-            "residual containment filter runs after the bucket join and "
-            f"would discard the unmatched rows an outer join ({how!r}) "
-            "is supposed to keep"
-        )
+    The interval containment predicate is a post-join filter, so an
+    outer variant would silently collapse back to inner semantics."""
     pb = points.withColumn("__bucket", F.expr(f"{t_col} div {bucket_width}"))
     ib = intervals.withColumn(
         "__bucket",
@@ -61,7 +51,7 @@ def bucketed_point_interval_join(
         ),
     )
     return (
-        pb.join(ib, "__bucket", how)
+        pb.join(ib, "__bucket")
         .filter((F.col(t_col) >= F.col(start_col)) & (F.col(t_col) < F.col(end_col)))
         .drop("__bucket")
     )

@@ -55,9 +55,8 @@ def keyed_pandas_scan(
     """Run ``per_group`` over each key's rows (pre-sorted by ``order``)
     with one Python call per Arrow batch instead of one per group.
 
-    ``per_group`` must be a self-contained closure (pandas/stdlib only
-    — it ships to executors by value) receiving one key's rows in
-    ``order`` and returning its output rows.
+    ``per_group`` (it ships to executors by value) receives one key's
+    rows in ``order`` and returns its output rows.
 
     ``carry_limit`` bounds the cross-batch carry (the trailing key's
     accumulated rows): a pathologically skewed key fails loudly with

@@ -28,9 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def attach_binary_payload(
-    df: DataFrame, source_col: str, fmt: str = "raw/utf-8"
-) -> DataFrame:
+def attach_binary_payload(df: DataFrame, source_col: str) -> DataFrame:
     """Materialize an opaque ``binary`` payload column + metadata struct.
 
     In production the payload arrives from the lake (image/audio bytes);
@@ -42,7 +40,7 @@ def attach_binary_payload(
     return df.withColumn("payload", payload).withColumn(
         "media_meta",
         F.struct(
-            F.lit(fmt).alias("format"),
+            F.lit("raw/utf-8").alias("format"),
             F.length(payload).cast("long").alias("n_bytes"),
             F.md5(payload).alias("checksum_md5"),
             F.lit(None).cast("int").alias("width"),
@@ -132,8 +130,10 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     )
 
 
-# Back-compat name from rounds 1-3 (operators/__init__ re-export).
-decode_image_stub = decode_image
+def _grayscale(img: np.ndarray) -> np.ndarray:
+    """Collapse a color (h, w, 3) image to grayscale by channel mean,
+    the standard luma-less reduction; grayscale images pass through."""
+    return img.astype("float64").mean(axis=2) if img.ndim == 3 else img
 
 
 def encode_ppm(img: np.ndarray) -> bytes:
@@ -186,30 +186,21 @@ RESIZE_SCHEMA = T.StructType(
 def resize_images(df: DataFrame, size: tuple[int, int] = (4, 4), id_col: str = "doc_id") -> DataFrame:
     """Resize kernel plumbing (nearest-neighbor on the fake 8x8 decode).
 
-    Swapping the inner `_decode`/`_resize` pair for Pillow calls makes
+    Swapping the `decode_image`/`_resize` pair for Pillow calls makes
     this a real image resizer; schema, batching, and partitioning are
     already production-shaped.
     """
     w, h = size
 
+    def _resize(img: np.ndarray) -> np.ndarray:
+        ys = np.arange(h) * img.shape[0] // h
+        xs = np.arange(w) * img.shape[1] // w
+        return img[np.ix_(ys, xs)]
+
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _decode(payload: bytes) -> "_np.ndarray":
-            digest = _hashlib.md5(payload).digest()
-            return _np.frombuffer(digest * 4, dtype=_np.uint8).reshape(8, 8)
-
-        def _resize(img: "_np.ndarray") -> "_np.ndarray":
-            ys = (_np.arange(h) * img.shape[0] // h)
-            xs = (_np.arange(w) * img.shape[1] // w)
-            return img[_np.ix_(ys, xs)]
-
         for pdf in it:
-            resized = [_resize(_decode(p)) for p in pdf["payload"]]
-            yield _pd.DataFrame(
+            resized = [_resize(decode_image(p, fake=True)) for p in pdf["payload"]]
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].astype("int64"),
                     "width": w,
@@ -283,80 +274,13 @@ def extract_features(
     images are collapsed to grayscale by channel mean before the
     intensity/feature math, the standard luma-less reduction.
     """
-    id_name = id_col
-    use_fake = fake
 
-    # NOTE: the closure must be self-contained (stdlib/numpy/pandas only).
-    # Referencing module-level helpers would make cloudpickle serialize
-    # them by reference, and Python workers launched outside the repo
-    # root could not import this package — hence the real decoders are
-    # REPEATED here inline (source of truth: decode_image above).
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _decode(payload: bytes) -> "_np.ndarray":
-            if use_fake:
-                digest = _hashlib.md5(payload).digest()
-                return _np.frombuffer(digest * 4, dtype=_np.uint8).reshape(8, 8)
-            if payload[:2] in (b"P5", b"P6"):
-                p = 2
-
-                def tok(p: int) -> tuple[int, int]:
-                    while True:
-                        while p < len(payload) and payload[p : p + 1].isspace():
-                            p += 1
-                        if p < len(payload) and payload[p : p + 1] == b"#":
-                            while p < len(payload) and payload[p : p + 1] != b"\n":
-                                p += 1
-                            continue
-                        break
-                    s = p
-                    while p < len(payload) and not payload[p : p + 1].isspace():
-                        p += 1
-                    return int(payload[s:p]), p
-
-                w, p = tok(p)
-                h, p = tok(p)
-                maxval, p = tok(p)
-                if maxval > 255:
-                    raise ValueError(f"PNM maxval {maxval} > 255 not supported")
-                p += 1
-                ch = 3 if payload[:2] == b"P6" else 1
-                arr = _np.frombuffer(payload, _np.uint8, count=w * h * ch, offset=p)
-                img = arr.reshape(h, w, 3) if ch == 3 else arr.reshape(h, w)
-            elif payload[:2] == b"BM":
-                off = _struct.unpack_from("<I", payload, 10)[0]
-                w, h = _struct.unpack_from("<ii", payload, 18)
-                bpp = _struct.unpack_from("<H", payload, 28)[0]
-                comp = _struct.unpack_from("<I", payload, 30)[0]
-                if bpp != 24 or comp != 0:
-                    raise ValueError(
-                        "only 24-bit BI_RGB BMP supported "
-                        f"(bpp={bpp}, comp={comp})"
-                    )
-                rs = (w * 3 + 3) // 4 * 4
-                rows = [
-                    _np.frombuffer(payload, _np.uint8, count=w * 3, offset=off + r * rs)
-                    .reshape(w, 3)[:, ::-1]
-                    for r in range(abs(h))
-                ]
-                img = _np.stack(rows)
-                img = img[::-1] if h > 0 else img
-            else:
-                raise ValueError(f"unsupported image magic {payload[:2]!r}")
-            if img.ndim == 3:  # grayscale by channel mean
-                img = img.astype("float64").mean(axis=2)
-            return img
-
         for pdf in it:
-            decoded = [_decode(p) for p in pdf["payload"]]
-            yield _pd.DataFrame(
+            decoded = [_grayscale(decode_image(p, fake)) for p in pdf["payload"]]
+            yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_name].astype("int64"),
+                    "doc_id": pdf[id_col].astype("int64"),
                     "n_bytes": pdf["payload"].map(len).astype("int64"),
                     "mean_intensity": [float(d.mean()) for d in decoded],
                     "feature": [
@@ -387,97 +311,26 @@ def perceptual_hash(
     PNM/BMP payloads and mean-pools floor-cropped 8x8 blocks (images
     must be >= 8px each side).
     """
-    id_name = id_col
-    use_fake = fake
 
-    # NOTE: self-contained closure (see extract_features NOTE); the
-    # real decoder is an inline copy — source of truth: decode_image,
-    # equality pinned by tests/test_catalog_multimodal.py.
+    def _phash(payload: bytes) -> int:
+        if fake:
+            pixels = decode_image(payload, fake=True).ravel().tolist()
+            total = sum(pixels)  # == 64 * mean, kept exact
+            return sum(1 << j for j in range(PHASH_BITS) if pixels[j] * 64 > total)
+        img = _grayscale(decode_image(payload)).astype("float64")
+        ih, iw = img.shape
+        if ih < 8 or iw < 8:
+            raise ValueError(f"image {ih}x{iw} too small for phash")
+        h8, w8 = ih // 8 * 8, iw // 8 * 8
+        flat = img[:h8, :w8].reshape(8, h8 // 8, 8, w8 // 8).mean(axis=(1, 3)).ravel()
+        mean = flat.mean()
+        return sum(1 << j for j in range(PHASH_BITS) if flat[j] > mean)
+
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _decode(payload: bytes) -> "_np.ndarray":
-            if payload[:2] in (b"P5", b"P6"):
-                p = 2
-
-                def tok(p: int) -> tuple[int, int]:
-                    while True:
-                        while p < len(payload) and payload[p : p + 1].isspace():
-                            p += 1
-                        if p < len(payload) and payload[p : p + 1] == b"#":
-                            while p < len(payload) and payload[p : p + 1] != b"\n":
-                                p += 1
-                            continue
-                        break
-                    s = p
-                    while p < len(payload) and not payload[p : p + 1].isspace():
-                        p += 1
-                    return int(payload[s:p]), p
-
-                w, p = tok(p)
-                h, p = tok(p)
-                maxval, p = tok(p)
-                if maxval > 255:
-                    raise ValueError(f"PNM maxval {maxval} > 255 not supported")
-                p += 1
-                ch = 3 if payload[:2] == b"P6" else 1
-                arr = _np.frombuffer(payload, _np.uint8, count=w * h * ch, offset=p)
-                img = arr.reshape(h, w, 3) if ch == 3 else arr.reshape(h, w)
-            elif payload[:2] == b"BM":
-                off = _struct.unpack_from("<I", payload, 10)[0]
-                w, h = _struct.unpack_from("<ii", payload, 18)
-                bpp = _struct.unpack_from("<H", payload, 28)[0]
-                comp = _struct.unpack_from("<I", payload, 30)[0]
-                if bpp != 24 or comp != 0:
-                    raise ValueError(
-                        "only 24-bit BI_RGB BMP supported "
-                        f"(bpp={bpp}, comp={comp})"
-                    )
-                rs = (w * 3 + 3) // 4 * 4
-                rows = [
-                    _np.frombuffer(payload, _np.uint8, count=w * 3, offset=off + r * rs)
-                    .reshape(w, 3)[:, ::-1]
-                    for r in range(abs(h))
-                ]
-                img = _np.stack(rows)
-                img = img[::-1] if h > 0 else img
-            else:
-                raise ValueError(f"unsupported image magic {payload[:2]!r}")
-            if img.ndim == 3:
-                img = img.astype("float64").mean(axis=2)
-            return img
-
-        def _phash(payload: bytes) -> int:
-            if use_fake:
-                pixels = list(_hashlib.md5(payload).digest()) * 4
-                total = sum(pixels)  # == 64 * mean, kept exact
-                h = 0
-                for j in range(60):
-                    if pixels[j] * 64 > total:
-                        h |= 1 << j
-                return h
-            img = _decode(payload).astype("float64")
-            ih, iw = img.shape
-            if ih < 8 or iw < 8:
-                raise ValueError(f"image {ih}x{iw} too small for phash")
-            h8, w8 = ih // 8 * 8, iw // 8 * 8
-            blocks = img[:h8, :w8].reshape(8, h8 // 8, 8, w8 // 8).mean(axis=(1, 3))
-            flat = blocks.ravel()
-            mean = flat.mean()
-            h = 0
-            for j in range(60):
-                if flat[j] > mean:
-                    h |= 1 << j
-            return h
-
         for pdf in it:
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_name].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "phash": [_phash(p) for p in pdf["payload"]],
                 }
             )

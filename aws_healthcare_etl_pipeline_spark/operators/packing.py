@@ -83,9 +83,6 @@ def ffd_pack(
     gcol, icol, scol = group_col, id_col, size_col
     shards = max(1, int(n_shards))
 
-    # NOTE: self-contained closure (pandas imported inside) — executed
-    # on workers that may not have the package importable when the
-    # harness loads this module by file path from a foreign cwd.
     def pack(pdf):
         import pandas as pd
 

@@ -35,8 +35,6 @@ def covariance_stats(df: DataFrame, vec_col: str = "embedding") -> tuple[int, np
     payload O(dim^2) per batch, not per row."""
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # NOTE: self-contained closure (workers may not have the repo
-        # on sys.path) — import inside, reference nothing module-level
         import numpy as _np
         import pandas as _pd
 

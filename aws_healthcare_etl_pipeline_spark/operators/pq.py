@@ -30,7 +30,6 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import l2_norm
 from .ivf import _argmax_dot
 
 
@@ -133,7 +132,6 @@ def pq_top_k(
     codes_col: str = "codes",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k from codes only.
 
@@ -143,12 +141,9 @@ def pq_top_k(
     the codebooks: ||v||^2 ~ sum_s ||c_{s,code_s}||^2. The scan reads
     (id, codes) only; per row work is 2m lookups + a divide.
 
-    ``exclude_self`` (default True) drops corpus rows whose id equals
-    the query id — correct when queries are drawn FROM the corpus and
-    share its id space (the self-match is a trivial cosine-1 hit).
-    Pass False when the query id space is disjoint from the corpus,
-    where an accidental id collision would silently drop a legitimate
-    candidate."""
+    Corpus rows whose id equals the query id are dropped: queries are
+    drawn FROM the corpus and share its id space (the self-match is a
+    trivial cosine-1 hit)."""
     m, kk, d_sub = books.shape
     qrows = queries.select(query_id, query_vec).collect()
     cent_norm2 = (books**2).sum(axis=2)  # (m, k)
@@ -186,11 +181,9 @@ def pq_top_k(
     with_norm = encoded.withColumn(
         "__c_norm", F.sqrt(lookup_sum(F.expr(norm_lut)))
     )
-    joined = with_norm.crossJoin(luts)
-    if exclude_self:
-        joined = joined.filter(F.col(corpus_id) != F.col(query_id))
     scored = (
-        joined
+        with_norm.crossJoin(luts)
+        .filter(F.col(corpus_id) != F.col(query_id))
         .select(
             query_id,
             corpus_id,

@@ -34,15 +34,15 @@ def brute_force_top_k(
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector, excluding a
+    corpus row whose id equals the query id.
 
     Returns (query_id, vec_id, cosine) with rank<=k per query;
     deterministic tiebreak on (cosine desc, vec_id asc).
     """
     # norms are materialized once per row on each side, so the per-pair
-    # work is a single dot product — the inline cosine_similarity form
+    # work is a single dot product — an inline dot/(norm*norm) form
     # would recompute both norms for every (query, corpus) pair.
     q = F.broadcast(
         queries.select(query_id, query_vec).withColumn("q_norm", l2_norm(F.col(query_vec)))
@@ -50,10 +50,7 @@ def brute_force_top_k(
     c = corpus.select(corpus_id, corpus_vec).withColumn(
         "c_norm", l2_norm(F.col(corpus_vec))
     )
-    pairs = c.crossJoin(q)
-    if not include_self:
-        pairs = pairs.filter(F.col(corpus_id) != F.col(query_id))
-    scored = pairs.select(
+    scored = c.crossJoin(q).filter(F.col(corpus_id) != F.col(query_id)).select(
         query_id,
         corpus_id,
         (
@@ -102,7 +99,6 @@ def lsh_candidates(
     dim: int,
     bits_per_table: int = 8,
     n_tables: int = 8,
-    multiprobe: bool = True,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
@@ -142,13 +138,10 @@ def lsh_candidates(
     for t, sc in enumerate(sig_cols):
         s = F.col(sc)
         probe_structs.append(F.struct(F.lit(t).alias("t"), s.alias("sig")))
-        if multiprobe:
-            for b in range(bits_per_table):
-                probe_structs.append(
-                    F.struct(
-                        F.lit(t).alias("t"), s.bitwiseXOR(F.lit(1 << b)).alias("sig")
-                    )
-                )
+        for b in range(bits_per_table):
+            probe_structs.append(
+                F.struct(F.lit(t).alias("t"), s.bitwiseXOR(F.lit(1 << b)).alias("sig"))
+            )
     q_probes = F.broadcast(
         with_sigs(queries.select(query_id, query_vec), query_vec)
         .select(query_id, F.explode(F.array(*probe_structs)).alias("probe"))
@@ -170,7 +163,6 @@ def lsh_top_k(
     dim: int,
     bits_per_table: int = 8,
     n_tables: int = 8,
-    multiprobe: bool = True,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
@@ -181,8 +173,8 @@ def lsh_top_k(
 
     Classic (b, L) scheme: L independent tables of b hyperplane-sign
     bits; a corpus vector is a candidate for a query if any table's
-    signatures collide. With ``multiprobe`` the query also probes every
-    1-bit-flip of its signature (b extra probes/table), trading probe
+    signatures collide. The query also probes every 1-bit-flip of its
+    signature (b extra probes/table, multi-probe), trading probe
     fan-out for fewer tables. Exact cosine is then computed on
     candidates only, so returned scores are exact — the approximation
     is only which candidates are seen (recall < 1 by contract).
@@ -200,7 +192,6 @@ def lsh_top_k(
         dim,
         bits_per_table=bits_per_table,
         n_tables=n_tables,
-        multiprobe=multiprobe,
         corpus_id=corpus_id,
         corpus_vec=corpus_vec,
         query_id=query_id,

@@ -80,7 +80,6 @@ def winnowing_fingerprints(
     id_col: str,
     k: int = 8,
     window: int = 4,
-    portable: bool = False,
 ) -> DataFrame:
     """Winnowing document fingerprints (rolling-hash selection, the
     MOSS scheme): hash every k-char gram of the normalized text, slide
@@ -93,17 +92,9 @@ def winnowing_fingerprints(
     via transform over a position sequence indexing a materialized hash
     array (O(len*window)).
 
-    ``portable=True`` switches the gram hash from xxhash64 (fastest,
-    JVM-only) to an md5-derived 60-bit value that external SQL engines
-    can recompute — the winnowing guarantee is hash-agnostic.
+    The gram hash is an md5-derived 60-bit value that external SQL
+    engines can recompute — the winnowing guarantee is hash-agnostic.
     """
-    if portable:
-        def gram_hash(g):
-            return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-    else:
-        def gram_hash(g):
-            return F.xxhash64(g)
-
     norm = df.select(
         F.col(id_col).alias("doc_id"), normalize_text(F.col(text_col)).alias("ntext")
     )
@@ -115,7 +106,9 @@ def winnowing_fingerprints(
             F.sequence(
                 F.lit(1), F.greatest(F.length("ntext") - F.lit(k - 1), F.lit(1))
             ),
-            lambda i: gram_hash(F.col("ntext").substr(i, F.lit(k))),
+            lambda i: F.conv(
+                F.substring(F.md5(F.col("ntext").substr(i, F.lit(k))), 1, 15), 16, 10
+            ).cast("long"),
         ).alias("gram_hashes"),
     )
     mins = with_hashes.select(

@@ -5,234 +5,14 @@ query (SURVEY.md §2 inventory + the LLM-data-pipeline extensions).
 ``__spark_entry__.py`` adapts it to the driver contract.
 """
 
+import importlib
+import pkgutil
+
 from .registry import REGISTRY, QuerySpec, query
 
 # import for side effect: each module registers its queries
-from . import reference  # noqa: E402,F401
-from . import reference_infra  # noqa: E402,F401
-from . import relational  # noqa: E402,F401
-from . import relational2  # noqa: E402,F401
-from . import relational3  # noqa: E402,F401
-from . import semistructured  # noqa: E402,F401
-from . import tpch_wave  # noqa: E402,F401
-from . import tpch_wave2  # noqa: E402,F401
-from . import windows_analytic  # noqa: E402,F401
-from . import windows2  # noqa: E402,F401
-from . import llm_text  # noqa: E402,F401
-from . import llm_text2  # noqa: E402,F401
-from . import llm_dedup  # noqa: E402,F401
-from . import llm_similarity  # noqa: E402,F401
-from . import streaming_q  # noqa: E402,F401
-from . import formats_q  # noqa: E402,F401
-from . import multimodal_q  # noqa: E402,F401
-from . import analytics  # noqa: E402,F401
-from . import analytics2  # noqa: E402,F401
-from . import analytics3  # noqa: E402,F401
-from . import analytics4  # noqa: E402,F401
-from . import analytics5  # noqa: E402,F401
-from . import analytics6  # noqa: E402,F401
-from . import analytics7  # noqa: E402,F401
-from . import analytics8  # noqa: E402,F401
-from . import analytics9  # noqa: E402,F401
-from . import analytics10  # noqa: E402,F401
-from . import sqltext  # noqa: E402,F401
-from . import streaming_scd  # noqa: E402,F401
-from . import analytics11  # noqa: E402,F401
-from . import tpch_wave3  # noqa: E402,F401
-from . import analytics12  # noqa: E402,F401
-from . import analytics13  # noqa: E402,F401
-from . import analytics14  # noqa: E402,F401
-from . import analytics15  # noqa: E402,F401
-from . import analytics16  # noqa: E402,F401
-from . import llm_text3  # noqa: E402,F401
-from . import formats_q2  # noqa: E402,F401
-from . import analytics17  # noqa: E402,F401
-from . import analytics18  # noqa: E402,F401
-from . import llm_similarity2  # noqa: E402,F401
-from . import llm_similarity3  # noqa: E402,F401
-from . import analytics20  # noqa: E402,F401
-from . import analytics19  # noqa: E402,F401
-from . import sqltext2  # noqa: E402,F401
-from . import llm_text4  # noqa: E402,F401
-from . import analytics21  # noqa: E402,F401
-from . import analytics22  # noqa: E402,F401
-from . import analytics23  # noqa: E402,F401
-from . import analytics24  # noqa: E402,F401
-from . import analytics25  # noqa: E402,F401
-from . import analytics26  # noqa: E402,F401
-from . import analytics27  # noqa: E402,F401
-from . import analytics28  # noqa: E402,F401
-from . import analytics29  # noqa: E402,F401
-from . import analytics30  # noqa: E402,F401
-from . import analytics31  # noqa: E402,F401
-from . import analytics32  # noqa: E402,F401
-from . import analytics33  # noqa: E402,F401
-from . import analytics34  # noqa: E402,F401
-from . import analytics35  # noqa: E402,F401
-from . import analytics36  # noqa: E402,F401
-from . import analytics37  # noqa: E402,F401
-from . import analytics38  # noqa: E402,F401
-from . import analytics39  # noqa: E402,F401
-from . import analytics40  # noqa: E402,F401
-from . import analytics41  # noqa: E402,F401
-from . import analytics42  # noqa: E402,F401
-from . import analytics43  # noqa: E402,F401
-from . import analytics44  # noqa: E402,F401
-from . import analytics45  # noqa: E402,F401
-from . import analytics46  # noqa: E402,F401
-from . import analytics47  # noqa: E402,F401
-from . import analytics48  # noqa: E402,F401
-from . import analytics49  # noqa: E402,F401
-from . import analytics50  # noqa: E402,F401
-from . import analytics51  # noqa: E402,F401
-from . import analytics52  # noqa: E402,F401
-from . import analytics53  # noqa: E402,F401
-from . import analytics54  # noqa: E402,F401
-from . import analytics55  # noqa: E402,F401
-from . import analytics56  # noqa: E402,F401
-from . import analytics57  # noqa: E402,F401
-from . import analytics58  # noqa: E402,F401
-from . import analytics59  # noqa: E402,F401
-from . import analytics60  # noqa: E402,F401
-from . import analytics61  # noqa: E402,F401
-from . import analytics62  # noqa: E402,F401
-from . import analytics63  # noqa: E402,F401
-from . import analytics64  # noqa: E402,F401
-from . import analytics65  # noqa: E402,F401
-from . import analytics66  # noqa: E402,F401
-from . import analytics67  # noqa: E402,F401
-from . import analytics68  # noqa: E402,F401
-from . import analytics69  # noqa: E402,F401
-from . import analytics70  # noqa: E402,F401
-from . import analytics71  # noqa: E402,F401
-from . import analytics72  # noqa: E402,F401
-from . import analytics73  # noqa: E402,F401
-from . import analytics74  # noqa: E402,F401
-from . import analytics75  # noqa: E402,F401
-from . import analytics76  # noqa: E402,F401
-from . import analytics77  # noqa: E402,F401
-from . import analytics78  # noqa: E402,F401
-from . import analytics79  # noqa: E402,F401
-from . import analytics80  # noqa: E402,F401
-from . import analytics81  # noqa: E402,F401
-from . import analytics82  # noqa: E402,F401
-from . import analytics83  # noqa: E402,F401
-from . import analytics84  # noqa: E402,F401
-from . import analytics85  # noqa: E402,F401
-from . import analytics86  # noqa: E402,F401
-from . import analytics87  # noqa: E402,F401
-from . import analytics88  # noqa: E402,F401
-from . import analytics89  # noqa: E402,F401
-from . import analytics90  # noqa: E402,F401
-from . import analytics91  # noqa: E402,F401
-from . import analytics92  # noqa: E402,F401
-from . import analytics93  # noqa: E402,F401
-from . import analytics94  # noqa: E402,F401
-from . import analytics95  # noqa: E402,F401
-from . import analytics96  # noqa: E402,F401
-from . import analytics97  # noqa: E402,F401
-from . import analytics98  # noqa: E402,F401
-from . import analytics99  # noqa: E402,F401
-from . import analytics100  # noqa: E402,F401
-from . import analytics101  # noqa: E402,F401
-from . import analytics102  # noqa: E402,F401
-from . import analytics103  # noqa: E402,F401
-from . import analytics104  # noqa: E402,F401
-from . import analytics105  # noqa: E402,F401
-from . import analytics106  # noqa: E402,F401
-from . import analytics107  # noqa: E402,F401
-from . import analytics108  # noqa: E402,F401
-from . import analytics109  # noqa: E402,F401
-from . import analytics110  # noqa: E402,F401
-from . import analytics111  # noqa: E402,F401
-from . import analytics112  # noqa: E402,F401
-from . import analytics113  # noqa: E402,F401
-from . import analytics114  # noqa: E402,F401
-from . import analytics115  # noqa: E402,F401
-from . import analytics116  # noqa: E402,F401
-from . import analytics117  # noqa: E402,F401
-from . import analytics118  # noqa: E402,F401
-from . import analytics119  # noqa: E402,F401
-from . import analytics120  # noqa: E402,F401
-from . import analytics121  # noqa: E402,F401
-from . import analytics122  # noqa: E402,F401
-from . import analytics123  # noqa: E402,F401
-from . import analytics124  # noqa: E402,F401
-from . import analytics125  # noqa: E402,F401
-from . import analytics126  # noqa: E402,F401
-from . import analytics127  # noqa: E402,F401
-from . import analytics128  # noqa: E402,F401
-from . import analytics129  # noqa: E402,F401
-from . import analytics130  # noqa: E402,F401
-from . import analytics131  # noqa: E402,F401
-from . import analytics132  # noqa: E402,F401
-from . import analytics133  # noqa: E402,F401
-from . import analytics134  # noqa: E402,F401
-from . import analytics135  # noqa: E402,F401
-from . import analytics136  # noqa: E402,F401
-from . import analytics137  # noqa: E402,F401
-from . import analytics138  # noqa: E402,F401
-from . import analytics139  # noqa: E402,F401
-from . import analytics140  # noqa: E402,F401
-from . import analytics141  # noqa: E402,F401
-from . import analytics142  # noqa: E402,F401
-from . import analytics143  # noqa: E402,F401
-from . import analytics144  # noqa: E402,F401
-from . import analytics145  # noqa: E402,F401
-from . import analytics146  # noqa: E402,F401
-from . import analytics147  # noqa: E402,F401
-from . import analytics148  # noqa: E402,F401
-from . import analytics149  # noqa: E402,F401
-from . import analytics150  # noqa: E402,F401
-from . import analytics151  # noqa: E402,F401
-from . import analytics152  # noqa: E402,F401
-from . import analytics153  # noqa: E402,F401
-from . import analytics154  # noqa: E402,F401
-from . import analytics155  # noqa: E402,F401
-from . import analytics156  # noqa: E402,F401
-from . import analytics157  # noqa: E402,F401
-from . import analytics158  # noqa: E402,F401
-from . import analytics159  # noqa: E402,F401
-from . import analytics160  # noqa: E402,F401
-from . import analytics161  # noqa: E402,F401
-from . import analytics162  # noqa: E402,F401
-from . import analytics163  # noqa: E402,F401
-from . import analytics164  # noqa: E402,F401
-from . import analytics165  # noqa: E402,F401
-from . import analytics166  # noqa: E402,F401
-from . import analytics167  # noqa: E402,F401
-from . import analytics168  # noqa: E402,F401
-from . import analytics169  # noqa: E402,F401
-from . import analytics170  # noqa: E402,F401
-from . import analytics171  # noqa: E402,F401
-from . import analytics172  # noqa: E402,F401
-from . import analytics173  # noqa: E402,F401
-from . import analytics174  # noqa: E402,F401
-from . import analytics175  # noqa: E402,F401
-from . import analytics176  # noqa: E402,F401
-from . import analytics177  # noqa: E402,F401
-from . import analytics178  # noqa: E402,F401
-from . import analytics179  # noqa: E402,F401
-from . import analytics180  # noqa: E402,F401
-from . import analytics181  # noqa: E402,F401
-from . import analytics182  # noqa: E402,F401
-from . import analytics183  # noqa: E402,F401
-from . import analytics184  # noqa: E402,F401
-from . import analytics185  # noqa: E402,F401
-from . import analytics186  # noqa: E402,F401
-from . import analytics187  # noqa: E402,F401
-from . import analytics188  # noqa: E402,F401
-from . import analytics189  # noqa: E402,F401
-from . import analytics190  # noqa: E402,F401
-from . import analytics191  # noqa: E402,F401
-from . import analytics192  # noqa: E402,F401
-from . import analytics193  # noqa: E402,F401
-from . import analytics194  # noqa: E402,F401
-from . import analytics195  # noqa: E402,F401
-from . import analytics196  # noqa: E402,F401
-from . import analytics197  # noqa: E402,F401
-from . import analytics198  # noqa: E402,F401
-from . import analytics199  # noqa: E402,F401
-from . import analytics200  # noqa: E402,F401
+for _mod in pkgutil.iter_modules(__path__):
+    if _mod.name != "registry":
+        importlib.import_module(f"{__name__}.{_mod.name}")
 
 __all__ = ["REGISTRY", "QuerySpec", "query"]

@@ -261,7 +261,6 @@ def stats_cusum_arl_calibration(
     )
 
     def cusum_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # self-contained closure: only pandas + locals (verify-skill NOTE)
         # rows arrive pre-sorted by i; ints are exact
         k = int(pdf["k"].iloc[0])
         h = int(pdf["h"].iloc[0])

@@ -1076,7 +1076,6 @@ def dist_two_choice_load_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- pass@k estimator
 
 _PAK_N = 20
-_PAK_KS = (1, 5, 10)
 
 
 def _binom(n: int, k: int) -> int:

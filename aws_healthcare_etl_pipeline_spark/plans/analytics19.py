@@ -198,7 +198,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_panel_docs")
     )
     pred = simhash_near_duplicates(
-        panel, "text", "doc_id", max_hamming=AGREE_HAMMING, portable=True
+        panel, "text", "doc_id", max_hamming=AGREE_HAMMING
     ).select("id_a", "id_b")
     pred_stats = (
         pred.join(

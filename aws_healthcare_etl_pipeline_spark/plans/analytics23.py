@@ -224,7 +224,6 @@ def orders_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------- cosine pair histogram
 
 COS_PANEL = 500  # pair-histogram eval panel target size
-COS_BINS = 20  # histogram bins over [-1, 1): floor(cos * 10) in -10..9
 COS_SCALE = 1_048_576  # 2^20 integer lattice (see emb_kmeans)
 _COS_DIM = 64
 

@@ -101,7 +101,6 @@ def inventory_capped_running_balance(spark: SparkSession, sf_dir: str) -> DataFr
     cap, start = _CAP, _START
 
     def clamp_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # self-contained closure: only pandas + locals (verify-skill NOTE)
         # rows arrive pre-sorted by ts (keyed_pandas_scan contract)
         bal, ncap, nflr = start, 0, 0
         for d in pdf["delta"].tolist():

@@ -16,10 +16,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from .analytics30 import _int_dot
 from .registry import query
 
 # --------------------------------------------- zone-map skipping audit
@@ -126,14 +127,6 @@ _NDCG_QUERIES = 10  # vec_id < 10 are queries; the rest are the corpus
 _NDCG_K = 5
 
 
-def _ndcg_int_dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 @query(
     "sim_ndcg_retrieval_eval",
     oracle=f"""
@@ -221,7 +214,7 @@ def sim_ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qlabel",
         "vec_id",
         "label",
-        _ndcg_int_dot(F.col("qv"), F.col("cv")).alias("score"),
+        _int_dot(F.col("qv"), F.col("cv")).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), "vec_id")
     ranked = scored.withColumn("r", F.row_number().over(w)).filter(

@@ -25,7 +25,6 @@ from .registry import query
 
 # ------------------------------------------------ SAX motifs
 
-_SAX_WORD = 3
 _SAX_TOP = 10
 
 

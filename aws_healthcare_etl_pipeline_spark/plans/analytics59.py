@@ -171,7 +171,6 @@ def bandit_epsilon_greedy_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     every = _EXPLORE_EVERY
 
     def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        # self-contained closure: pandas/stdlib only (verify-skill NOTE);
         # rows arrive pre-sorted by (ts, event_id)
         cnt = {a: 0 for a in arms}
         tot = {a: 0 for a in arms}

@@ -290,7 +290,6 @@ def events_heavy_hitters_mg_replay(
     )
 
     def mg_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # self-contained closure: only pandas + locals (verify-skill NOTE)
         # rows arrive pre-sorted by (ts, event_id)
         k1, c1, k2, c2 = "", 0, "", 0
         n = 0

@@ -114,7 +114,6 @@ def forecast_holt_linear_replay(
     )
 
     def holt_scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # self-contained closure: only pandas + locals (verify-skill NOTE)
         # rows arrive pre-sorted by day; division must TRUNCATE to match
         # Spark div / DuckDB // (Python // floors)
         def tdiv2(a: int) -> int:

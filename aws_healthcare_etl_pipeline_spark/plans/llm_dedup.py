@@ -199,7 +199,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         simhash_near_duplicates(
             corpus, "text", "doc_id",
-            max_hamming=SIMHASH_MAX_HAMMING, portable=True,
+            max_hamming=SIMHASH_MAX_HAMMING,
         )
         .withColumn("hamming", F.col("hamming").cast("int"))
         .orderBy("id_a", "id_b")

@@ -105,8 +105,7 @@ def _sq_ctes(n_queries: int, k: int) -> str:
     "query batch. Self-exclusion (vec_id <> query_id) is correct "
     "here BY CONTRACT because the queries are drawn from the corpus "
     "id space (first 10 vectors); with a disjoint query id space "
-    "drop the predicate (the pq_top_k exclude_self discussion "
-    "applies).",
+    "drop the predicate.",
 )
 def sim_sq_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

@@ -258,7 +258,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import winnowing_fingerprints
 
     docs = load_table(spark, sf_dir, "documents")
-    fps = winnowing_fingerprints(docs, "text", "doc_id", portable=True)
+    fps = winnowing_fingerprints(docs, "text", "doc_id")
     return (
         fps.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_fingerprints"))

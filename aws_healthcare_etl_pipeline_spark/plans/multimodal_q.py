@@ -48,7 +48,7 @@ def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The fake decode kernel derives its 8x8 "image" from md5(payload)
-# repeated 4x (operators/multimodal.py::decode_image_stub), so every
+# repeated 4x (operators/multimodal.py::decode_image, fake=True), so every
 # downstream feature is an arithmetic function of the 16 digest bytes —
 # which SQL engines can recompute from md5 hex. Shared fragment:
 # byte i of the digest parsed from hex chars 2i+1, 2i+2.

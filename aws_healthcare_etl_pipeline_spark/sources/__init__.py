@@ -1,14 +1,2 @@
-from .csv_ingest import IngestConfig, ingest_csv, resolve_source_path
-from .catalog import register_parquet_table, refresh_partitions
-from .tables import TABLE_NAMES, load_table, register_views
-
-__all__ = [
-    "IngestConfig",
-    "ingest_csv",
-    "resolve_source_path",
-    "register_parquet_table",
-    "refresh_partitions",
-    "TABLE_NAMES",
-    "load_table",
-    "register_views",
-]
+"""CSV ingest, partitioned sinks, catalog registration and table
+loaders; import the submodules directly."""

@@ -21,18 +21,18 @@ def write_bucketed_table(
     bucket_cols: Sequence[str],
     num_buckets: int = 8,
     sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
+    """Persist as a bucketed (and optionally sorted) managed table,
+    replacing any existing one."""
+    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
+    spark: SparkSession, left_table: str, right_table: str, on: str
 ) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — planner
+    """Inner-join two same-bucketed tables on their bucket key — planner
     elides both shuffles (verify with .explain: no Exchange)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
+    return spark.table(left_table).join(spark.table(right_table), on)

@@ -21,9 +21,9 @@ def register_parquet_table(
     database: str,
     table: str,
     location: str,
-    partitioned_by: str | None = "ingest_date",
 ) -> str:
-    """CREATE DATABASE/TABLE over an existing partitioned parquet dir.
+    """CREATE DATABASE/TABLE over an existing ``ingest_date``-partitioned
+    parquet dir.
 
     Schema is discovered from the files (crawler parity); the partition
     column must be listed explicitly for an external hive-layout table.
@@ -37,14 +37,11 @@ def register_parquet_table(
     data_cols = [
         f"`{f.name}` {f.dataType.simpleString()}"
         for f in df.schema.fields
-        if f.name != partitioned_by
+        if f.name != "ingest_date"
     ]
-    partition_clause = ""
-    if partitioned_by:
-        partition_clause = f" PARTITIONED BY (`{partitioned_by}` string)"
     spark.sql(
         f"CREATE TABLE {fq} ({', '.join(data_cols)}) USING parquet"
-        f"{partition_clause} LOCATION '{location}'"
+        f" PARTITIONED BY (`ingest_date` string) LOCATION '{location}'"
     )
     refresh_partitions(spark, fq)
     return fq

@@ -22,13 +22,13 @@ def read_jsonl(
     return reader.json(path)
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").json(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
+def write_orc(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").orc(path)

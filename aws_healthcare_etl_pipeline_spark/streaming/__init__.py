@@ -1,10 +1,2 @@
-from .ingest_stream import start_incremental_ingest
-from .stateful import running_user_totals
-from .windows import sessionize, tumbling_counts
-
-__all__ = [
-    "start_incremental_ingest",
-    "running_user_totals",
-    "sessionize",
-    "tumbling_counts",
-]
+"""Structured Streaming ingest, stateful and windowed operators;
+import the submodules directly."""

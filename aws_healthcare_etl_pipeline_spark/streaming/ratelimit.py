@@ -69,8 +69,6 @@ def token_bucket_admissions(
     cap = int(cap_milli)
     refill = int(refill_period_us)
 
-    # Self-contained closure (pandas only) — see operators/multimodal.py
-    # NOTE on cloudpickle and worker imports.
     def update(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],

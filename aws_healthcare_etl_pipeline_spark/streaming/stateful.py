@@ -46,8 +46,6 @@ def running_user_totals(events: DataFrame, key_col: str = "user_id") -> DataFram
     Output mode must be 'update'.
     """
 
-    # Self-contained closure (pandas only) — see operators/multimodal.py
-    # NOTE on cloudpickle and worker imports.
     def update(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],

@@ -3,9 +3,11 @@
 
 The session is the driver's, not ours: a plain SparkSession on
 local[16] with 8g and the hostile America/New_York timezone, so any
-conf the engine needs must come from __spark_entry__._prepared. Run it
-from a cwd outside the repo: that catches Pandas-UDF closures that
-pickle by reference to a module the workers cannot import.
+conf the engine needs must come from __spark_entry__._prepared. The
+script runs from a fresh temp dir and strips repo paths from
+PYTHONPATH before the session starts, so Python workers cannot import
+the package: that catches closures that pickle by reference to a
+module the workers cannot import.
 
 It calls entry(spark), then runs each chosen queries() entry and its
 oracle_sql() through DuckDB over the same parquet, comparing with
@@ -15,8 +17,8 @@ writes one record per query (rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err); exits 1 if any query fails.
 
 Usage:
-  cd /tmp && python <repo>/scripts/driver_sim.py [--sf DIR] q1 q2 ...
-  cd /tmp && python <repo>/scripts/driver_sim.py --all --out ds.json
+  python scripts/driver_sim.py [--sf DIR] q1 q2 ...
+  python scripts/driver_sim.py --all --out ds.json
 """
 
 from __future__ import annotations
@@ -24,7 +26,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -77,21 +81,25 @@ def check(fn, oracle: str | None, spark, duck, sf: str, name: str) -> dict:
     return rec
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--sf", default=SF_CORRECTNESS, metavar="DIR")
-    ap.add_argument("--all", action="store_true", help="every queries() entry")
-    ap.add_argument("--out", default=None, metavar="FILE")
-    ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
+def _isolate_from_repo() -> str:
+    """chdir to a fresh temp dir and drop repo entries from PYTHONPATH,
+    so the session's Python workers cannot import the package."""
+    kept = [
+        p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.commonpath([os.path.abspath(p), REPO]) != REPO
+    ]
+    if kept:
+        os.environ["PYTHONPATH"] = os.pathsep.join(kept)
+    else:
+        os.environ.pop("PYTHONPATH", None)
+    tmp = tempfile.mkdtemp(prefix="driver_sim_")
+    os.chdir(tmp)
+    return tmp
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    names = list(qs) if args.all else args.names
-    unknown = [n for n in names if n not in qs]
-    if unknown or not names:
-        ap.error(f"unknown queries: {unknown}" if unknown else "name queries or pass --all")
 
+def run(args, names: list[str], qs, oracles) -> list[str]:
+    """Build the driver-like session, run entry() and every named
+    query against its oracle; returns the failing names."""
     spark = (
         SparkSession.builder.master("local[16]")
         .appName("driver_sim")
@@ -135,6 +143,37 @@ def main() -> None:
         f"{fails} ({time.perf_counter() - t_all:.0f}s)",
         flush=True,
     )
+    for q in spark.streams.active:
+        q.stop()
+    spark.stop()
+    return fails
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--sf", default=SF_CORRECTNESS, metavar="DIR")
+    ap.add_argument("--all", action="store_true", help="every queries() entry")
+    ap.add_argument("--out", default=None, metavar="FILE")
+    ap.add_argument("names", nargs="*")
+    args = ap.parse_args()
+    args.sf = os.path.abspath(args.sf)
+    if args.out:
+        args.out = os.path.abspath(args.out)
+
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    names = list(qs) if args.all else args.names
+    unknown = [n for n in names if n not in qs]
+    if unknown or not names:
+        ap.error(f"unknown queries: {unknown}" if unknown else "name queries or pass --all")
+
+    tmp = _isolate_from_repo()
+    print(f"cwd: {tmp} (PYTHONPATH={os.environ.get('PYTHONPATH', '')!r})")
+    try:
+        fails = run(args, names, qs, oracles)
+    finally:
+        os.chdir(REPO)
+        shutil.rmtree(tmp, ignore_errors=True)
     sys.exit(1 if fails else 0)
 
 

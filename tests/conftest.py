@@ -18,8 +18,7 @@ def spark():
     s = get_spark(
         app_name="tests",
         master="local[8]",
-        shuffle_partitions=8,
-        extra_conf={"spark.driver.memory": "4g"},
+        extra_conf={"spark.driver.memory": "4g", "spark.sql.shuffle.partitions": "8"},
     )
     yield s
 

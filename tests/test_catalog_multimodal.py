@@ -6,7 +6,7 @@ import pytest
 
 from aws_healthcare_etl_pipeline_spark.operators.multimodal import (
     attach_binary_payload,
-    decode_image_stub,
+    decode_image,
     extract_features,
 )
 from aws_healthcare_etl_pipeline_spark.sources.catalog import (
@@ -45,11 +45,11 @@ def test_catalog_register_and_recover(spark, tmp_path):
 def test_decode_contract():
     # unknown magic (JPEG/PNG-class payloads) still needs a codec: loud error
     with pytest.raises(ValueError):
-        decode_image_stub(b"payload")
-    img = decode_image_stub(b"payload", fake=True)
+        decode_image(b"payload")
+    img = decode_image(b"payload", fake=True)
     assert img.shape == (8, 8)
     # deterministic across calls
-    assert (img == decode_image_stub(b"payload", fake=True)).all()
+    assert (img == decode_image(b"payload", fake=True)).all()
 
 
 def test_real_decode_ppm_bmp_roundtrip():
@@ -103,9 +103,9 @@ def test_extract_features_real_decode(spark):
 
 
 def test_extract_features_rejects_16bit_pnm(spark):
-    # The inline worker decoder must reject maxval > 255 exactly like
-    # decode_image (the source of truth) — a 16-bit P5 payload must
-    # raise, not silently mis-decode (advisor finding, round 4).
+    # The worker-side decode must reject maxval > 255 exactly like
+    # decode_image — a 16-bit P5 payload must raise, not silently
+    # mis-decode.
     import numpy as np
 
     from aws_healthcare_etl_pipeline_spark.operators.multimodal import (
@@ -126,7 +126,7 @@ def test_extract_features_rejects_16bit_pnm(spark):
 
 def test_perceptual_hash_real_and_fake(spark):
     # Real mode: phash from block-mean pooling must match a direct
-    # recomputation via decode_image (pins the inline decoder copy);
+    # recomputation via decode_image;
     # fake mode: exact integer threshold over the md5-derived pixels.
     import hashlib
 
