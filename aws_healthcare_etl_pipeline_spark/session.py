@@ -29,7 +29,8 @@ def get_spark(
       - ``autoBroadcastJoinThreshold`` raised to 64 MB: every dim table
         in a TPC-H-ish star schema broadcast-joins instead of shuffling
         the fact table.
-      - ``maxPartitionBytes`` 128 MB keeps scan tasks memory-bounded.
+      - ``maxPartitionBytes`` 128 MB keeps scan tasks memory-bounded,
+        and is the file size ingest writes (sources/filesize.py).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -42,6 +43,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        # Read only by MSCK REPAIR / recoverPartitions: with it on, every
+        # catalog refresh of a table past spark.rdd.parallelListingThreshold
+        # (10) partitions runs a Spark job listing ALL partitions' files to
+        # store numFiles/totalSize, which no plan here reads.
+        .config("spark.sql.hive.gatherFastStats", "false")
         # InferFiltersFromGenerate synthesizes `size(arr) > 0` under
         # every explode(arr); for computed arrays the pushed-down filter
         # re-inlines the ENTIRE array expression (attributes become

@@ -9,6 +9,17 @@ Spark-native: register the parquet location as an external table once;
 new partitions are picked up synchronously with
 ``spark.catalog.recoverPartitions`` (= ``MSCK REPAIR TABLE``) — the
 15-minute crawler latency disappears.
+
+What a refresh costs: a driver-side listing of the partition
+directories under the table location, then catalog calls registering
+them (already registered ones are skipped). No Spark job: ``get_spark`` sets
+``spark.sql.hive.gatherFastStats=false``, so the repair does not re-list
+every partition's files to store per-partition numFiles/totalSize
+(with the default it does, as a Spark job, once the table passes
+``spark.rdd.parallelListingThreshold`` = 10 partitions). Those figures
+feed no plan: scans of the table list the pruned partitions' files
+themselves. The listing of partition directories still grows with the
+partition count.
 """
 
 from __future__ import annotations

@@ -8,10 +8,14 @@ Reference behavior being reproduced (cited for parity checking):
   - append write partitioned by ingest_date .... glue_job_script.py:48-53
 
 Deliberate departures, for 100 TB scale (SURVEY.md §4):
-  - ``repartition(1)`` (glue_job_script.py:49) is NOT the default. Output
-    file count is a knob: ``output_files=None`` lets AQE/source
-    parallelism decide (right at scale), an int reproduces the
-    reference's demo behavior.
+  - ``repartition(1)`` (glue_job_script.py:49) is NOT the default.
+    ``output_files=None`` coalesces, with no shuffle, to one file per
+    ``spark.sql.files.maxPartitionBytes`` of estimated input
+    (``filesize.target_file_count``); an int reproduces the reference's
+    demo behavior. A write with no exchange gets no AQE sizing: without
+    the coalesce, every input split would be its own small file.
+    The trade-off: an input under one target size is parsed and
+    written by one task.
   - ``inferSchema=True`` costs an extra full pass over the CSV; an
     explicit ``schema`` is the fast path and is mandatory for the
     streaming variant (streaming/ingest_stream.py).
@@ -28,6 +32,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .filesize import target_file_count
 
 
 def utc_ingest_date(now: dt.datetime | None = None) -> str:
@@ -63,7 +69,7 @@ class IngestConfig:
     object_key: str = ""                # set -> ingest just that object
     schema: T.StructType | None = None  # None -> inferSchema (reference parity)
     ingest_date: str | None = None      # None -> driver-time UTC today
-    output_files: int | None = None     # None -> let Spark/AQE size output
+    output_files: int | None = None     # None -> one file per maxPartitionBytes of input
     mode: str = "append"                # "append" (parity) | "overwrite_partition"
     extra_read_options: dict[str, str] = field(default_factory=dict)
 
@@ -99,10 +105,12 @@ def transform(df: DataFrame, ingest_date: str) -> DataFrame:
 
 
 def write_partitioned(df: DataFrame, cfg: IngestConfig) -> None:
-    if cfg.output_files is not None:
-        # reference parity (repartition(1), glue_job_script.py:49); at
-        # scale prefer coalesce: no shuffle, just fewer output tasks.
-        df = df.coalesce(cfg.output_files)
+    # coalesce, not the reference's repartition(1) (glue_job_script.py:49):
+    # no shuffle, just fewer output tasks. Each output file costs a task
+    # plus its commit and per-file filesystem calls, so a small landing
+    # is written as one file rather than one per input split.
+    n = cfg.output_files if cfg.output_files is not None else target_file_count(df)
+    df = df.coalesce(n)
     writer = df.write.partitionBy("ingest_date")
     if cfg.mode == "overwrite_partition":
         # idempotent re-run: replaces only the partitions present in df

@@ -5,9 +5,17 @@ The reference forces ONE output file per run — demo-friendly, but a
 single write task at any real scale. Here the writer targets a file
 size: it estimates the dataframe's on-disk footprint from Catalyst
 statistics (parquet scans carry accurate sizeInBytes; post-filter
-estimates are heuristic but the right order of magnitude) and
-coalesces to ceil(size / target). Coalesce, not repartition: narrowing
-the final stage doesn't add a shuffle.
+estimates are heuristic but the right order of magnitude) and asks for
+ceil(size / target) files (``target_file_count``).
+
+Two forms use that count:
+  - ingest (``csv_ingest.write_partitioned``) coalesces to it, with no
+    shuffle, at the session's ``spark.sql.files.maxPartitionBytes``:
+    a landing writes one file per target size of input instead of one
+    file per input split;
+  - ``write_sized_parquet`` stays the shuffle-based compaction utility:
+    a round-robin repartition to the count, which evens out file sizes
+    at the price of one shuffle of the output rows.
 """
 
 from __future__ import annotations
@@ -17,6 +25,8 @@ import math
 from pyspark.sql import DataFrame
 
 DEFAULT_TARGET_MB = 128
+_MB = 1024 * 1024
+_MAX_COUNT = 2**31 - 1  # partition counts are Java ints
 
 
 def estimated_size_bytes(df: DataFrame) -> int:
@@ -24,14 +34,29 @@ def estimated_size_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def target_file_count(df: DataFrame, target_mb: int = DEFAULT_TARGET_MB) -> int:
+def target_file_count(df: DataFrame, target_mb: float | None = None) -> int:
+    """ceil(estimated size / target) files, at least one; ``target_mb``
+    None -> the session's ``spark.sql.files.maxPartitionBytes``.
+
+    A plan Catalyst cannot size (an RDD-backed DataFrame reports
+    Long.MaxValue) would ask for ~7e10 files, more than coalesce or
+    repartition accept (a Java int). Such a count is clamped to the
+    input partition count: one file per input partition, as an unsized
+    write produces.
+    """
+    if target_mb is None:
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        target_mb = conf.filesMaxPartitionBytes() / _MB
     est = estimated_size_bytes(df)
     # For scan-shaped plans the estimate IS on-disk bytes; for derived
     # plans it's an in-memory overestimate. No correction factor: both
     # cases then err toward MORE, smaller files — at scale that costs a
     # few extra tasks, while undershooting produces the giant single
     # files this writer exists to prevent.
-    return max(1, math.ceil(est / (target_mb * 1024 * 1024)))
+    n = max(1, math.ceil(est / (target_mb * _MB)))
+    if n > _MAX_COUNT:
+        return df.rdd.getNumPartitions()
+    return n
 
 
 def write_sized_parquet(

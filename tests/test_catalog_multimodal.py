@@ -42,6 +42,41 @@ def test_catalog_register_and_recover(spark, tmp_path):
     spark.sql("DROP DATABASE etl_test_db")
 
 
+def test_refresh_runs_no_spark_job_past_listing_threshold(spark, tmp_path):
+    """Past spark.rdd.parallelListingThreshold (10) partitions a refresh
+    with gatherFastStats on runs a job listing every partition's files;
+    get_spark turns that off, so a refresh of a 12-partition table runs
+    none and still makes the new partition queryable."""
+    from pyspark.sql import functions as F
+
+    location = str(tmp_path / "t")
+
+    def land(first, n):
+        (
+            spark.range(first, first + n)
+            .withColumn("ingest_date", F.format_string("2026-07-%02d", F.col("id") + 1))
+            .write.mode("append")
+            .partitionBy("ingest_date")
+            .parquet(location)
+        )
+
+    land(0, 11)
+    fq = register_parquet_table(spark, "etl_refresh_db", "t", location)
+    land(11, 1)
+    sc = spark.sparkContext
+    sc.setJobGroup("refresh_12", "refresh")
+    try:
+        refresh_partitions(spark, fq)
+        jobs = sc.statusTracker().getJobIdsForGroup("refresh_12")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    assert spark.table(fq).where("ingest_date = '2026-07-12'").count() == 1
+    assert spark.table(fq).count() == 12
+    spark.sql(f"DROP TABLE {fq}")
+    spark.sql("DROP DATABASE etl_refresh_db")
+
+
 def test_decode_contract():
     # unknown magic (JPEG/PNG-class payloads) still needs a codec: loud error
     with pytest.raises(ValueError):

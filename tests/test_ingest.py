@@ -12,8 +12,15 @@ from aws_healthcare_etl_pipeline_spark.sources.csv_ingest import (
     IngestConfig,
     ingest_csv,
     is_csv_object,
+    read_csv,
     resolve_source_path,
+    transform,
     utc_ingest_date,
+    write_partitioned,
+)
+from aws_healthcare_etl_pipeline_spark.sources.filesize import (
+    target_file_count,
+    write_sized_parquet,
 )
 
 SAMPLE = """patient_id,encounter_id,diagnosis,amount
@@ -154,12 +161,81 @@ def test_output_files_one_writes_single_parquet(spark, workspace):
 
     def parquet_files(cfg):
         ingest_csv(spark, cfg)
-        part = os.path.join(cfg.output_path, "ingest_date=2026-02-05")
-        return [f for f in os.listdir(part) if f.endswith(".parquet")]
+        return _parquet_files(os.path.join(cfg.output_path, "ingest_date=2026-02-05"))
 
     base = dict(raw_root=str(raw), ingest_date="2026-02-05")
-    # control: three landed files are read as three splits, so three files
-    assert len(parquet_files(IngestConfig(curated_root=str(curated / "a"), **base))) > 1
+    # control: the default also writes one file here, because the three
+    # landed files (three splits) are far under one maxPartitionBytes
+    assert len(parquet_files(IngestConfig(curated_root=str(curated / "a"), **base))) == 1
     one = IngestConfig(curated_root=str(curated / "b"), output_files=1, **base)
     assert len(parquet_files(one)) == 1
     assert spark.read.parquet(one.output_path).count() == 6
+
+
+def _parquet_files(path):
+    return [f for f in os.listdir(path) if f.endswith(".parquet")]
+
+
+def test_default_writes_one_file_per_max_partition_bytes(spark, tmp_path):
+    """With maxPartitionBytes lowered below the input, the default writes
+    target_file_count files: more than one, fewer than the input splits
+    (each ~4.2 KB file is two 4 KB splits), with no row or amount lost."""
+    raw = tmp_path / "raw"
+    (raw / "incoming").mkdir(parents=True)
+    rows = 0
+    cents = 0
+    for k in range(3):
+        lines = []
+        for i in range(165):
+            c = 100 * k + 7 * i + 5
+            lines.append(f"p-{k}{i:04d},e-{k}{i:04d},flu,{c // 100}.{c % 100:02d}\n")
+            cents += c
+        (raw / "incoming" / f"part{k}.csv").write_text(
+            "patient_id,encounter_id,diagnosis,amount\n" + "".join(lines)
+        )
+        rows += len(lines)
+    cfg = IngestConfig(
+        raw_root=str(raw), curated_root=str(tmp_path / "curated"), ingest_date="2026-02-06"
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        df = transform(read_csv(spark, cfg), cfg.ingest_date)
+        n = target_file_count(df)
+        splits = df.rdd.getNumPartitions()
+        write_partitioned(df, cfg)
+    finally:
+        spark.conf.set(key, saved)
+    assert 1 < n < splits
+    part = os.path.join(cfg.output_path, "ingest_date=2026-02-06")
+    assert len(_parquet_files(part)) == n
+    got = spark.read.parquet(cfg.output_path).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("amount").cast("decimal(18,2)")).alias("amount"),
+    ).first()
+    assert got.n == rows
+    assert int(got.amount * 100) == cents
+
+
+def test_unsized_rdd_frame_keeps_its_partitions(spark, tmp_path):
+    """An RDD-backed frame has no size estimate (Catalyst reports
+    Long.MaxValue): both writers keep one file per input partition
+    instead of asking Spark for ~7e10 partitions."""
+    rdd = spark.sparkContext.parallelize([(i, float(i)) for i in range(30)], 3)
+    df = spark.createDataFrame(rdd, "id long, amount double")
+    assert target_file_count(df) == 3
+
+    cfg = IngestConfig(
+        raw_root=str(tmp_path / "raw"),
+        curated_root=str(tmp_path / "curated"),
+        ingest_date="2026-02-07",
+    )
+    write_partitioned(transform(df, cfg.ingest_date), cfg)
+    assert len(_parquet_files(os.path.join(cfg.output_path, "ingest_date=2026-02-07"))) == 3
+    assert spark.read.parquet(cfg.output_path).count() == 30
+
+    out = str(tmp_path / "sized")
+    assert write_sized_parquet(df, out, mode="overwrite") == 3
+    assert len(_parquet_files(out)) == 3
+    assert spark.read.parquet(out).count() == 30

@@ -59,6 +59,23 @@ def test_incremental_ingest_exactly_once_per_file(spark, tmp_path):
     assert spark.read.parquet(cfg.output_path).count() == 3
 
 
+def test_incremental_ingest_writes_one_file_per_target_size(spark, tmp_path):
+    """The foreachBatch frame carries the micro-batch's size estimate, so
+    one AvailableNow batch over three small landed CSVs (three splits)
+    is written as a single parquet file."""
+    raw = tmp_path / "raw"
+    for k in range(3):
+        _write_csv(raw / "incoming" / f"f{k}.csv", [(f"p-{k}{i}", float(i)) for i in range(20)])
+    cfg = IngestConfig(
+        raw_root=str(raw), curated_root=str(tmp_path / "curated"), ingest_date="2026-05-02"
+    )
+    q = start_incremental_ingest(spark, cfg, SCHEMA, str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    part = tmp_path / "curated" / "athena" / "ingest_date=2026-05-02"
+    assert len(list(part.glob("*.parquet"))) == 1
+    assert spark.read.parquet(cfg.output_path).count() == 60
+
+
 def test_stream_batch_window_equivalence(spark, sf_dir):
     """The same tumbling_counts plan over the events fixture must give
     identical results on the batch path and the streaming path (this is
