@@ -341,10 +341,11 @@ def revenue_mom_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="2-D Pareto frontier (skyline) over parts minimizing "
     "(size, retail price): a part survives iff no strictly smaller "
     "part is as cheap and it is the cheapest at its own size. Both "
-    "domination checks are window minima — a RANGE frame over the "
-    "size ordering for strictly-smaller sizes and a per-size "
-    "partition min — so the skyline needs one sort, not the O(n^2) "
-    "pairwise dominance join. Comparisons only, no double math.",
+    "domination checks come from one per-size min: its running min "
+    "over the smaller sizes (a ROWS window over the distinct sizes) "
+    "and the min itself, broadcast back to the parts — so the skyline "
+    "needs no O(n^2) pairwise dominance join. Comparisons only, no "
+    "double math.",
 )
 def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(

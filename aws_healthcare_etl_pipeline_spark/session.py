@@ -6,13 +6,56 @@ AQE on (runtime coalesce + skew-join splitting), shuffle partitions
 sized to cores locally (set explicitly on a cluster to ~2-3x total
 cores), UTC session timezone so timestamps compare bit-for-bit with
 the DuckDB oracle, Arrow enabled for the few Pandas-UDF operators.
+
+``file://`` goes through ``jvm/spark-graft-fs.jar`` (source beside it):
+without a native libhadoop, Hadoop's RawLocalFileSystem starts a
+``chmod`` process for every permission it sets and a ``readlink``
+process for every FileContext link-status lookup. A trickle landing
+(one AvailableNow cycle: the stream's offset/commit logs plus the
+partitioned write) started about 40 of them and a bulk ``ingest_csv``
+about 9, at several ms of CPU each. The jar's RawLocalFileSystem
+answers both through java.nio and keeps the stock method where nio
+cannot give the same result (sticky bit, real symlinks); checksums,
+``_SUCCESS``, permission bits and the FileContext checkpoint manager
+are unchanged. Rebuild after editing the source (``javac`` 17+)::
+
+    cd aws_healthcare_etl_pipeline_spark/jvm
+    J="$(python -c 'import os,pyspark;print(os.path.join(os.path.dirname(pyspark.__file__),"jars"))')"
+    rm -rf /tmp/graft-fs && javac --release 17 -cp "$J/*" -d /tmp/graft-fs sparkgraft/fs/*.java
+    jar --create --date=2026-01-01T00:00:00Z --file spark-graft-fs.jar -C /tmp/graft-fs .
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import JavaClass
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "spark-graft-fs.jar")
+
+
+def _local_fs_conf() -> dict[str, str]:
+    """Register the fork-free ``file://`` filesystem.
+
+    The jar must be on the driver JVM's classpath when it launches. A
+    JVM that is already up (a session stopped and rebuilt in one
+    process) keeps its classpath, so the classes are named only if it
+    can load them: naming a class it cannot load breaks every path.
+    """
+    if SparkContext._jvm is not None and not isinstance(
+        SparkContext._jvm.sparkgraft.fs.ForkFreeLocalFileSystem, JavaClass
+    ):
+        return {}
+    return {
+        "spark.driver.extraClassPath": _FS_JAR,
+        "spark.executor.extraClassPath": _FS_JAR,
+        # fs.file.impl must be a LocalFileSystem: FileSystem.getLocal casts
+        "spark.hadoop.fs.file.impl": "sparkgraft.fs.ForkFreeLocalFileSystem",
+        # the FileContext side, for the stream checkpoint's renames
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.fs.ForkFreeLocalFs",
+    }
 
 
 def get_spark(
@@ -63,7 +106,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    conf = _local_fs_conf()
     for k, v in (extra_conf or {}).items():
+        if k.endswith(".extraClassPath") and k in conf:
+            v = conf[k] + os.pathsep + v
+        conf[k] = v
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -124,11 +124,14 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     """End-to-end single ingest run (the Glue job, minus Glue).
 
     Returns the output path, or None when skipped by the non-CSV guard
-    (exit-0 semantics of glue_job_script.py:33-35).
+    (exit-0 semantics of glue_job_script.py:33-35) or because the input
+    has no columns: inference on a zero-byte object finds none, and a
+    table of only ``ingest_date`` cannot be partitioned by it.
     """
     if cfg.object_key and not is_csv_object(cfg.object_key):
         return None
-    ingest_date = cfg.ingest_date or utc_ingest_date()
-    df = transform(read_csv(spark, cfg), ingest_date)
-    write_partitioned(df, cfg)
+    df = read_csv(spark, cfg)
+    if not df.columns:  # the schema is already resolved: no extra pass
+        return None
+    write_partitioned(transform(df, cfg.ingest_date or utc_ingest_date()), cfg)
     return cfg.output_path

@@ -62,6 +62,23 @@ def test_ingest_skips_non_csv(spark, workspace):
     assert not curated.exists()
 
 
+@pytest.mark.parametrize("content", ["", "patient_id,encounter_id,diagnosis,amount\n"])
+def test_ingest_of_empty_object_writes_nothing(spark, workspace, content):
+    """A zero-byte object infers no columns and is skipped like a non-CSV
+    one; a header-only object ingests 0 rows. Neither writes a file."""
+    raw, curated = workspace
+    (raw / "incoming" / "sample.csv").unlink()
+    (raw / "incoming" / "empty.csv").write_text(content)
+    for key in ("incoming/empty.csv", ""):  # the object, then its prefix
+        cfg = IngestConfig(
+            raw_root=str(raw), curated_root=str(curated), object_key=key,
+            ingest_date="2026-02-03",
+        )
+        out = ingest_csv(spark, cfg)
+        assert out is None if content == "" else out == cfg.output_path
+        assert not list(curated.rglob("*.parquet"))
+
+
 def test_ingest_end_to_end(spark, workspace):
     raw, curated = workspace
     cfg = IngestConfig(

@@ -348,10 +348,14 @@ def test_r3_global_window_rewrites(spark, sf_dir):
             "HashAggregate(keys=[]" in head  # scalar partials
             or "HashAggregate(keys=[_kb" in head  # bucket spine
         ), plan
-    # pareto frontier: bucket-partitioned strictly-smaller scan
+    # pareto frontier: one running-min window, over the size-grain
+    # spine (one row per distinct size) that its single-partition
+    # exchange feeds; no window over the part rows
     plan = physical_plan(REGISTRY["pareto_frontier_parts"].fn(spark, sf_dir))
-    assert "windowspecdefinition(_xb" in plan, plan
+    assert plan.count("windowspecdefinition(") == 1, plan
     assert plan.count("Exchange SinglePartition") == 1, plan
+    head = plan.split("Exchange SinglePartition")[1][:400]
+    assert "HashAggregate(keys=[p_size" in head, plan
 
 
 def test_r5_scale_shapes(spark, sf_dir):

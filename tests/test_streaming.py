@@ -76,6 +76,26 @@ def test_incremental_ingest_writes_one_file_per_target_size(spark, tmp_path):
     assert spark.read.parquet(cfg.output_path).count() == 60
 
 
+def test_incremental_ingest_of_empty_objects_writes_nothing(spark, tmp_path):
+    """Zero-byte and header-only objects are drained as 0 rows: the cycle
+    commits and no parquet file is written; a later object still lands."""
+    raw, curated, ckpt = tmp_path / "raw", tmp_path / "curated", tmp_path / "ckpt"
+    (raw / "incoming").mkdir(parents=True)
+    (raw / "incoming" / "zero.csv").write_text("")
+    (raw / "incoming" / "header.csv").write_text("patient_id,amount\n")
+    cfg = IngestConfig(raw_root=str(raw), curated_root=str(curated), ingest_date="2026-05-03")
+    q = start_incremental_ingest(spark, cfg, SCHEMA, str(ckpt))
+    q.awaitTermination()
+    assert q.exception() is None
+    assert (ckpt / "commits" / "0").exists()
+    assert not list(curated.rglob("*.parquet"))
+
+    _write_csv(raw / "incoming" / "f1.csv", [("p-1", 1.0)])
+    q = start_incremental_ingest(spark, cfg, SCHEMA, str(ckpt))
+    q.awaitTermination()
+    assert spark.read.parquet(cfg.output_path).count() == 1
+
+
 def test_stream_batch_window_equivalence(spark, sf_dir):
     """The same tumbling_counts plan over the events fixture must give
     identical results on the batch path and the streaming path (this is
