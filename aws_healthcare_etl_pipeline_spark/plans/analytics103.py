@@ -20,14 +20,11 @@
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import convert_events_ts, events_read_schema, load_table
-from .registry import hex8, query, sql_hex8
+from ..sources.tables import events_stream, load_table
+from .registry import hex8, query, run_available_now, sql_hex8
 
 # ------------------------------------- streaming windowed top-k
 
@@ -70,28 +67,11 @@ _TOPK = 3
 def streaming_windowed_topk_types(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = convert_events_ts(
-        spark.readStream.schema(
-            events_read_schema(os.path.join(sf_dir, "events.parquet"))
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     agg = stream.groupBy(
         F.window("ts", "1 day").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    sink_name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    counts = spark.table(sink_name).select(
+    counts = run_available_now(agg, "complete").select(
         F.col("w.start").alias("window_start"), "event_type", "n_events"
     )
     rk = Window.partitionBy("window_start").orderBy(

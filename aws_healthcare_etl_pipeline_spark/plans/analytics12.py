@@ -15,13 +15,11 @@ Oracle strategy notes:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dsum, query
+from .registry import dsum, query, scratch
 
 # Java-regex ∩ RE2 subset (no lookaround/backrefs); single-quoted into
 # the oracle SQL, so no quote characters inside.
@@ -314,7 +312,7 @@ def layout_zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_epoch_day",
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1990-01-01").cast("date")),
     )
-    base = tempfile.mkdtemp(prefix="zorder_")
+    base = scratch(prefix="zorder_")
     write_zordered(orders, base, "o_totalprice", "o_epoch_day", n_files=16)
     zread = spark.read.parquet(base)
     return zread.filter(

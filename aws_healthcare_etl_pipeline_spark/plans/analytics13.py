@@ -15,13 +15,11 @@ Cross-engine exactness notes:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dec, query
+from .registry import dec, query, scratch
 
 RESERVOIR_K = 10
 HASH_MOD = 1_000_000
@@ -270,7 +268,7 @@ def events_time_weighted_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def format_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
-    base = tempfile.mkdtemp(prefix="schema_evo_")
+    base = scratch(prefix="schema_evo_")
     orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     ).write.mode("overwrite").parquet(f"{base}/b=0")

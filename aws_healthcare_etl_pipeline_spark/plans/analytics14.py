@@ -13,13 +13,11 @@ The attribution and closure queries are the interesting oracle cases:
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dec, dsum, query
+from .registry import dec, dsum, query, scratch
 
 ATTR_WINDOW_DAYS = 3
 
@@ -259,7 +257,7 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.compaction import compact_parquet_dir, data_file_count
 
     orders = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="compact_")
+    base = scratch(prefix="compact_")
     src, dst = f"{base}/fragmented", f"{base}/compacted"
     orders.repartition(64).write.mode("overwrite").parquet(src)
     compact_parquet_dir(spark, src, dst, n_files=4)

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dec, query
+from .registry import dec, query, scratch
 
 # portable regex subset (see analytics12 notes)
 RE_SENT = r"[.!?]+"
@@ -302,15 +302,13 @@ def scalar_try_functions_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with layout clustering on the subject key to touch fewer files.",
 )
 def maintenance_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
     victims = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 97 == 0)
         .select("c_custkey")
     )
-    base = tempfile.mkdtemp(prefix="gdpr_")
+    base = scratch(prefix="gdpr_")
     survivors = orders.join(
         F.broadcast(victims), orders.o_custkey == victims.c_custkey, "left_anti"
     )

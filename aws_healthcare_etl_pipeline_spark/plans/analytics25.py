@@ -11,13 +11,11 @@ EXPLICIT on both sides, which is exactly the lesson the battery pins.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch
 
 # ------------------------------------------------ NULL ordering
 
@@ -201,7 +199,7 @@ def format_csv_malformed_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    base = tempfile.mkdtemp(prefix="csv_modes_")
+    base = scratch(prefix="csv_modes_")
     lines.write.mode("overwrite").text(base)
 
     permissive = (

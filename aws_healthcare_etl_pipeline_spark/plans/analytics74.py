@@ -170,7 +170,7 @@ _RF_BUDGET = 5_000  # tokens per language
                                         toks[i+2]))
                    ) AS shingles
             FROM gated WHERE survived = 1
-        ), pairs AS (
+        ), pairs AS MATERIALIZED (
             SELECT id_a, id_b FROM (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                        len(list_intersect(a.shingles, b.shingles))

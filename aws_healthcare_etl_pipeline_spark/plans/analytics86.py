@@ -54,6 +54,40 @@ def _bfs_cte_chain() -> str:
     return ", ".join(parts)
 
 
+def _bfs_all_pairs(heavy: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Spark twin of ``_bfs_cte_chain`` over the undirected edge list
+    ``heavy (u, v)``: the symmetric ``edges (u, v)``, their
+    ``nodes (node)`` and the all-pairs ``reach (s, v, dist, sigma)``,
+    unrolled to _HOPS."""
+    edges = heavy.unionAll(
+        heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint(eager=False)  # tiny; reused every BFS round
+    nodes = edges.select(F.col("u").alias("node")).distinct()
+    reach = nodes.select(
+        F.col("node").alias("s"),
+        F.col("node").alias("v"),
+        F.lit(0).alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
+    ).localCheckpoint(eager=False)
+    e2 = edges.select(
+        F.col("u").alias("e_src"), F.col("v").alias("e_dst")
+    )
+    frontier = reach
+    for k in range(1, _HOPS + 1):
+        nxt = (
+            frontier.select("s", F.col("v").alias("f_v"), "sigma")
+            .join(e2, F.col("f_v") == F.col("e_src"))
+            .groupBy("s", F.col("e_dst").alias("v"))
+            .agg(F.sum("sigma").cast("long").alias("sigma"))
+            .join(reach.select("s", "v"), ["s", "v"], "left_anti")
+            .select("s", "v", F.lit(k).alias("dist"), "sigma")
+            .localCheckpoint(eager=True)
+        )
+        reach = reach.unionAll(nxt).localCheckpoint(eager=True)
+        frontier = nxt
+    return edges, nodes, reach
+
+
 @query(
     "graph_betweenness_nations",
     oracle=f"""
@@ -103,33 +137,7 @@ def _bfs_cte_chain() -> str:
     "aggregated entity graphs, not raw events.",
 )
 def graph_betweenness_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    heavy = heavy_trade(spark, sf_dir)
-    edges = heavy.unionAll(
-        heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)  # tiny; reused every BFS round
-    nodes = edges.select(F.col("u").alias("node")).distinct()
-    reach = nodes.select(
-        F.col("node").alias("s"),
-        F.col("node").alias("v"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=False)
-    e2 = edges.select(
-        F.col("u").alias("e_src"), F.col("v").alias("e_dst")
-    )
-    frontier = reach
-    for k in range(1, _HOPS + 1):
-        nxt = (
-            frontier.select("s", F.col("v").alias("f_v"), "sigma")
-            .join(e2, F.col("f_v") == F.col("e_src"))
-            .groupBy("s", F.col("e_dst").alias("v"))
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .join(reach.select("s", "v"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(k).alias("dist"), "sigma")
-            .localCheckpoint(eager=True)
-        )
-        reach = reach.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    edges, nodes, reach = _bfs_all_pairs(heavy_trade(spark, sf_dir))
     r1 = reach.select(
         F.col("s").alias("s"),
         F.col("v").alias("m"),

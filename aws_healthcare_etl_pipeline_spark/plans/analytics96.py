@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .analytics86 import _bfs_cte_chain, _HOPS
+from .analytics86 import _HOPS, _bfs_all_pairs, _bfs_cte_chain
 from .registry import SQL_HEAVY_TRADE, heavy_trade, query
 
 # --------------------------------------------- Shewhart chart
@@ -143,33 +143,7 @@ def quality_shewhart_control_chart(
 def graph_eccentricity_diameter(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    heavy = heavy_trade(spark, sf_dir)
-    edges = heavy.unionAll(
-        heavy.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
-    nodes = edges.select(F.col("u").alias("node")).distinct()
-    reach = nodes.select(
-        F.col("node").alias("s"),
-        F.col("node").alias("v"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=False)
-    e2 = edges.select(
-        F.col("u").alias("e_src"), F.col("v").alias("e_dst")
-    )
-    frontier = reach
-    for k in range(1, _HOPS + 1):
-        nxt = (
-            frontier.select("s", F.col("v").alias("f_v"), "sigma")
-            .join(e2, F.col("f_v") == F.col("e_src"))
-            .groupBy("s", F.col("e_dst").alias("v"))
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .join(reach.select("s", "v"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(k).alias("dist"), "sigma")
-            .localCheckpoint(eager=True)
-        )
-        reach = reach.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    reach = _bfs_all_pairs(heavy_trade(spark, sf_dir))[2]
     ecc = reach.groupBy(F.col("s").alias("node")).agg(
         F.max("dist").cast("long").alias("ecc")
     )

@@ -7,14 +7,12 @@ the reference exercises (glue_job_script.py:41 reads CSV only).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.formats import read_jsonl, read_orc, write_jsonl, write_orc
 from ..sources.tables import load_table
-from .registry import dsum, query
+from .registry import dsum, query, scratch
 
 SAMPLE_MAX_KEY = 1000
 
@@ -44,7 +42,7 @@ def format_roundtrip_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") < SAMPLE_MAX_KEY)
         .select("o_orderkey", "o_totalprice", "o_orderstatus", "o_orderdate")
     )
-    base = tempfile.mkdtemp(prefix="fmt_roundtrip_")
+    base = scratch(prefix="fmt_roundtrip_")
     write_jsonl(sample, f"{base}/jsonl")
     write_orc(sample, f"{base}/orc")
     readers: dict[str, DataFrame] = {

@@ -11,30 +11,11 @@ needing an XML parser in DuckDB.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .registry import dec, query
-
-# Session-scoped scratch root for the write-then-read queries below.
-# Each invocation gets a fresh subdirectory (deltalite tables are
-# version-logs, so reuse would accrete manifests), but the whole root
-# is removed at interpreter exit — repeated bench warmup/run sessions
-# no longer leak parquet copies into /tmp unbounded.
-_SCRATCH_ROOT: list[str] = []
-
-
-def _scratch(prefix: str) -> str:
-    if not _SCRATCH_ROOT:
-        root = tempfile.mkdtemp(prefix="sparkgraft_fmt_")
-        _SCRATCH_ROOT.append(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])
+from .registry import dec, query, scratch
 
 
 @query(
@@ -67,7 +48,7 @@ def format_text_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value"
         )
     )
-    base = _scratch(prefix="textfmt_")
+    base = scratch(prefix="textfmt_")
     lines.write.mode("overwrite").text(f"{base}/lines")
     back = spark.read.text(f"{base}/lines")
     return back.agg(
@@ -161,7 +142,7 @@ def format_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> Data
         .filter(F.col("o_orderkey") < 4000)
         .select("o_orderkey", dec("o_totalprice").alias("price"), "o_orderstatus")
     )
-    base = _scratch(prefix="dpo_")
+    base = scratch(prefix="dpo_")
     orders.write.partitionBy("o_orderstatus").mode("overwrite").parquet(base)
 
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -230,7 +211,7 @@ def format_jsonl_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("}"),
         )
     )
-    base = _scratch(prefix="jsonl_corrupt_")
+    base = scratch(prefix="jsonl_corrupt_")
     docs.select(line.alias("value")).write.mode("overwrite").text(f"{base}/feed")
     parsed = (
         spark.read.schema("doc_id LONG, n_chars LONG, _corrupt_record STRING")
@@ -282,7 +263,7 @@ def format_csv_multiline_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("note"),
         dec("o_totalprice").alias("price"),
     )
-    base = _scratch(prefix="csv_ml_")
+    base = scratch(prefix="csv_ml_")
     (
         rows.write.mode("overwrite")
         .option("header", "true")
@@ -336,7 +317,7 @@ def format_fixed_width_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lpad(cents.cast("string"), 12, "0"),
         ).alias("value")
     )
-    base = _scratch(prefix="fixedw_")
+    base = scratch(prefix="fixedw_")
     lines.write.mode("overwrite").text(f"{base}/records")
     back = spark.read.text(f"{base}/records")
     parsed = back.select(
@@ -424,7 +405,7 @@ def format_csv_dialect_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cents").cast("string"),
         ).alias("value")
     )
-    base = _scratch(prefix="csv_dialect_")
+    base = scratch(prefix="csv_dialect_")
     lines.write.mode("overwrite").text(base)
     parsed = (
         spark.read.schema("id long, s string, cents long")
@@ -509,7 +490,7 @@ def lakehouse_time_travel_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         (dec("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    path = _scratch(prefix="deltalite_")
+    path = scratch(prefix="deltalite_")
     v0 = base.filter(F.col("id") < DL_KEY_CAP)
     write_table(v0, path, mode="overwrite")
     updates = (
@@ -595,7 +576,7 @@ def lakehouse_cdc_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
         (dec("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    path = _scratch(prefix="deltalite_cdc_")
+    path = scratch(prefix="deltalite_cdc_")
     v0 = base.filter(F.col("id") < DL_KEY_CAP)
     write_table(v0, path, mode="overwrite")
     updates = (

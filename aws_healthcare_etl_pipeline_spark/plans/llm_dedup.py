@@ -246,7 +246,7 @@ def dedup_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_clusters",
     oracle=f"""
         WITH RECURSIVE {SQL_CORPUS_SHINGLES},
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT id_a, id_b FROM (
                 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                        len(list_intersect(a.shingles, b.shingles)) AS inter,

@@ -22,10 +22,19 @@ rather than copy them. The md5 hash behind every deterministic draw is
 the first n hex digits of md5(x) read as an integer (n = 8 or 4): one
 ``conv`` expression per width in Spark, one strpos nibble chain per
 width in DuckDB.
+
+The side pipelines some plans run before returning a frame are defined
+here once too: ``run_available_now`` (a streaming frame drained to a
+memory sink) and ``scratch`` (a directory for write-then-read plans,
+removed at interpreter exit).
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -244,3 +253,40 @@ def buyers_1996(spark: SparkSession, sf_dir: str, value: Column) -> DataFrame:
             .alias("y")
         )
     )
+
+
+# ---- side pipelines: the memory-sink run and the scratch directory ----
+
+def run_available_now(df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain the streaming frame ``df`` to a memory sink under
+    Trigger.AvailableNow and return the sink's rows. The sink's view is
+    dropped before returning; the frame keeps the rows it resolved to."""
+    spark = df.sparkSession
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    (
+        df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+# One per-process root: each call gets a fresh subdirectory (deltalite
+# tables are version logs, so reuse would accrete manifests), and the
+# whole root is removed at interpreter exit, so repeated bench sessions
+# leave nothing in the temp directory.
+_SCRATCH_ROOT: list[str] = []
+
+
+def scratch(prefix: str) -> str:
+    """A fresh directory for a plan that writes data and reads it back."""
+    if not _SCRATCH_ROOT:
+        root = tempfile.mkdtemp(prefix="sparkgraft_scratch_")
+        _SCRATCH_ROOT.append(root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT[0])

@@ -9,16 +9,12 @@ is Structured Streaming's core contract.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-
-from ..sources.tables import convert_events_ts, events_read_schema, load_table
+from ..sources.tables import events_stream, load_table
 from ..streaming.windows import tumbling_counts
-from .registry import query
+from .registry import query, run_available_now
 
 
 @query(
@@ -37,26 +33,8 @@ from .registry import query
     "window agg -> memory sink (AvailableNow); oracle is the batch SQL.",
 )
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # the file source wants a directory; glob-filter to just the events
-    # table inside the sf dir
-    stream = convert_events_ts(
-        spark.readStream.schema(events_read_schema(os.path.join(sf_dir, "events.parquet")))
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    agg = tumbling_counts(stream, window_size="1 hour")
-    sink_name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name).orderBy("window_start", "event_type")
+    agg = tumbling_counts(events_stream(spark, sf_dir), window_size="1 hour")
+    return run_available_now(agg, "complete").orderBy("window_start", "event_type")
 
 
 @query(
@@ -107,24 +85,9 @@ def batch_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import sliding_counts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = convert_events_ts(
-        spark.readStream.schema(events_read_schema(os.path.join(sf_dir, "events.parquet")))
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     agg = sliding_counts(stream, window_size="1 hour", slide="30 minutes")
-    sink_name = f"stream_sliding_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name).orderBy("window_start", "event_type")
+    return run_available_now(agg, "complete").orderBy("window_start", "event_type")
 
 
 @query(
@@ -143,33 +106,14 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the oracle pins to the true distinct counts per type.",
 )
 def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    def one_pass() -> DataFrame:
-        return convert_events_ts(
-            spark.readStream.schema(events_read_schema(os.path.join(sf_dir, "events.parquet")))
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-
-    replayed = one_pass().unionByName(one_pass())
+    replayed = events_stream(spark, sf_dir).unionByName(events_stream(spark, sf_dir))
     deduped = (
         replayed.withWatermark("ts", "1 hour")
         .dropDuplicates(["event_id"])
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    sink_name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name).orderBy("event_type")
+    return run_available_now(deduped, "complete").orderBy("event_type")
 
 
 @query(
@@ -199,17 +143,10 @@ def streaming_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the equivalent batch interval self-join.",
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
     def side(event_type: str, prefix: str) -> DataFrame:
-        stream = convert_events_ts(
-            spark.readStream.schema(events_read_schema(os.path.join(sf_dir, "events.parquet")))
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
         return (
-            stream.filter(F.col("event_type") == event_type)
+            events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -227,17 +164,8 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 6 HOURS")),
         "inner",
     )
-    sink_name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        pairs.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink_name)
+        run_available_now(pairs, "append")
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -310,32 +238,17 @@ def skew_salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_user_totals
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = convert_events_ts(
-        spark.readStream.schema(events_read_schema(os.path.join(sf_dir, "events.parquet")))
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     # exact cents: value has two decimals by fixture contract, so
     # round(value*100) is an integer — deterministic accumulation
     cents = stream.select(
         "user_id", F.round(F.col("value") * 100, 0).cast("long").alias("value")
     )
     totals = running_user_totals(cents)
-    sink_name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # counters only grow: MAX per user = the final update even if the
     # source split into multiple micro-batches
     return (
-        spark.table(sink_name)
+        run_available_now(totals, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events_total").alias("n_events_total"),
@@ -364,16 +277,10 @@ def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFram
     "the batch join.",
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     dim = F.broadcast(
         load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
-    stream = convert_events_ts(
-        spark.readStream.schema(events_read_schema(os.path.join(sf_dir, "events.parquet")))
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     enriched = stream.join(dim, stream.user_id == dim.c_custkey)
     # ONE streaming aggregation: structured streaming supports neither
     # chained aggs nor distinct aggs on a stream, so the surface here
@@ -382,16 +289,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(15,2)")).cast("double").alias("sum_value"),
     )
-    sink_name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        final.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_name).select(
+    return run_available_now(final, "complete").select(
         "c_mktsegment", "n_events", "sum_value"
     ).orderBy("c_mktsegment")
 
@@ -421,29 +319,12 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     "behind on the batch path.",
 )
 def streaming_daily_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = convert_events_ts(
-        spark.readStream.schema(
-            events_read_schema(os.path.join(sf_dir, "events.parquet"))
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     agg = stream.groupBy(F.window("ts", "1 day").alias("w")).agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    sink_name = f"stream_daily_users_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    streamed = spark.table(sink_name).select(
+    streamed = run_available_now(agg, "complete").select(
         F.col("w.start").alias("day"), "approx_users", "n_events"
     )
     exact = (
@@ -550,34 +431,17 @@ def _rate_t2(cap: int, refill: int) -> str:
 def streaming_token_bucket_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ratelimit import token_bucket_admissions
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = convert_events_ts(
-        spark.readStream.schema(
-            events_read_schema(os.path.join(sf_dir, "events.parquet"))
-        )
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
+    stream = events_stream(spark, sf_dir)
     slim = stream.select(
         "user_id", F.unix_micros("ts").alias("ts_us"), "event_id"
     )
     out = token_bucket_admissions(
         slim, RATE_CAP_MILLI, RATE_REFILL_US
     )
-    sink_name = f"stream_rate_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(sink_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # n_seen grows monotonically: the emission with max n_seen per user
     # is the final state even if the source split into micro-batches
     return (
-        spark.table(sink_name)
+        run_available_now(out, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_seen").cast("bigint").alias("n_events"),

@@ -16,7 +16,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,7 +23,7 @@ from pyspark.sql import types as T
 
 from ..operators.scd import scd2_apply
 from ..sources.tables import load_table
-from .registry import query
+from .registry import query, scratch
 
 _CHANGES = [  # (order-year window, balance delta, effective ts)
     ("1996", 50.0, "1996-07-01"),
@@ -94,7 +93,7 @@ def streaming_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
 
-    base = tempfile.mkdtemp(prefix="scd2_stream_")
+    base = scratch(prefix="scd2_stream_")
     changes_dir = os.path.join(base, "changes")
     state_dir = os.path.join(base, "state")
     os.makedirs(changes_dir)
@@ -159,7 +158,7 @@ def streaming_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
 
-    final = (
+    return (
         spark.read.parquet(state_dir)
         .groupBy("c_mktsegment")
         .agg(
@@ -180,7 +179,3 @@ def streaming_scd2_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("c_mktsegment")
     )
-    # materialize before deleting the state dir the scan reads from
-    rows = final.collect()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, final.schema)

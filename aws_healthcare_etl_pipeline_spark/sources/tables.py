@@ -3,7 +3,9 @@
 ``load_table`` reads one parquet table; ``register_views`` registers all
 of them as temp views so queries can be written in SQL. Reads are plain
 ``spark.read.parquet`` — Catalyst handles column pruning and predicate
-pushdown into the scan.
+pushdown into the scan. Streaming plans read the events table through
+``events_stream``, a file source with the same schema and timestamp
+conversion, so the events vintage is decided here alone.
 """
 
 from __future__ import annotations
@@ -56,15 +58,12 @@ def _events_ts_field(path: str):
     return str(pq.read_schema(f).field("ts").type)
 
 
-def events_ts_is_nanos(path: str) -> bool:
-    return _events_ts_field(path) in ("timestamp[ns]", "int64")
-
-
 def events_read_schema(path: str) -> T.StructType:
     """Read-schema for the events table, matched to the file's ts unit
     (LongType for TIMESTAMP(NANOS) via the legacy conf, TimestampType
     for TIMESTAMP(MICROS))."""
-    ts_type = T.LongType() if events_ts_is_nanos(path) else T.TimestampType()
+    nanos = _events_ts_field(path) in ("timestamp[ns]", "int64")
+    ts_type = T.LongType() if nanos else T.TimestampType()
     return T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -96,20 +95,38 @@ def convert_events_ts(df: DataFrame) -> DataFrame:
 _SCHEMA_CACHE: dict[str, T.StructType] = {}
 
 
+def _events_schema(spark: SparkSession, path: str) -> T.StructType:
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = _SCHEMA_CACHE.get(path)
+    if schema is None:
+        schema = events_read_schema(path)
+        _SCHEMA_CACHE[path] = schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = _SCHEMA_CACHE.get(path)
-        if schema is None:
-            schema = events_read_schema(path)
-            _SCHEMA_CACHE[path] = schema
+        schema = _events_schema(spark, path)
         return convert_events_ts(spark.read.schema(schema).parquet(path))
     schema = _SCHEMA_CACHE.get(path)
     if schema is None:
         schema = spark.read.parquet(path).schema
         _SCHEMA_CACHE[path] = schema
     return spark.read.schema(schema).parquet(path)
+
+
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The streaming twin of ``load_table(spark, sf_dir, "events")``: a
+    parquet file source over ``sf_dir`` (the file source wants a
+    directory), glob-filtered to the events file."""
+    schema = _events_schema(spark, os.path.join(sf_dir, "events.parquet"))
+    return convert_events_ts(
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("pathGlobFilter", "events.parquet")
+        .load(sf_dir)
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:

@@ -4,6 +4,11 @@
 A host-speed calibration first (bench._calibration_sec, so readings
 normalize against any bench table), then for each named registry query:
   - build : Python-side DataFrame construction (py4j plan building)
+  - build_jobs : Spark jobs run while the plan function builds (eager
+            checkpoints, build-time writes and collects), counted through
+            one job group around the build call; a streaming query's
+            micro-batches run under the stream's own group and are not
+            counted
   - first : first noop-sink execution of that plan (codegen + exec),
             which is also the warmup
   - min, raw, jobs : bench.time_query over ``--runs`` timed runs
@@ -26,12 +31,45 @@ import os
 import re
 import sys
 import time
+import uuid
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 from aws_healthcare_etl_pipeline_spark.plans import REGISTRY  # noqa: E402
+
+
+def profile(
+    spark, name: str, sf_dir: str, runs: int, plans: str | None = None, suffix: str = ""
+) -> dict[str, object]:
+    """build / build_jobs / first / min / raw / jobs of one registry query,
+    with the normalized plan written under ``plans`` when given."""
+    sc = spark.sparkContext
+    group = f"profile_build:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        t0 = time.perf_counter()
+        df = REGISTRY[name].fn(spark, sf_dir)
+        build = round(time.perf_counter() - t0, 3)
+    finally:
+        sc._jsc.clearJobGroup()
+    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    if plans:
+        os.makedirs(plans, exist_ok=True)
+        plan_txt = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        with open(os.path.join(plans, f"{name}{suffix}.txt"), "w") as f:
+            f.write(re.sub(r"#\d+L?|(?<=plan_id=)\d+|(?<=RDD\[)\d+", "", plan_txt))
+    t0 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    first = round(time.perf_counter() - t0, 3)
+    best, raw, jobs = bench.time_query(spark, name, sf_dir, runs, warmup=False)
+    return {
+        "build": build, "build_jobs": build_jobs, "first": first,
+        "min": best, "raw": raw, "jobs": jobs,
+    }
 
 
 def main() -> None:
@@ -57,28 +95,12 @@ def main() -> None:
         "queries": {},
     }
     for name in args.names:
-        t0 = time.perf_counter()
-        df = REGISTRY[name].fn(spark, args.sf)
-        build = round(time.perf_counter() - t0, 3)
-        if args.plans:
-            os.makedirs(args.plans, exist_ok=True)
-            plan_txt = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w") as f:
-                f.write(re.sub(r"#\d+L?|(?<=plan_id=)\d+|(?<=RDD\[)\d+", "", plan_txt))
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        first = round(time.perf_counter() - t0, 3)
-        best, raw, jobs = bench.time_query(
-            spark, name, args.sf, args.runs, warmup=False
-        )
-        out["queries"][name] = {
-            "build": build, "first": first, "min": best, "raw": raw, "jobs": jobs,
-        }
+        rec = profile(spark, name, args.sf, args.runs, args.plans, args.suffix)
+        out["queries"][name] = rec
         print(
-            f"# {name}: build={build:.3f}s first={first:.3f}s "
-            f"min={best:.3f}s raw={raw} jobs={jobs}",
+            f"# {name}: build={rec['build']:.3f}s build_jobs={rec['build_jobs']} "
+            f"first={rec['first']:.3f}s min={rec['min']:.3f}s raw={rec['raw']} "
+            f"jobs={rec['jobs']}",
             file=sys.stderr,
         )
     print(json.dumps(out))

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import math
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -15,10 +14,9 @@ from aws_healthcare_etl_pipeline_spark.operators.compaction import (
 from aws_healthcare_etl_pipeline_spark.sources.tables import load_table
 
 
-def test_compact_sizes_by_actual_bytes(spark, sf_dir):
+def test_compact_sizes_by_actual_bytes(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="compact_unit_")
-    src, dst = f"{base}/src", f"{base}/dst"
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     orders.repartition(32).write.mode("overwrite").parquet(src)
     assert data_file_count(src) == 32
 
@@ -37,10 +35,9 @@ def test_compact_sizes_by_actual_bytes(spark, sf_dir):
     assert tuple(a) == tuple(b)
 
 
-def test_compact_explicit_file_count(spark, sf_dir):
+def test_compact_explicit_file_count(spark, sf_dir, tmp_path):
     orders = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="compact_unit2_")
-    src, dst = f"{base}/src", f"{base}/dst"
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
     orders.repartition(8).write.mode("overwrite").parquet(src)
     n = compact_parquet_dir(spark, src, dst, n_files=2)
     assert n == 2

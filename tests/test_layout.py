@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -36,12 +35,12 @@ def _file_ranges(base: str, col: str):
 
 
 @pytest.fixture(scope="module")
-def zdir(spark, sf_dir):
+def zdir(spark, sf_dir, tmp_path_factory):
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_epoch_day",
         F.datediff(F.col("o_orderdate").cast("date"), F.lit("1990-01-01").cast("date")),
     )
-    base = tempfile.mkdtemp(prefix="zorder_test_")
+    base = str(tmp_path_factory.mktemp("zorder"))
     write_zordered(orders, base, "o_totalprice", "o_epoch_day", n_files=16)
     return base
 

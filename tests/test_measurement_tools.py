@@ -4,6 +4,7 @@ start."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import subprocess
 import sys
@@ -31,6 +32,17 @@ def test_time_query_reports_min_raw_and_jobs(spark):
     assert len(raw) == 2
     assert best == min(raw)
     assert jobs >= 1
+
+
+def test_profile_reports_build_jobs(spark):
+    path = os.path.join(REPO, "scripts", "profile_query.py")
+    spec = importlib.util.spec_from_file_location("profile_query", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    # the plan function writes two parquet batches before returning
+    rec = mod.profile(spark, "format_schema_evolution", SF_SMOKE, runs=1)
+    assert set(rec) == {"build", "build_jobs", "first", "min", "raw", "jobs"}
+    assert rec["build_jobs"] >= 2
 
 
 @pytest.mark.parametrize("script", ["profile_query.py", "scale.py", "driver_sim.py"])

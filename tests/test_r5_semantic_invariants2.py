@@ -85,34 +85,15 @@ def test_betweenness_known_path_graph(spark, sf_dir):
     """On the path graph 0-1-2-3 the interior nodes carry known
     betweenness: sigma-based shares for node 1 are the ordered
     pairs (0,2),(2,0),(0,3),(3,0) -> 4 * 1000 permille; same for
-    node 2; endpoints carry 0. Drives the exact same BFS + identity
-    code path as the production query via a stub edge frame."""
+    node 2; endpoints carry 0. Drives the production BFS
+    (``analytics86._bfs_all_pairs``) and the same identity as the
+    production query via a stub edge frame."""
     from aws_healthcare_etl_pipeline_spark.plans import analytics86
 
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], "u long, v long"
     )
-    sym = edges.union(edges.selectExpr("v AS u", "u AS v"))
-    e2 = sym.selectExpr("u AS e_src", "v AS e_dst")
-    nodes = sym.select(F.col("u").alias("node")).distinct()
-    reach = nodes.select(
-        F.col("node").alias("s"),
-        F.col("node").alias("v"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    )
-    frontier = reach
-    for k in range(1, analytics86._HOPS + 1):
-        nxt = (
-            frontier.select("s", F.col("v").alias("f_v"), "sigma")
-            .join(e2, F.col("f_v") == F.col("e_src"))
-            .groupBy("s", F.col("e_dst").alias("v"))
-            .agg(F.sum("sigma").cast("long").alias("sigma"))
-            .join(reach.select("s", "v"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(k).alias("dist"), "sigma")
-        )
-        reach = reach.unionAll(nxt)
-        frontier = nxt
+    reach = analytics86._bfs_all_pairs(edges)[2]
     r1 = reach.selectExpr("s", "v AS m", "dist AS d1", "sigma AS g1")
     r2 = reach.selectExpr("s AS m", "v AS t", "dist AS d2", "sigma AS g2")
     r3 = reach.selectExpr("s", "v AS t", "dist AS d3", "sigma AS g3")
