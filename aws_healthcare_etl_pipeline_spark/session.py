@@ -7,22 +7,31 @@ sized to cores locally (set explicitly on a cluster to ~2-3x total
 cores), UTC session timezone so timestamps compare bit-for-bit with
 the DuckDB oracle, Arrow enabled for the few Pandas-UDF operators.
 
-``file://`` goes through ``jvm/spark-graft-fs.jar`` (source beside it):
-without a native libhadoop, Hadoop's RawLocalFileSystem starts a
-``chmod`` process for every permission it sets and a ``readlink``
-process for every FileContext link-status lookup. A trickle landing
-(one AvailableNow cycle: the stream's offset/commit logs plus the
-partitioned write) started about 40 of them and a bulk ``ingest_csv``
-about 9, at several ms of CPU each. The jar's RawLocalFileSystem
-answers both through java.nio and keeps the stock method where nio
-cannot give the same result (sticky bit, real symlinks); checksums,
-``_SUCCESS``, permission bits and the FileContext checkpoint manager
-are unchanged. Rebuild after editing the source (``javac`` 17+)::
+The package's JVM jar, ``jvm/spark-graft.jar`` (Java source beside it),
+goes on the driver and executor classpath and does two things:
+
+- ``file://`` goes through ``sparkgraft.fs``: without a native
+  libhadoop, Hadoop's RawLocalFileSystem starts a ``chmod`` process for
+  every permission it sets and a ``readlink`` process for every
+  FileContext link-status lookup. A trickle landing (one AvailableNow
+  cycle: the stream's offset/commit logs plus the partitioned write)
+  started about 40 of them and a bulk ``ingest_csv`` about 9, at several
+  ms of CPU each. The jar's RawLocalFileSystem answers both through
+  java.nio and keeps the stock method where nio cannot give the same
+  result (sticky bit, real symlinks); checksums, ``_SUCCESS``,
+  permission bits and the FileContext checkpoint manager are unchanged.
+- ``spark.sql.extensions`` adds ``sparkgraft.sql.FooterRowCounts``, an
+  optimizer rule that answers partition-grouped or global ``COUNT(*)``
+  over Parquet from the file listing and the footers, with no Spark job
+  (the README's Athena query, ``df.count()``). Its Javadoc states the
+  shapes it answers and those it leaves to the scan.
+
+Rebuild the jar after editing the source (``javac`` 17+)::
 
     cd aws_healthcare_etl_pipeline_spark/jvm
     J="$(python -c 'import os,pyspark;print(os.path.join(os.path.dirname(pyspark.__file__),"jars"))')"
-    rm -rf /tmp/graft-fs && javac --release 17 -cp "$J/*" -d /tmp/graft-fs sparkgraft/fs/*.java
-    jar --create --date=2026-01-01T00:00:00Z --file spark-graft-fs.jar -C /tmp/graft-fs .
+    rm -rf /tmp/graft && javac --release 17 -cp "$J/*" -d /tmp/graft $(find sparkgraft -name '*.java')
+    rm -f spark-graft.jar && jar --create --date=2026-01-01T00:00:00Z --file spark-graft.jar -C /tmp/graft .
 """
 
 from __future__ import annotations
@@ -33,11 +42,17 @@ from py4j.java_gateway import JavaClass
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "spark-graft-fs.jar")
+_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "spark-graft.jar")
+# conf keys whose caller values are appended to ours instead of replacing them
+_LISTS = {
+    "spark.driver.extraClassPath": os.pathsep,
+    "spark.executor.extraClassPath": os.pathsep,
+    "spark.sql.extensions": ",",
+}
 
 
-def _local_fs_conf() -> dict[str, str]:
-    """Register the fork-free ``file://`` filesystem.
+def _jar_conf() -> dict[str, str]:
+    """Register the fork-free ``file://`` filesystem and the SQL extension.
 
     The jar must be on the driver JVM's classpath when it launches. A
     JVM that is already up (a session stopped and rebuilt in one
@@ -49,13 +64,24 @@ def _local_fs_conf() -> dict[str, str]:
     ):
         return {}
     return {
-        "spark.driver.extraClassPath": _FS_JAR,
-        "spark.executor.extraClassPath": _FS_JAR,
+        "spark.driver.extraClassPath": _JAR,
+        "spark.executor.extraClassPath": _JAR,
         # fs.file.impl must be a LocalFileSystem: FileSystem.getLocal casts
         "spark.hadoop.fs.file.impl": "sparkgraft.fs.ForkFreeLocalFileSystem",
         # the FileContext side, for the stream checkpoint's renames
         "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.fs.ForkFreeLocalFs",
+        "spark.sql.extensions": "sparkgraft.sql.SparkGraftExtensions",
     }
+
+
+def _session_conf(extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """The jar's conf with the caller's on top; list-valued keys are appended."""
+    conf = _jar_conf()
+    for k, v in (extra_conf or {}).items():
+        if k in _LISTS and k in conf:
+            v = conf[k] + _LISTS[k] + v
+        conf[k] = v
+    return conf
 
 
 def get_spark(
@@ -106,12 +132,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    conf = _local_fs_conf()
-    for k, v in (extra_conf or {}).items():
-        if k.endswith(".extraClassPath") and k in conf:
-            v = conf[k] + os.pathsep + v
-        conf[k] = v
-    for k, v in conf.items():
+    for k, v in _session_conf(extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,6 +20,13 @@ every partition's files to store per-partition numFiles/totalSize
 feed no plan: scans of the table list the pruned partitions' files
 themselves. The listing of partition directories still grows with the
 partition count.
+
+What the README's Athena query costs (``SELECT ingest_date, COUNT(*) ...
+GROUP BY ingest_date ORDER BY ingest_date DESC``): no Spark job either.
+The session's optimizer rule answers it from the table's file listing
+and one Parquet footer read per file on the driver; which shapes it
+answers and which still scan is stated in
+``jvm/sparkgraft/sql/FooterRowCounts.java``.
 """
 
 from __future__ import annotations

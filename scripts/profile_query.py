@@ -5,10 +5,10 @@ A host-speed calibration first (bench._calibration_sec, so readings
 normalize against any bench table), then for each named registry query:
   - build : Python-side DataFrame construction (py4j plan building)
   - build_jobs : Spark jobs run while the plan function builds (eager
-            checkpoints, build-time writes and collects), counted through
-            one job group around the build call; a streaming query's
-            micro-batches run under the stream's own group and are not
-            counted
+            checkpoints, build-time writes and collects, streams drained
+            before it returns), counted through one job group around the
+            build call plus the job group of each stream started inside
+            it (a stream runs its micro-batches under its runId)
   - first : first noop-sink execution of that plan (codegen + exec),
             which is also the warmup
   - min, raw, jobs : bench.time_query over ``--runs`` timed runs
@@ -33,11 +33,31 @@ import sys
 import time
 import uuid
 
+from pyspark.sql.streaming import StreamingQueryListener
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 from aws_healthcare_etl_pipeline_spark.plans import REGISTRY  # noqa: E402
+
+
+class _StreamRuns(StreamingQueryListener):
+    """The runIds of the streams started while it is attached. A stream
+    starts its micro-batch jobs under its runId as job group; onQueryStarted
+    runs before ``start()`` returns, so no stream is missed."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
 
 
 def profile(
@@ -47,6 +67,8 @@ def profile(
     with the normalized plan written under ``plans`` when given."""
     sc = spark.sparkContext
     group = f"profile_build:{uuid.uuid4().hex}"
+    streams = _StreamRuns()
+    spark.streams.addListener(streams)
     sc.setJobGroup(group, name)
     try:
         t0 = time.perf_counter()
@@ -54,7 +76,10 @@ def profile(
         build = round(time.perf_counter() - t0, 3)
     finally:
         sc._jsc.clearJobGroup()
-    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        spark.streams.removeListener(streams)
+    build_jobs = sum(
+        len(sc.statusTracker().getJobIdsForGroup(g)) for g in (group, *streams.run_ids)
+    )
     if plans:
         os.makedirs(plans, exist_ok=True)
         plan_txt = df._sc._jvm.PythonSQLUtils.explainString(

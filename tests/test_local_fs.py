@@ -1,6 +1,6 @@
 """The fork-free ``file://`` filesystem against Hadoop's stock one.
 
-``get_spark`` registers ``sparkgraft.fs`` (``jvm/spark-graft-fs.jar``)
+``get_spark`` registers ``sparkgraft.fs`` (``jvm/spark-graft.jar``)
 for ``file://``. Its RawLocalFileSystem overrides ``setPermission`` and
 ``getFileLinkStatus``; each override must give what the stock method
 gives on the same paths.
@@ -56,14 +56,15 @@ def test_running_jvm_without_the_jar_keeps_the_stock_filesystem(monkeypatch):
         def __getattr__(self, name):
             return self
 
-    assert set(session._local_fs_conf()) == {
+    assert set(session._jar_conf()) == {
         "spark.driver.extraClassPath",
         "spark.executor.extraClassPath",
         "spark.hadoop.fs.file.impl",
         "spark.hadoop.fs.AbstractFileSystem.file.impl",
+        "spark.sql.extensions",
     }
     monkeypatch.setattr(SparkContext, "_jvm", NoSuchClass())
-    assert session._local_fs_conf() == {}
+    assert session._jar_conf() == {}
 
 
 def _perm(jvm, mode: int):
@@ -142,8 +143,13 @@ def test_file_link_status_matches_stock(fs_pair, tmp_path):
 @pytest.mark.skipif(shutil.which("javac") is None, reason="javac not installed")
 def test_committed_jar_matches_its_source(tmp_path):
     jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-    src_dir = os.path.join(JVM_DIR, "sparkgraft", "fs")
-    sources = sorted(os.path.join(src_dir, n) for n in os.listdir(src_dir) if n.endswith(".java"))
+    # every source of the jar: the filesystem and the SQL extension
+    sources = sorted(
+        os.path.join(root, n)
+        for root, _, names in os.walk(os.path.join(JVM_DIR, "sparkgraft"))
+        for n in names
+        if n.endswith(".java")
+    )
     subprocess.run(
         ["javac", "--release", "17", "-cp", os.path.join(jars, "*"), "-d", str(tmp_path), *sources],
         check=True, capture_output=True,
@@ -152,7 +158,7 @@ def test_committed_jar_matches_its_source(tmp_path):
         os.path.relpath(os.path.join(root, n), tmp_path): open(os.path.join(root, n), "rb").read()
         for root, _, names in os.walk(tmp_path) for n in names
     }
-    with zipfile.ZipFile(os.path.join(JVM_DIR, "spark-graft-fs.jar")) as jar:
+    with zipfile.ZipFile(os.path.join(JVM_DIR, "spark-graft.jar")) as jar:
         committed = {n: jar.read(n) for n in jar.namelist() if n.endswith(".class")}
     assert sorted(committed) == sorted(built)
     for name, data in built.items():

@@ -34,15 +34,26 @@ def test_time_query_reports_min_raw_and_jobs(spark):
     assert jobs >= 1
 
 
-def test_profile_reports_build_jobs(spark):
+def _profile_module():
     path = os.path.join(REPO, "scripts", "profile_query.py")
     spec = importlib.util.spec_from_file_location("profile_query", path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
+
+
+def test_profile_reports_build_jobs(spark):
     # the plan function writes two parquet batches before returning
-    rec = mod.profile(spark, "format_schema_evolution", SF_SMOKE, runs=1)
+    rec = _profile_module().profile(spark, "format_schema_evolution", SF_SMOKE, runs=1)
     assert set(rec) == {"build", "build_jobs", "first", "min", "raw", "jobs"}
     assert rec["build_jobs"] >= 2
+
+
+def test_profile_counts_a_drained_streams_jobs(spark):
+    # the plan drains an AvailableNow stream, whose micro-batches run
+    # under the stream's runId, not the build's job group
+    rec = _profile_module().profile(spark, "streaming_stateful_user_totals", SF_SMOKE, runs=1)
+    assert rec["build_jobs"] > 0
 
 
 @pytest.mark.parametrize("script", ["profile_query.py", "scale.py", "driver_sim.py"])
