@@ -16,8 +16,19 @@ Deliberate departures, for 100 TB scale (SURVEY.md §4):
     the coalesce, every input split would be its own small file.
     The trade-off: an input under one target size is parsed and
     written by one task.
-  - ``inferSchema=True`` costs an extra full pass over the CSV; an
-    explicit ``schema`` is the fast path and is mandatory for the
+  - inference runs once per dataset, not once per object.
+    ``inferSchema=True`` costs a header job and a full pass over the
+    CSV before the write parses it again. When ``output_path`` already
+    holds Spark-written Parquet, the dataset's schema is read from one
+    footer on the driver (``dataset_schema``) and the object is parsed
+    once, by the write, under it: ``enforceSchema=false`` (the header
+    must name the same columns, in order, compared as Spark compares
+    names: case-insensitively by default) and ``mode=FAILFAST``. Those
+    two checks apply only on this contract path. An object whose
+    header or values break the schema is landed by the reference's
+    inference path instead, as is a dataset's first object. An
+    explicit ``schema`` keeps Spark's defaults (PERMISSIVE: a value
+    that does not parse becomes NULL) and is mandatory for the
     streaming variant (streaming/ingest_stream.py).
   - optional idempotent mode: dynamic partition overwrite instead of
     blind append, so a retried job does not duplicate rows
@@ -27,13 +38,34 @@ Deliberate departures, for 100 TB scale (SURVEY.md §4):
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass, field
+import json
+from dataclasses import dataclass, field, replace
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .filesize import target_file_count
+from .filesize import estimated_size_bytes, target_file_count
+
+# The non-CSV guard as a Hadoop glob, for the scans: the same
+# case-insensitive suffix test as ``is_csv_object``.
+CSV_GLOB = "*.[cC][sS][vV]"
+# Spark's Parquet writer stores the written schema, as JSON, under this
+# key of every footer's key-value metadata.
+_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
+# The read options of the contract path. A caller who sets one of them,
+# or inferSchema, gets the path it asked for.
+_CONTRACT_OPTIONS = {"header": "true", "enforceSchema": "false", "mode": "FAILFAST"}
+_CALLER_PARSE_OPTIONS = {"header", "enforceschema", "mode", "inferschema"}
+# Column types whose CSV parse either keeps the value or fails. Under a
+# pinned schema DateType drops a time of day and DecimalType rounds a
+# fraction, with no error, so a dataset holding either keeps inference.
+_CONTRACT_TYPES = (
+    T.StringType, T.IntegerType, T.LongType, T.DoubleType, T.BooleanType,
+    T.TimestampType, T.TimestampNTZType,
+)
 
 
 def utc_ingest_date(now: dt.datetime | None = None) -> str:
@@ -94,7 +126,7 @@ def read_csv(spark: SparkSession, cfg: IngestConfig) -> DataFrame:
     # pathGlobFilter enforces the CSV-only contract at the scan, so a
     # prefix ingest never picks up stray non-CSV objects.
     if not cfg.object_key:
-        reader = reader.option("pathGlobFilter", "*.csv")
+        reader = reader.option("pathGlobFilter", CSV_GLOB)
     return reader.csv(cfg.source_path)
 
 
@@ -120,6 +152,77 @@ def write_partitioned(df: DataFrame, cfg: IngestConfig) -> None:
     writer.parquet(cfg.output_path)
 
 
+def dataset_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's writer stored with the partitioned dataset at
+    ``path``, or None when it has none.
+
+    Read from one footer: the first ``.parquet`` data file by name in
+    the newest ``ingest_date=`` partition. The driver lists and opens it
+    with the Hadoop and parquet-hadoop classes Spark ships, in a number
+    of calls from Python that does not grow with the partition count,
+    and runs no Spark job. The schema lives with the data, not in a
+    per-process memo, because each reference Glue run is a fresh
+    process. None also when the footer has no Spark row metadata
+    (Parquet another engine wrote).
+    """
+    jvm = spark._jvm
+    fs_, parquet = jvm.org.apache.hadoop.fs, jvm.org.apache.parquet
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    root = fs_.Path(path)
+    fs = root.getFileSystem(conf)
+
+    # globStatus sorts its matches by path (HADOOP-10798): the last
+    # partition is the newest; Spark reads no file named "_*" or ".*"
+    parts = fs.globStatus(fs_.Path(root, "ingest_date=*"))
+    if not parts:  # None when the path does not exist
+        return None
+    files = fs.globStatus(fs_.Path(parts[-1].getPath(), "[!_.]*.parquet"))
+    if not files:
+        return None
+    # the calls sparkgraft.sql.FooterRowCounts reads footers with
+    footer = parquet.hadoop.util.HadoopInputFile.fromStatus(files[0], conf)
+    options = parquet.HadoopReadOptions.builder(conf).build()
+    stream = footer.newStream()
+    try:
+        metadata = parquet.hadoop.ParquetFileReader.readFooter(footer, options, stream)
+    finally:
+        stream.close()
+    meta = metadata.getFileMetaData().getKeyValueMetaData().get(_ROW_METADATA)
+    return T.StructType.fromJson(json.loads(meta)) if meta else None
+
+
+def _contract_schema(spark: SparkSession, cfg: IngestConfig) -> T.StructType | None:
+    """The dataset schema to parse this landing under, or None for the
+    path the config names: an explicit schema, a caller's parse
+    options, no Spark-written dataset yet, or a column type outside
+    ``_CONTRACT_TYPES``."""
+    if cfg.schema is not None or _CALLER_PARSE_OPTIONS & {k.lower() for k in cfg.extra_read_options}:
+        return None
+    schema = dataset_schema(spark, cfg.output_path)
+    if not schema or not all(isinstance(f.dataType, _CONTRACT_TYPES) for f in schema.fields):
+        return None
+    return schema
+
+
+def _breaks_contract(spark: SparkSession, err: Py4JJavaError) -> bool:
+    """Whether a contract write failed because the object broke the
+    schema: a value that does not parse, or a header that does not name
+    the schema's columns. Python sees the job's bare error; the parser's
+    is on the Java cause chain."""
+    gateway = spark.sparkContext._gateway
+    cause = err.java_exception
+    while cause is not None:
+        if is_instance_of(gateway, cause, "org.apache.spark.SparkThrowable"):
+            condition = cause.getCondition() or ""
+            if condition.startswith("MALFORMED_RECORD_IN_PARSING") or (
+                # CSVHeaderChecker's error, for a renamed or a missing column
+                condition == "_LEGACY_ERROR_TEMP_3241" and "CSV header" in cause.getMessage()
+            ):
+                return True
+        cause = cause.getCause()
+    return False
+
+
 def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     """End-to-end single ingest run (the Glue job, minus Glue).
 
@@ -127,11 +230,31 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     (exit-0 semantics of glue_job_script.py:33-35) or because the input
     has no columns: inference on a zero-byte object finds none, and a
     table of only ``ingest_date`` cannot be partitioned by it.
+
+    When the reference would infer and the dataset already has a
+    schema, the object is parsed once, by the write, under that schema;
+    if its header or values break it, the failed write leaves nothing
+    and the object is inferred as the reference does (module docstring).
+    An input of only zero-byte objects also takes the inference path,
+    for its answer.
     """
     if cfg.object_key and not is_csv_object(cfg.object_key):
         return None
+    ingest_date = cfg.ingest_date or utc_ingest_date()
+    schema = _contract_schema(spark, cfg)
+    if schema is not None:
+        options = {**cfg.extra_read_options, **_CONTRACT_OPTIONS}
+        df = read_csv(spark, replace(cfg, schema=schema, extra_read_options=options))
+        if estimated_size_bytes(df) > 0:  # the listed input bytes: no job
+            df = transform(df, ingest_date)
+            try:
+                write_partitioned(df, cfg)
+                return cfg.output_path
+            except Py4JJavaError as err:
+                if not _breaks_contract(spark, err):
+                    raise
     df = read_csv(spark, cfg)
     if not df.columns:  # the schema is already resolved: no extra pass
         return None
-    write_partitioned(transform(df, cfg.ingest_date or utc_ingest_date()), cfg)
+    write_partitioned(transform(df, ingest_date), cfg)
     return cfg.output_path

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..sources.csv_ingest import (
+    CSV_GLOB,
     IngestConfig,
     transform,
     utc_ingest_date,
@@ -44,7 +45,7 @@ def start_incremental_ingest(
     stream = (
         spark.readStream.schema(schema)
         .option("header", "true")
-        .option("pathGlobFilter", "*.csv")  # the non-CSV guard, at the source
+        .option("pathGlobFilter", CSV_GLOB)  # the non-CSV guard, at the source
         .csv(cfg.source_path)
     )
 

@@ -242,7 +242,7 @@ def test_readme_query_and_count_run_no_job(spark, table):
     assert n == 400 and jobs == 0
 
 
-def test_batch_landing_runs_three_jobs(spark, tmp_path):
+def test_batch_landing_runs_three_jobs_then_one(spark, tmp_path):
     raw, curated = tmp_path / "raw", tmp_path / "curated"
     (raw / "incoming").mkdir(parents=True)
     for k in range(2):
@@ -254,7 +254,8 @@ def test_batch_landing_runs_three_jobs(spark, tmp_path):
     def land(k: int) -> None:
         ingest_csv(spark, IngestConfig(str(raw), str(curated), object_key=f"incoming/o{k}.csv", ingest_date=f"2026-04-0{k + 1}"))
 
-    land(0)
+    _, jobs = _jobs(spark, lambda: land(0))
+    assert jobs == 3  # a dataset's first object: CSV header, schema inference, write
     fq = catalog.register_parquet_table(spark, "footer_counts", f"b{uuid.uuid4().hex[:8]}", str(curated / "athena"))
 
     def publish():
@@ -264,7 +265,7 @@ def test_batch_landing_runs_three_jobs(spark, tmp_path):
 
     rows, jobs = _jobs(spark, publish)
     assert [tuple(r) for r in rows] == [("2026-04-02", 50), ("2026-04-01", 50)]
-    assert jobs == 3  # CSV header, schema inference, partitioned write
+    assert jobs == 1  # parsed once, under the dataset's schema, by the write
 
 
 def test_caller_extensions_are_appended(spark):

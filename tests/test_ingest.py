@@ -79,6 +79,15 @@ def test_ingest_of_empty_object_writes_nothing(spark, workspace, content):
         assert not list(curated.rglob("*.parquet"))
 
 
+def test_prefix_ingest_reads_upper_case_suffix(spark, workspace):
+    """The scan's glob accepts what ``is_csv_object`` accepts."""
+    raw, curated = workspace
+    (raw / "incoming" / "B.CSV").write_text(SAMPLE)
+    (raw / "incoming" / "c.txt").write_text(SAMPLE)
+    cfg = IngestConfig(raw_root=str(raw), curated_root=str(curated), ingest_date="2026-02-08")
+    assert spark.read.parquet(ingest_csv(spark, cfg)).count() == 4
+
+
 def test_ingest_end_to_end(spark, workspace):
     raw, curated = workspace
     cfg = IngestConfig(

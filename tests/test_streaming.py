@@ -59,6 +59,19 @@ def test_incremental_ingest_exactly_once_per_file(spark, tmp_path):
     assert spark.read.parquet(cfg.output_path).count() == 3
 
 
+def test_incremental_ingest_reads_upper_case_suffix(spark, tmp_path):
+    """The source's glob accepts what ``is_csv_object`` accepts."""
+    raw = tmp_path / "raw"
+    _write_csv(raw / "incoming" / "a.csv", [("p-1", 1.0)])
+    _write_csv(raw / "incoming" / "B.CSV", [("p-2", 2.0)])
+    _write_csv(raw / "incoming" / "c.txt", [("p-3", 3.0)])
+    cfg = IngestConfig(raw_root=str(raw), curated_root=str(tmp_path / "curated"), ingest_date="2026-05-04")
+    q = start_incremental_ingest(spark, cfg, SCHEMA, str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    got = spark.read.parquet(cfg.output_path).orderBy("patient_id").collect()
+    assert [r.patient_id for r in got] == ["p-1", "p-2"]
+
+
 def test_incremental_ingest_writes_one_file_per_target_size(spark, tmp_path):
     """The foreachBatch frame carries the micro-batch's size estimate, so
     one AvailableNow batch over three small landed CSVs (three splits)
