@@ -29,7 +29,29 @@ Deliberate departures, for 100 TB scale (SURVEY.md §4):
     inference path instead, as is a dataset's first object. An
     explicit ``schema`` keeps Spark's defaults (PERMISSIVE: a value
     that does not parse becomes NULL) and is mandatory for the
-    streaming variant (streaming/ingest_stream.py).
+    streaming variant (streaming/ingest_stream.py). Each fallback logs
+    one WARNING naming the object, the dataset and the reason.
+  - a contract landing whose listed input fits one
+    ``spark.sql.files.maxPartitionBytes`` split is parsed as one CSV
+    stream (``multiLine``), not line by line. Its coalesced write is
+    one task either way, and line mode re-enters the CSV parser once
+    per line. A larger input keeps line mode and its split-parallel
+    parse. Line mode ends a record at CR, LF or CRLF, so the two
+    readers differ only where a value would hold a line break; a guard
+    in the stamping projection fails the stream's write on such a
+    value, and the object is re-read line by line under the same
+    schema, which lands what line mode always landed. A double is read
+    raw and cast, because its CSV parse drops a leading or trailing
+    line break; a dataset with a timestamp column, a caller's read
+    option or an explicit ``output_files`` keeps line mode. "Fits" is
+    judged on the listed bytes, so an input just under one split, which
+    line mode's larger projected estimate wrote as two files, is one
+    file now. A stream whose header or value breaks the
+    schema goes to inference directly (for mixed line endings that the
+    line reader would have parsed, that stores the object's own
+    inferred types). The inference path stays in line mode: it is the
+    reference's read. So does the streaming variant: its options are
+    fixed for the query's life, and its objects are small.
   - optional idempotent mode: dynamic partition overwrite instead of
     blind append, so a retried job does not duplicate rows
     (glue_job_script.py:51 + main.tf:150 allow duplicates on retry).
@@ -39,10 +61,12 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import logging
 from dataclasses import dataclass, field, replace
 
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,9 +80,9 @@ CSV_GLOB = "*.[cC][sS][vV]"
 # key of every footer's key-value metadata.
 _ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 # The read options of the contract path. A caller who sets one of them,
-# or inferSchema, gets the path it asked for.
+# or inferSchema, multiLine or lineSep, gets the path it asked for.
 _CONTRACT_OPTIONS = {"header": "true", "enforceSchema": "false", "mode": "FAILFAST"}
-_CALLER_PARSE_OPTIONS = {"header", "enforceschema", "mode", "inferschema"}
+_CALLER_PARSE_OPTIONS = {"header", "enforceschema", "mode", "inferschema", "multiline", "linesep"}
 # Column types whose CSV parse either keeps the value or fails. Under a
 # pinned schema DateType drops a time of day and DecimalType rounds a
 # fraction, with no error, so a dataset holding either keeps inference.
@@ -66,6 +90,19 @@ _CONTRACT_TYPES = (
     T.StringType, T.IntegerType, T.LongType, T.DoubleType, T.BooleanType,
     T.TimestampType, T.TimestampNTZType,
 )
+# Column types the one-stream parse can land exactly as the line reader
+# would. A string or a double is checked by the stream's guard; an int,
+# long or boolean holding a line break does not parse. A timestamp's
+# parse drops a leading or trailing line break, and no cast reproduces
+# it, so a dataset with one is read line by line.
+_STREAM_TYPES = (T.StringType, T.IntegerType, T.LongType, T.BooleanType, T.DoubleType)
+# The reasons the stream's guard raises (as "csv_ingest: <reason>").
+# Either sends the object to the line reader, whose answer it is.
+_LINE_BREAK = "a line break in a value"
+_UNREAD_DOUBLE = "a double that a cast does not read as finite"
+_GUARDS = (_LINE_BREAK, _UNREAD_DOUBLE)
+
+_log = logging.getLogger(__name__)
 
 
 def utc_ingest_date(now: dt.datetime | None = None) -> str:
@@ -204,23 +241,107 @@ def _contract_schema(spark: SparkSession, cfg: IngestConfig) -> T.StructType | N
     return schema
 
 
-def _breaks_contract(spark: SparkSession, err: Py4JJavaError) -> bool:
-    """Whether a contract write failed because the object broke the
-    schema: a value that does not parse, or a header that does not name
-    the schema's columns. Python sees the job's bare error; the parser's
-    is on the Java cause chain."""
+def _streamable(cfg: IngestConfig, schema: T.StructType) -> bool:
+    """Whether a contract landing may be parsed as one stream: no caller
+    read option could parse it differently, no explicit file count asks
+    for more than the one file a stream writes, and every column type
+    is one the stream lands as the line reader would (``_STREAM_TYPES``)."""
+    return (
+        not cfg.extra_read_options
+        and cfg.output_files is None
+        and all(isinstance(f.dataType, _STREAM_TYPES) for f in schema.fields)
+    )
+
+
+def _raw(schema: T.StructType) -> T.StructType:
+    """The stream's read schema: each double column as its raw string."""
+    return T.StructType(
+        [T.StructField(f.name, T.StringType(), f.nullable) if isinstance(f.dataType, T.DoubleType) else f for f in schema.fields]
+    )
+
+
+def _line_mode(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """The stream ``df``'s scan as the line-mode read of the same listed
+    files under ``schema``: the relation is rebuilt around its file
+    index, so the input is not listed again."""
+    jspark = df.sparkSession._jsparkSession
+    scan = df._jdf.queryExecution().analyzed().relation()
+    relation = df.sparkSession._jvm.org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        scan.location(),
+        scan.partitionSchema(),
+        jspark.parseDataType(schema.json()),
+        scan.bucketSpec(),
+        scan.fileFormat(),
+        scan.options().removed("multiLine"),
+        jspark,
+    )
+    return DataFrame(jspark.baseRelationToDataFrame(relation), df.sparkSession)
+
+
+def _guarded(df: DataFrame, schema: T.StructType, ingest_date: str) -> DataFrame:
+    """The stream ``df`` (read under ``_raw(schema)``) as the line
+    reader would land it, guarded and stamped with ``ingest_date`` in
+    one projection: a value the line reader could land differently
+    fails the write with a ``_GUARDS`` error instead.
+
+    Line mode ends a record at CR, LF or CRLF, so no string it lands
+    holds one. A double is read raw because its CSV parse drops a
+    leading or trailing line break, and cast in a projection below the
+    guard, so it is parsed once. For a finite result the cast and the
+    CSV parse are the same ``Double.parseDouble``; anything else (NaN,
+    an infinity, a value that does not parse) is left to the line
+    reader. One line-break check for the row keeps the plan small: its
+    analysis and optimization run on the driver for every landing."""
+    fields = schema.fields
+    quoted = ["`" + f.name.replace("`", "``") + "`" for f in fields]
+    cast = {i: f"`__csv_ingest_double_{i}`" for i, f in enumerate(fields) if isinstance(f.dataType, T.DoubleType)}
+    if cast:
+        df = df.selectExpr("*", *(f"try_cast({quoted[i]} AS DOUBLE) AS {d}" for i, d in cast.items()))
+    values = [
+        f"IF(abs({cast[i]}) < double('Infinity') OR {c} IS NULL, {cast[i]}, "
+        f"raise_error('csv_ingest: {_UNREAD_DOUBLE}'))"
+        if i in cast
+        else c
+        for i, c in enumerate(quoted)
+    ]
+    checked = [i for i, f in enumerate(fields) if isinstance(f.dataType, (T.StringType, T.DoubleType))]
+    if checked:
+        # the row's one line-break check rides on a data column: a stamp
+        # that is not a literal would make the partitioned write sort
+        breaks = " OR ".join(f"contains({quoted[i]}, '\\n') OR contains({quoted[i]}, '\\r')" for i in checked)
+        values[checked[0]] = f"IF({breaks}, raise_error('csv_ingest: {_LINE_BREAK}'), {values[checked[0]]})"
+    date = "'" + ingest_date.replace("\\", "\\\\").replace("'", "\\'") + "'"  # a SQL string literal
+    return df.selectExpr(*(f"{v} AS {c}" for v, c in zip(values, quoted)), f"{date} AS ingest_date")
+
+
+def _reason(condition: str, message: str) -> str | None:
+    if condition.startswith("MALFORMED_RECORD_IN_PARSING"):
+        return "a value that does not parse"
+    if condition == "_LEGACY_ERROR_TEMP_3241" and "CSV header" in message:
+        return "a header that does not match"  # CSVHeaderChecker: a renamed or a missing column
+    if condition == "USER_RAISED_EXCEPTION":
+        return next((g for g in _GUARDS if f"csv_ingest: {g}" in message), None)
+    return None
+
+
+def _breaks_contract(spark: SparkSession, err: Exception) -> str | None:
+    """Why a contract write failed because of the object, or None for
+    any other failure: a value that does not parse, a header that does
+    not name the schema's columns, or one of the stream's guard errors
+    (``_GUARDS``). A task's user-raised error reaches Python as itself;
+    a parse error as the job's bare error, with the parser's on the
+    Java cause chain."""
+    if isinstance(err, CapturedException):
+        return _reason(err.getCondition() or "", err.getMessage())
     gateway = spark.sparkContext._gateway
     cause = err.java_exception
     while cause is not None:
         if is_instance_of(gateway, cause, "org.apache.spark.SparkThrowable"):
-            condition = cause.getCondition() or ""
-            if condition.startswith("MALFORMED_RECORD_IN_PARSING") or (
-                # CSVHeaderChecker's error, for a renamed or a missing column
-                condition == "_LEGACY_ERROR_TEMP_3241" and "CSV header" in cause.getMessage()
-            ):
-                return True
+            reason = _reason(cause.getCondition() or "", cause.getMessage())
+            if reason:
+                return reason
         cause = cause.getCause()
-    return False
+    return None
 
 
 def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
@@ -232,9 +353,10 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     table of only ``ingest_date`` cannot be partitioned by it.
 
     When the reference would infer and the dataset already has a
-    schema, the object is parsed once, by the write, under that schema;
-    if its header or values break it, the failed write leaves nothing
-    and the object is inferred as the reference does (module docstring).
+    schema, the object is parsed once, by the write, under that schema,
+    as one CSV stream when it fits one split; if its header or values
+    break it, the failed write leaves nothing and the object is
+    inferred as the reference does (module docstring).
     An input of only zero-byte objects also takes the inference path,
     for its answer.
     """
@@ -243,16 +365,37 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     ingest_date = cfg.ingest_date or utc_ingest_date()
     schema = _contract_schema(spark, cfg)
     if schema is not None:
-        options = {**cfg.extra_read_options, **_CONTRACT_OPTIONS}
-        df = read_csv(spark, replace(cfg, schema=schema, extra_read_options=options))
-        if estimated_size_bytes(df) > 0:  # the listed input bytes: no job
-            df = transform(df, ingest_date)
-            try:
-                write_partitioned(df, cfg)
-                return cfg.output_path
-            except Py4JJavaError as err:
-                if not _breaks_contract(spark, err):
-                    raise
+        streamable = _streamable(cfg, schema)
+        if streamable:
+            read = replace(cfg, schema=_raw(schema), extra_read_options={**_CONTRACT_OPTIONS, "multiLine": "true"})
+        else:
+            read = replace(cfg, schema=schema, extra_read_options={**cfg.extra_read_options, **_CONTRACT_OPTIONS})
+        df = read_csv(spark, read)
+        size = estimated_size_bytes(df)  # the listed input bytes: no job
+        if size > 0:
+            # one split: the coalesced line-mode write is one task too
+            split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+            for stream in (True, False) if streamable and size <= split else (False,):
+                if stream:
+                    frame = _guarded(df, schema, ingest_date)
+                else:
+                    frame = transform(_line_mode(df, schema) if streamable else df, ingest_date)
+                try:
+                    # one partition: one file, with no size estimate to plan
+                    write_partitioned(frame, replace(cfg, output_files=1) if stream else cfg)
+                    return cfg.output_path
+                except (Py4JJavaError, CapturedException) as err:
+                    reason = _breaks_contract(spark, err)
+                    if reason is None:
+                        raise
+                retry = reason in _GUARDS
+                _log.warning(
+                    "csv_ingest: landing %s into %s: %s; %s",
+                    cfg.source_path, cfg.output_path, reason,
+                    "re-reading it line by line" if retry else "landing it by schema inference",
+                )
+                if not retry:
+                    break
     df = read_csv(spark, cfg)
     if not df.columns:  # the schema is already resolved: no extra pass
         return None

@@ -4,6 +4,7 @@ sample.csv fixture shape (README.md:66-71)."""
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -242,6 +243,45 @@ def test_default_writes_one_file_per_max_partition_bytes(spark, tmp_path):
     ).first()
     assert got.n == rows
     assert int(got.amount * 100) == cents
+
+
+def test_contract_landing_over_one_split_keeps_line_mode(spark, tmp_path):
+    """A later landing parsed under the dataset's schema: an input over
+    one maxPartitionBytes split keeps the split-parallel line-mode read,
+    so the write still makes target_file_count (> 1) files. A multiLine
+    read of the one file would be one partition, and so one file."""
+    raw = tmp_path / "raw"
+    (raw / "incoming").mkdir(parents=True)
+    (raw / "incoming" / "sample.csv").write_text(SAMPLE)
+    lines = [f"p-{i:05d},e-{i:05d},flu,{i // 100}.{i % 100:02d}\n" for i in range(500)]
+    (raw / "incoming" / "big.csv").write_text("patient_id,encounter_id,diagnosis,amount\n" + "".join(lines))
+    cfg = IngestConfig(
+        raw_root=str(raw), curated_root=str(tmp_path / "curated"),
+        object_key="incoming/big.csv", ingest_date="2026-02-06",
+    )
+    ingest_csv(spark, replace(cfg, object_key="incoming/sample.csv", ingest_date="2026-02-05"))
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    sc = spark.sparkContext
+    sc.setJobGroup("contract_split", "contract_split")
+    try:
+        assert ingest_csv(spark, cfg) == cfg.output_path
+        jobs = len(sc.statusTracker().getJobIdsForGroup("contract_split"))
+        sc._jsc.clearJobGroup()
+        n = target_file_count(read_csv(spark, cfg))
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.conf.set(key, saved)
+    assert jobs == 1  # the contract write: no inference, no fallback
+    assert n > 1
+    assert len(_parquet_files(os.path.join(cfg.output_path, "ingest_date=2026-02-06"))) == n
+    got = spark.read.parquet(os.path.join(cfg.output_path, "ingest_date=2026-02-06")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("amount").cast("decimal(18,2)")).alias("amount"),
+    ).first()
+    assert got.n == 500
+    assert int(got.amount * 100) == sum(range(500))
 
 
 def test_unsized_rdd_frame_keeps_its_partitions(spark, tmp_path):

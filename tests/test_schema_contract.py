@@ -278,3 +278,178 @@ def test_dataset_schema_reads_the_newest_partition_with_no_job(spark, landing):
         ("patient_id", "string"), ("encounter_id", "string"), ("amount", "string"),
     ]
     assert dataset_schema(spark, os.path.join(str(landing.root), "nowhere")) is None
+
+
+EDGE_HEADER = "id,amount,note"
+EDGE_FIRST = f"{EDGE_HEADER}\n1,1.5,a\n2,2.5,b\n"
+
+
+def _scan_mode(df) -> str:
+    """How a written frame read its CSV: one multiLine stream, line by
+    line under the dataset's schema, or line by line with inference."""
+    options = df._jdf.queryExecution().analyzed().collectLeaves().head().relation().options()
+    if options.contains("multiline"):
+        return "stream"
+    return "infer" if options.contains("inferschema") else "lines"
+
+
+@pytest.fixture()
+def scan_modes(monkeypatch):
+    """The scan mode of every frame ``ingest_csv`` writes, in order."""
+    modes = []
+    write = csv_ingest.write_partitioned
+    monkeypatch.setattr(csv_ingest, "write_partitioned", lambda df, cfg: modes.append(_scan_mode(df)) or write(df, cfg))
+    return modes
+
+
+STREAMED = ["stream"]
+RE_READ = ["stream", "lines"]  # the guard raised; the line reader lands it
+STREAM_BREAKS = ["stream", "infer"]  # the stream's parse broke the schema
+BOTH_BREAK = ["stream", "lines", "infer"]
+
+
+@pytest.mark.parametrize(
+    "body, modes",
+    [
+        pytest.param("\n3,3.5,c\n4,4.5,d\n", STREAMED, id="lf"),
+        pytest.param("\r\n3,3.5,c\r\n4,4.5,d\r\n", STREAMED, id="crlf"),
+        pytest.param("\r3,3.5,c\r4,4.5,d\r", STREAMED, id="cr-only"),
+        # CRLF detected first: the lone LF joins two rows, which do not parse
+        pytest.param("\r\n3,3.5,c\r\n4,4.5,d\n5,5.5,e\r\n", STREAM_BREAKS, id="mixed-crlf-first"),
+        # LF detected first: the stream would keep 'c\r'
+        pytest.param("\n3,3.5,c\r\n4,4.5,d\n", RE_READ, id="mixed-lf-first"),
+        pytest.param("\n3,3.5,c\n4,4.5,d", STREAMED, id="no-final-newline"),
+        pytest.param("\n\n3,3.5,c\n\n\n4,4.5,d\n\n", STREAMED, id="blank-lines"),
+        pytest.param("\n3,,c\n,4.5,\n,,\n", STREAMED, id="empty-fields"),
+        pytest.param('\n3,3.5,"c,d"\n4,4.5,"e ""q"""\n', STREAMED, id="quoted-delimiter-and-quote"),
+        # the stream would land 2 rows; line mode breaks the row in two
+        pytest.param('\n3,3.5,"c\nd"\n4,4.5,e\n', BOTH_BREAK, id="quoted-lf"),
+        pytest.param('\n3,3.5,"c\r\nd"\n4,4.5,e\n', BOTH_BREAK, id="quoted-crlf"),
+        # the stream's open quote would swallow the next row
+        pytest.param('\n3,3.5,"c\n4,4.5,d\n', RE_READ, id="unclosed-quote-at-eof"),
+        pytest.param("\n3,3.5,c\n4,4.5,d\r", RE_READ, id="trailing-cr-in-string"),
+        pytest.param("\n3,3.5,c\rd\n4,4.5,e\n", BOTH_BREAK, id="lone-cr-mid-line"),
+        # a double's CSV parse would drop these line breaks
+        pytest.param('\n3,"3.5\n",c\n4,4.5,d\n', BOTH_BREAK, id="quoted-lf-in-double"),
+        pytest.param("\n3,3.5\r,c\n4,4.5,d\n", BOTH_BREAK, id="lone-cr-after-double"),
+        # parsed by the CSV reader's NaN and infinity strings, not by a cast
+        pytest.param("\n3,NaN,c\n4,Inf,d\n5,-Inf,e\n", RE_READ, id="nan-and-infinities"),
+        pytest.param("\n3,x,c\n", BOTH_BREAK, id="double-that-does-not-parse"),
+    ],
+)
+def test_edge_case_lands_as_the_line_reader_does(spark, tmp_path, scan_modes, body, modes):
+    """Each input lands what the inference path lands from it (the
+    dataset's types are the ones inference finds here), along the
+    scans listed. A multiLine stream alone would land different rows
+    for the quoted line breaks, the unclosed quote, the trailing CR,
+    LF-first mixed endings and a line break beside a double."""
+    landing = Landing(spark, tmp_path, first=EDGE_FIRST)
+    name = landing.put("edge.csv", EDGE_HEADER + body)
+    scan_modes.clear()
+    out, _ = landing.land(name)
+    assert scan_modes == modes
+    want_out, want = landing.inferred(name)
+    got = landing.partition(DATE)
+    assert out == want_out == landing.config(name, DATE).output_path
+    assert got.dtypes == want.dtypes
+    assert repr(_rows(got)) == repr(_rows(want))  # NaN-safe
+
+
+def test_utf8_bom_lands_as_inference_does(spark, tmp_path, scan_modes):
+    """Both readers drop a UTF-8 byte order mark before the header."""
+    landing = Landing(spark, tmp_path, first=EDGE_FIRST)
+    name = landing.put("bom.csv", f"﻿{EDGE_HEADER}\n3,3.5,c\n")
+    scan_modes.clear()
+    landing.land(name)
+    assert scan_modes == STREAMED
+    _, want = landing.inferred(name)
+    assert _rows(landing.partition(DATE)) == _rows(want) == [(3, 3.5, "c")]
+
+
+def test_re_read_keeps_the_dataset_types(spark, tmp_path, scan_modes):
+    """A guard error re-reads the object under the dataset's schema, so
+    an object of whole-number amounts is stored as double, as the line
+    reader stores it, not as the int inference would find."""
+    landing = Landing(spark, tmp_path, first=EDGE_FIRST)
+    name = landing.put("ints.csv", f"{EDGE_HEADER}\n3,3,c\r\n4,4,d\n")
+    scan_modes.clear()
+    landing.land(name)
+    assert scan_modes == RE_READ
+    got = landing.partition(DATE)
+    assert dict(got.dtypes)["amount"] == "double"
+    assert _rows(got) == [(3, 3.0, "c"), (4, 4.0, "d")]
+
+
+def test_timestamp_dataset_is_read_line_by_line(spark, tmp_path, scan_modes):
+    """A timestamp's CSV parse drops a line break at either end of the
+    value, which the guard cannot see, so such a dataset never streams."""
+    landing = Landing(spark, tmp_path, first="id,ts\n1,2024-01-01 10:00:00\n")
+    name = landing.put("ts.csv", 'id,ts\n2,"2024-01-02 10:00:00\n"\n3,2024-01-03 10:00:00\n')
+    scan_modes.clear()
+    landing.land(name)
+    assert scan_modes == ["lines", "infer"]
+    _, want = landing.inferred(name)
+    assert _rows(landing.partition(DATE)) == _rows(want)
+
+
+@pytest.mark.parametrize(
+    "body, reasons",
+    [
+        ("p-3,3,30.75\n", []),
+        ("p-3,three,30.75\n", ["a value that does not parse; landing it by schema inference"]),
+        (
+            'p-3,3,"30.75\n"\n',
+            [
+                "a line break in a value; re-reading it line by line",
+                "a value that does not parse; landing it by schema inference",
+            ],
+        ),
+    ],
+)
+def test_each_fallback_logs_one_warning(landing, caplog, body, reasons):
+    name = landing.put("logged.csv", HEADER + body)
+    with caplog.at_level("WARNING", logger=csv_ingest.__name__):
+        landing.land(name)
+    cfg = landing.config(name, DATE)
+    prefix = f"csv_ingest: landing {cfg.source_path} into {cfg.output_path}: "
+    records = [r for r in caplog.records if r.name == csv_ingest.__name__]
+    assert [r.levelname for r in records] == ["WARNING"] * len(reasons)
+    assert [r.getMessage() for r in records] == [prefix + r for r in reasons]
+
+
+def test_header_change_logs_its_reason(landing, caplog):
+    name = landing.put("renamed.csv", "patient_id,encounter_no,amount\np-9,9,9.5\n")
+    with caplog.at_level("WARNING", logger=csv_ingest.__name__):
+        landing.land(name)
+    assert [r.getMessage().rsplit(": ", 1)[1] for r in caplog.records if r.name == csv_ingest.__name__] == [
+        "a header that does not match; landing it by schema inference"
+    ]
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"output_files": 2},
+        {"extra_read_options": {"sep": ","}},
+    ],
+)
+def test_caller_settings_keep_line_mode(spark, tmp_path, scan_modes, kw):
+    """An explicit file count or read option is the caller's: the object
+    is read line by line, as before, and still under the contract."""
+    landing = Landing(spark, tmp_path, first=EDGE_FIRST)
+    name = landing.put("plain.csv", f"{EDGE_HEADER}\n3,3.5,c\n")
+    scan_modes.clear()
+    landing.land(name, **kw)
+    assert scan_modes == ["lines"]
+    assert _rows(landing.partition(DATE)) == [(3, 3.5, "c")]
+
+
+def test_streamed_write_is_not_sorted(spark, landing):
+    """The stamp stays a literal, so the partitioned write of the guarded
+    stream needs no sort by ``ingest_date``; the guard rides on a data
+    column."""
+    landing.land(landing.put("match.csv", HEADER + "p-3,3,30.75\n"))
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = executions.apply(executions.size() - 1).physicalPlanDescription()
+    assert "raise_error" in plan
+    assert "Sort" not in plan
