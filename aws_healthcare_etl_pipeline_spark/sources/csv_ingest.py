@@ -6,6 +6,7 @@ Reference behavior being reproduced (cited for parity checking):
   - non-CSV guard (skip, don't fail) ........... glue_job_script.py:33-35
   - stamp driver-time UTC ``ingest_date`` ...... glue_job_script.py:26,44
   - append write partitioned by ingest_date .... glue_job_script.py:48-53
+    (the stamp is stored in the path only, as ``partitionBy`` stores it)
 
 Deliberate departures, for 100 TB scale (SURVEY.md §4):
   - ``repartition(1)`` (glue_job_script.py:49) is NOT the default.
@@ -38,7 +39,7 @@ Deliberate departures, for 100 TB scale (SURVEY.md §4):
     per line. A larger input keeps line mode and its split-parallel
     parse. Line mode ends a record at CR, LF or CRLF, so the two
     readers differ only where a value would hold a line break; a guard
-    in the stamping projection fails the stream's write on such a
+    in the stream's one projection fails the write on such a
     value, and the object is re-read line by line under the same
     schema, which lands what line mode always landed. A double is read
     raw and cast, because its CSV parse drops a leading or trailing
@@ -47,11 +48,25 @@ Deliberate departures, for 100 TB scale (SURVEY.md §4):
     judged on the listed bytes, so an input just under one split, which
     line mode's larger projected estimate wrote as two files, is one
     file now. A stream whose header or value breaks the
-    schema goes to inference directly (for mixed line endings that the
-    line reader would have parsed, that stores the object's own
-    inferred types). The inference path stays in line mode: it is the
+    schema goes to inference directly, unless the raw record or value
+    it broke on holds a line break: that is a record the stream split
+    differently (mixed line endings), and it is re-read line by line
+    first. The inference path stays in line mode: it is the
     reference's read. So does the streaming variant: its options are
     fixed for the query's life, and its objects are small.
+  - an append writes straight into its partition directory. Every row
+    of a landing has the same ``ingest_date``, known before the job
+    starts, so ``write_partitioned`` writes the unstamped rows as plain
+    Parquet into ``<output_path>/ingest_date=<value>`` (named as
+    ``partitionBy`` names it) instead of passing every row through
+    Spark's dynamic-partition writer to learn that value. The rows and
+    footers are the ones ``partitionBy`` writes; the job's
+    ``_temporary`` and ``_SUCCESS`` now sit in the partition directory,
+    which job setup creates. A write of no rows, which Spark's
+    unpartitioned writer still commits as one file, and a failed write
+    leave no file and no directory behind. The file count is sized on
+    the rows as stored, without a stamp column. ``overwrite_partition``
+    keeps ``partitionBy``.
   - optional idempotent mode: dynamic partition overwrite instead of
     blind append, so a retried job does not duplicate rows
     (glue_job_script.py:51 + main.tf:150 allow duplicates on retry).
@@ -64,7 +79,7 @@ import json
 import logging
 from dataclasses import dataclass, field, replace
 
-from py4j.java_gateway import is_instance_of
+from py4j.java_gateway import JavaClass, is_instance_of
 from py4j.protocol import Py4JJavaError
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
@@ -101,8 +116,19 @@ _STREAM_TYPES = (T.StringType, T.IntegerType, T.LongType, T.BooleanType, T.Doubl
 _LINE_BREAK = "a line break in a value"
 _UNREAD_DOUBLE = "a double that a cast does not read as finite"
 _GUARDS = (_LINE_BREAK, _UNREAD_DOUBLE)
+_UNPARSED = "a value that does not parse"
+# A stream's parse error on a raw record or value that holds a line
+# break: the stream cut the records where the line reader would not
+# (mixed line endings), so the line reader's answer is also wanted.
+_SPLIT_RECORD = "a record that does not parse across a line break"
 
 _log = logging.getLogger(__name__)
+
+
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """The JVM class ``name``. A ``spark._jvm.a.b.C`` path costs one py4j
+    round trip per name part (about 0.5 ms each); this costs none."""
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
 
 
 def utc_ingest_date(now: dt.datetime | None = None) -> str:
@@ -167,26 +193,100 @@ def read_csv(spark: SparkSession, cfg: IngestConfig) -> DataFrame:
     return reader.csv(cfg.source_path)
 
 
-def transform(df: DataFrame, ingest_date: str) -> DataFrame:
-    """The reference's one transform: stamp every row with ingest_date
-    (glue_job_script.py:44). Pass-through projection otherwise."""
-    return df.withColumn("ingest_date", F.lit(ingest_date))
-
-
 def write_partitioned(df: DataFrame, cfg: IngestConfig) -> None:
+    """Write the landing ``df`` (no ``ingest_date`` column) as the
+    ``cfg.ingest_date`` partition of ``cfg.output_path`` (default: the
+    driver's UTC date).
+
+    An append is a plain Parquet write into the partition's directory,
+    named as Spark's partitioned writer names it (the value escaped by
+    ``ExternalCatalogUtils.getPartitionPathString``: ``/``, ``=``,
+    ``%``, ``:`` and more): the one partition value is known before the
+    job starts, so no row goes through the dynamic-partition writer.
+    ``overwrite_partition`` keeps ``partitionBy`` with dynamic
+    overwrite, whose staging keeps the partition's earlier rows until
+    the job commits.
+    """
+    ingest_date = cfg.ingest_date or utc_ingest_date()
     # coalesce, not the reference's repartition(1) (glue_job_script.py:49):
     # no shuffle, just fewer output tasks. Each output file costs a task
     # plus its commit and per-file filesystem calls, so a small landing
     # is written as one file rather than one per input split.
     n = cfg.output_files if cfg.output_files is not None else target_file_count(df)
     df = df.coalesce(n)
-    writer = df.write.partitionBy("ingest_date")
     if cfg.mode == "overwrite_partition":
         # idempotent re-run: replaces only the partitions present in df
-        writer = writer.option("partitionOverwriteMode", "dynamic").mode("overwrite")
+        (
+            df.withColumn("ingest_date", F.lit(ingest_date))
+            .write.partitionBy("ingest_date")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(cfg.output_path)
+        )
     else:
-        writer = writer.mode("append")
-    writer.parquet(cfg.output_path)
+        catalog_utils = _jclass(df.sparkSession, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils")
+        _append(df, f"{cfg.output_path.rstrip('/')}/{catalog_utils.getPartitionPathString('ingest_date', ingest_date)}")
+
+
+def _append(df: DataFrame, path: str) -> None:
+    """Append ``df`` as Parquet files to the directory ``path``. A write
+    that fails, or commits no rows, leaves no file and no directory of
+    its own behind."""
+    spark = df.sparkSession
+    # the command DataFrameWriter.parquet runs, run here so its write
+    # metrics, set on the driver as the job ends, can be read
+    command = df._jdf.write().mode("append").format("parquet").saveCommand(_jclass(spark, "scala.Some")(path))
+    execution = spark._jsparkSession.sessionState().executePlan(
+        command, _jclass(spark, "org.apache.spark.sql.execution.CommandExecutionMode").ALL()
+    )
+    try:
+        execution.assertCommandExecuted()
+    except Exception:
+        # job setup made the directory and the aborted job emptied it
+        _drop_empty(spark, path)
+        raise
+    metrics = execution.commandExecuted().commandPhysicalPlan().metrics()
+    if metrics.apply("numOutputRows").value() == 0:
+        # the unpartitioned writer commits one file even for no rows
+        _drop_empty(spark, path, empty_file_bytes=metrics.apply("numOutputBytes").value())
+
+
+def _drop_empty(spark: SparkSession, path: str, empty_file_bytes: int | None = None) -> None:
+    """Remove what a write of nothing left in the directory ``path``: one
+    data file of ``empty_file_bytes`` bytes with no rows (when given),
+    then the directory if no data file and no other writer's
+    ``_temporary`` is left in it."""
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    target = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
+    fs = target.getFileSystem(conf)
+    if not fs.exists(target):  # the write failed before job setup
+        return
+    entries = list(fs.listStatus(target))  # checksum files are not listed
+    if empty_file_bytes is not None:
+        for status in entries:
+            # a data file (Spark reads no "_*" or ".*" file) of no rows
+            if (
+                status.getPath().getName()[:1] not in "_."
+                and status.getLen() == empty_file_bytes
+                and _footer(spark, status, conf).getBlocks().isEmpty()
+            ):
+                fs.delete(status.getPath(), False)
+                entries.remove(status)
+                break
+    if all(e.getPath().getName() == "_SUCCESS" for e in entries):
+        fs.delete(target, True)
+
+
+def _footer(spark: SparkSession, status, conf):
+    """The Parquet footer of the file ``status``, read on the driver with
+    the calls sparkgraft.sql.FooterRowCounts reads footers with."""
+    file = _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, conf)
+    options = _jclass(spark, "org.apache.parquet.HadoopReadOptions").builder(conf).build()
+    stream = file.newStream()
+    try:
+        return _jclass(spark, "org.apache.parquet.hadoop.ParquetFileReader").readFooter(file, options, stream)
+    finally:
+        stream.close()
 
 
 def dataset_schema(spark: SparkSession, path: str) -> T.StructType | None:
@@ -194,38 +294,30 @@ def dataset_schema(spark: SparkSession, path: str) -> T.StructType | None:
     ``path``, or None when it has none.
 
     Read from one footer: the first ``.parquet`` data file by name in
-    the newest ``ingest_date=`` partition. The driver lists and opens it
-    with the Hadoop and parquet-hadoop classes Spark ships, in a number
-    of calls from Python that does not grow with the partition count,
-    and runs no Spark job. The schema lives with the data, not in a
-    per-process memo, because each reference Glue run is a fresh
-    process. None also when the footer has no Spark row metadata
-    (Parquet another engine wrote).
+    the newest ``ingest_date=`` partition that holds one (a directory a
+    writer has set up and not yet committed, or a crashed writer left,
+    holds none). The driver lists and opens it with the Hadoop and
+    parquet-hadoop classes Spark ships, in a number of calls from
+    Python that does not grow with the partition count while the
+    newest partitions hold data, and runs no Spark job. The schema
+    lives with the data, not in a per-process memo, because each
+    reference Glue run is a fresh process. None also when the footer
+    has no Spark row metadata (Parquet another engine wrote).
     """
-    jvm = spark._jvm
-    fs_, parquet = jvm.org.apache.hadoop.fs, jvm.org.apache.parquet
+    path_class = _jclass(spark, "org.apache.hadoop.fs.Path")
     conf = spark._jsparkSession.sessionState().newHadoopConf()
-    root = fs_.Path(path)
+    root = path_class(path)
     fs = root.getFileSystem(conf)
 
     # globStatus sorts its matches by path (HADOOP-10798): the last
     # partition is the newest; Spark reads no file named "_*" or ".*"
-    parts = fs.globStatus(fs_.Path(root, "ingest_date=*"))
-    if not parts:  # None when the path does not exist
-        return None
-    files = fs.globStatus(fs_.Path(parts[-1].getPath(), "[!_.]*.parquet"))
-    if not files:
-        return None
-    # the calls sparkgraft.sql.FooterRowCounts reads footers with
-    footer = parquet.hadoop.util.HadoopInputFile.fromStatus(files[0], conf)
-    options = parquet.HadoopReadOptions.builder(conf).build()
-    stream = footer.newStream()
-    try:
-        metadata = parquet.hadoop.ParquetFileReader.readFooter(footer, options, stream)
-    finally:
-        stream.close()
-    meta = metadata.getFileMetaData().getKeyValueMetaData().get(_ROW_METADATA)
-    return T.StructType.fromJson(json.loads(meta)) if meta else None
+    parts = fs.globStatus(path_class(root, "ingest_date=*")) or []  # None: no such path
+    for i in range(len(parts) - 1, -1, -1):
+        files = fs.globStatus(path_class(parts[i].getPath(), "[!_.]*.parquet"))
+        if files:
+            meta = _footer(spark, files[0], conf).getFileMetaData().getKeyValueMetaData().get(_ROW_METADATA)
+            return T.StructType.fromJson(json.loads(meta)) if meta else None
+    return None
 
 
 def _contract_schema(spark: SparkSession, cfg: IngestConfig) -> T.StructType | None:
@@ -266,7 +358,7 @@ def _line_mode(df: DataFrame, schema: T.StructType) -> DataFrame:
     index, so the input is not listed again."""
     jspark = df.sparkSession._jsparkSession
     scan = df._jdf.queryExecution().analyzed().relation()
-    relation = df.sparkSession._jvm.org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+    relation = _jclass(df.sparkSession, "org.apache.spark.sql.execution.datasources.HadoopFsRelation")(
         scan.location(),
         scan.partitionSchema(),
         jspark.parseDataType(schema.json()),
@@ -278,45 +370,44 @@ def _line_mode(df: DataFrame, schema: T.StructType) -> DataFrame:
     return DataFrame(jspark.baseRelationToDataFrame(relation), df.sparkSession)
 
 
-def _guarded(df: DataFrame, schema: T.StructType, ingest_date: str) -> DataFrame:
+def _guarded(df: DataFrame, schema: T.StructType) -> DataFrame:
     """The stream ``df`` (read under ``_raw(schema)``) as the line
-    reader would land it, guarded and stamped with ``ingest_date`` in
-    one projection: a value the line reader could land differently
-    fails the write with a ``_GUARDS`` error instead.
+    reader would land it, in one projection: a value the line reader
+    could land differently fails the write with a ``_GUARDS`` error
+    instead.
 
     Line mode ends a record at CR, LF or CRLF, so no string it lands
     holds one. A double is read raw because its CSV parse drops a
-    leading or trailing line break, and cast in a projection below the
-    guard, so it is parsed once. For a finite result the cast and the
-    CSV parse are the same ``Double.parseDouble``; anything else (NaN,
-    an infinity, a value that does not parse) is left to the line
-    reader. One line-break check for the row keeps the plan small: its
-    analysis and optimization run on the driver for every landing."""
+    leading or trailing line break, and cast by the projection, once
+    per value. For a finite result the cast and the CSV parse are the
+    same ``Double.parseDouble``; anything else (NaN, an infinity, a
+    value that does not parse) is left to the line reader. One
+    line-break check for the row keeps the plan small: its analysis
+    and optimization run on the driver for every landing. It rides on
+    a data column, the only place a projection that adds no column can
+    fail a row."""
     fields = schema.fields
     quoted = ["`" + f.name.replace("`", "``") + "`" for f in fields]
-    cast = {i: f"`__csv_ingest_double_{i}`" for i, f in enumerate(fields) if isinstance(f.dataType, T.DoubleType)}
-    if cast:
-        df = df.selectExpr("*", *(f"try_cast({quoted[i]} AS DOUBLE) AS {d}" for i, d in cast.items()))
+    # a double's check is NULL or an error, coalesced with the cast: the
+    # cast is in both of coalesce's inputs, so codegen evaluates it once
     values = [
-        f"IF(abs({cast[i]}) < double('Infinity') OR {c} IS NULL, {cast[i]}, "
-        f"raise_error('csv_ingest: {_UNREAD_DOUBLE}'))"
-        if i in cast
+        f"coalesce(IF(abs(try_cast({c} AS DOUBLE)) < double('Infinity') OR {c} IS NULL, NULL, "
+        f"raise_error('csv_ingest: {_UNREAD_DOUBLE}')), try_cast({c} AS DOUBLE))"
+        if isinstance(f.dataType, T.DoubleType)
         else c
-        for i, c in enumerate(quoted)
+        for f, c in zip(fields, quoted)
     ]
     checked = [i for i, f in enumerate(fields) if isinstance(f.dataType, (T.StringType, T.DoubleType))]
     if checked:
-        # the row's one line-break check rides on a data column: a stamp
-        # that is not a literal would make the partitioned write sort
         breaks = " OR ".join(f"contains({quoted[i]}, '\\n') OR contains({quoted[i]}, '\\r')" for i in checked)
         values[checked[0]] = f"IF({breaks}, raise_error('csv_ingest: {_LINE_BREAK}'), {values[checked[0]]})"
-    date = "'" + ingest_date.replace("\\", "\\\\").replace("'", "\\'") + "'"  # a SQL string literal
-    return df.selectExpr(*(f"{v} AS {c}" for v, c in zip(values, quoted)), f"{date} AS ingest_date")
+    return df.selectExpr(*(f"{v} AS {c}" for v, c in zip(values, quoted)))
 
 
-def _reason(condition: str, message: str) -> str | None:
+def _reason(condition: str, message: str, below=None) -> str | None:
+    """The reason for a Spark error, given its Java cause ``below``."""
     if condition.startswith("MALFORMED_RECORD_IN_PARSING"):
-        return "a value that does not parse"
+        return _SPLIT_RECORD if _holds_line_break(below) else _UNPARSED
     if condition == "_LEGACY_ERROR_TEMP_3241" and "CSV header" in message:
         return "a header that does not match"  # CSVHeaderChecker: a renamed or a missing column
     if condition == "USER_RAISED_EXCEPTION":
@@ -324,20 +415,33 @@ def _reason(condition: str, message: str) -> str | None:
     return None
 
 
+def _holds_line_break(cause) -> bool:
+    """Whether an error under a parse failure quotes a line break: the
+    raw record of a token-count error, or the value a number or boolean
+    parse rejected."""
+    while cause is not None:
+        message = cause.getMessage() or ""
+        if "\n" in message or "\r" in message:
+            return True
+        cause = cause.getCause()
+    return False
+
+
 def _breaks_contract(spark: SparkSession, err: Exception) -> str | None:
     """Why a contract write failed because of the object, or None for
-    any other failure: a value that does not parse, a header that does
-    not name the schema's columns, or one of the stream's guard errors
-    (``_GUARDS``). A task's user-raised error reaches Python as itself;
-    a parse error as the job's bare error, with the parser's on the
-    Java cause chain."""
+    any other failure: a value that does not parse (``_SPLIT_RECORD``
+    when the raw record or value quoted under the parse error holds a
+    line break), a header that does not name the schema's columns, or
+    one of the stream's guard errors (``_GUARDS``). A task's
+    user-raised error reaches Python as itself; a parse error as the
+    job's bare error, with the parser's on the Java cause chain."""
     if isinstance(err, CapturedException):
         return _reason(err.getCondition() or "", err.getMessage())
     gateway = spark.sparkContext._gateway
     cause = err.java_exception
     while cause is not None:
         if is_instance_of(gateway, cause, "org.apache.spark.SparkThrowable"):
-            reason = _reason(cause.getCondition() or "", cause.getMessage())
+            reason = _reason(cause.getCondition() or "", cause.getMessage(), cause.getCause())
             if reason:
                 return reason
         cause = cause.getCause()
@@ -362,7 +466,8 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     """
     if cfg.object_key and not is_csv_object(cfg.object_key):
         return None
-    ingest_date = cfg.ingest_date or utc_ingest_date()
+    # one date for every write of this landing
+    landing = replace(cfg, ingest_date=cfg.ingest_date or utc_ingest_date())
     schema = _contract_schema(spark, cfg)
     if schema is not None:
         streamable = _streamable(cfg, schema)
@@ -377,18 +482,18 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
             split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
             for stream in (True, False) if streamable and size <= split else (False,):
                 if stream:
-                    frame = _guarded(df, schema, ingest_date)
+                    frame = _guarded(df, schema)
                 else:
-                    frame = transform(_line_mode(df, schema) if streamable else df, ingest_date)
+                    frame = _line_mode(df, schema) if streamable else df
                 try:
                     # one partition: one file, with no size estimate to plan
-                    write_partitioned(frame, replace(cfg, output_files=1) if stream else cfg)
+                    write_partitioned(frame, replace(landing, output_files=1) if stream else landing)
                     return cfg.output_path
                 except (Py4JJavaError, CapturedException) as err:
                     reason = _breaks_contract(spark, err)
                     if reason is None:
                         raise
-                retry = reason in _GUARDS
+                retry = stream and reason in (*_GUARDS, _SPLIT_RECORD)
                 _log.warning(
                     "csv_ingest: landing %s into %s: %s; %s",
                     cfg.source_path, cfg.output_path, reason,
@@ -399,5 +504,5 @@ def ingest_csv(spark: SparkSession, cfg: IngestConfig) -> str | None:
     df = read_csv(spark, cfg)
     if not df.columns:  # the schema is already resolved: no extra pass
         return None
-    write_partitioned(transform(df, ingest_date), cfg)
+    write_partitioned(df, landing)
     return cfg.output_path

@@ -8,7 +8,7 @@ at-least-once with duplicate rows possible on retry
 Spark-native: a Structured Streaming *file source* watches the incoming
 directory — "exactly the new files" semantics come from the source's
 checkpointed file log, an upgrade from at-least-once. The per-file
-transform runs inside ``foreachBatch`` so the sink is the same
+write runs inside ``foreachBatch`` so the sink is the same
 partitioned-parquet writer as the batch path; ``Trigger.AvailableNow``
 processes the backlog then stops, which is the runbook-friendly local
 equivalent of the always-on event rule.
@@ -19,13 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..sources.csv_ingest import (
-    CSV_GLOB,
-    IngestConfig,
-    transform,
-    utc_ingest_date,
-    write_partitioned,
-)
+from ..sources.csv_ingest import CSV_GLOB, IngestConfig, write_partitioned
 
 
 def start_incremental_ingest(
@@ -39,8 +33,10 @@ def start_incremental_ingest(
     streaming CSV->parquet ingest.
 
     Streaming file sources require an explicit schema (no inferSchema)
-    — the SURVEY.md §7 'dual path'. Each micro-batch is stamped and
-    appended exactly once per input file thanks to the checkpoint.
+    — the SURVEY.md §7 'dual path'. Each micro-batch is appended to
+    its ``ingest_date`` partition (``cfg.ingest_date``, else the UTC
+    date when the batch runs) exactly once per input file thanks to
+    the checkpoint.
     """
     stream = (
         spark.readStream.schema(schema)
@@ -50,9 +46,7 @@ def start_incremental_ingest(
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        write_partitioned(
-            transform(batch_df, cfg.ingest_date or utc_ingest_date()), cfg
-        )
+        write_partitioned(batch_df, cfg)
 
     writer = (
         stream.writeStream.foreachBatch(sink)

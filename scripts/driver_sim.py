@@ -16,9 +16,16 @@ Queries without an oracle must run and return columns. ``--out FILE``
 writes one record per query (rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err); exits 1 if any query fails.
 
+``--session package`` builds the same session through
+``session.get_spark`` instead, with the same settings on top of its
+defaults. That session loads the package jar, so the gate then also
+covers the jar's ``file://`` filesystem and the ``FooterRowCounts``
+optimizer rule, which the plain session never loads.
+
 Usage:
   python scripts/driver_sim.py [--sf DIR] q1 q2 ...
   python scripts/driver_sim.py --all --out ds.json
+  python scripts/driver_sim.py --session package ref_ingest_roundtrip
 """
 
 from __future__ import annotations
@@ -97,19 +104,34 @@ def _isolate_from_repo() -> str:
     return tmp
 
 
+# the driver's session settings, in both session modes
+DRIVER_CONF = {
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.session.timeZone": "America/New_York",
+    "spark.driver.memory": "8g",
+    "spark.ui.showConsoleProgress": "false",
+}
+
+
+def _session(kind: str) -> SparkSession:
+    if kind == "package":
+        from aws_healthcare_etl_pipeline_spark.session import get_spark
+
+        return get_spark(app_name="driver_sim", master="local[16]", extra_conf=DRIVER_CONF)
+    builder = SparkSession.builder.master("local[16]").appName("driver_sim")
+    for k, v in DRIVER_CONF.items():
+        builder = builder.config(k, v)
+    return builder.getOrCreate()
+
+
 def run(args, names: list[str], qs, oracles) -> list[str]:
     """Build the driver-like session, run entry() and every named
     query against its oracle; returns the failing names."""
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("driver_sim")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = _session(args.session)
+    print(
+        f"session: {args.session}, timezone {spark.conf.get('spark.sql.session.timeZone')}, "
+        f"extensions {spark.conf.get('spark.sql.extensions', '')!r}"
     )
-    print(f"session timezone: {spark.conf.get('spark.sql.session.timeZone')}")
     duck = duckdb.connect()
     for t in TABLES:
         duck.execute(
@@ -154,6 +176,10 @@ def main() -> None:
     ap.add_argument("--sf", default=SF_CORRECTNESS, metavar="DIR")
     ap.add_argument("--all", action="store_true", help="every queries() entry")
     ap.add_argument("--out", default=None, metavar="FILE")
+    ap.add_argument(
+        "--session", choices=("plain", "package"), default="plain",
+        help="plain: the driver's SparkSession; package: the same settings through get_spark",
+    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
     args.sf = os.path.abspath(args.sf)

@@ -132,10 +132,12 @@ def census(tmp_path_factory) -> dict:
 def test_flow_ran(census):
     assert "error" not in census, census["error"]
     assert census["golden"] == [["2026-01-02", 2], ["2026-01-01", 3]]
-    # checksums and the commit marker are still written
+    # checksums and the commit markers are still written: each landing
+    # commits its own partition directory, so each holds a _SUCCESS
     assert census["checkpoint_commits"] == [".0.crc", "0"]
     assert census["curated"] == [
-        "._SUCCESS.crc", "_SUCCESS", "parquet", "parquet", "parquet.crc", "parquet.crc",
+        "._SUCCESS.crc", "._SUCCESS.crc", "_SUCCESS", "_SUCCESS",
+        "parquet", "parquet", "parquet.crc", "parquet.crc",
     ]
 
 

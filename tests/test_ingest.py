@@ -15,7 +15,6 @@ from aws_healthcare_etl_pipeline_spark.sources.csv_ingest import (
     is_csv_object,
     read_csv,
     resolve_source_path,
-    transform,
     utc_ingest_date,
     write_partitioned,
 )
@@ -228,7 +227,7 @@ def test_default_writes_one_file_per_max_partition_bytes(spark, tmp_path):
     saved = spark.conf.get(key)
     spark.conf.set(key, "4096")
     try:
-        df = transform(read_csv(spark, cfg), cfg.ingest_date)
+        df = read_csv(spark, cfg)
         n = target_file_count(df)
         splits = df.rdd.getNumPartitions()
         write_partitioned(df, cfg)
@@ -297,7 +296,7 @@ def test_unsized_rdd_frame_keeps_its_partitions(spark, tmp_path):
         curated_root=str(tmp_path / "curated"),
         ingest_date="2026-02-07",
     )
-    write_partitioned(transform(df, cfg.ingest_date), cfg)
+    write_partitioned(df, cfg)
     assert len(_parquet_files(os.path.join(cfg.output_path, "ingest_date=2026-02-07"))) == 3
     assert spark.read.parquet(cfg.output_path).count() == 30
 

@@ -28,6 +28,7 @@ from aws_healthcare_etl_pipeline_spark.sources.csv_ingest import (
     dataset_schema,
     ingest_csv,
 )
+from tests.test_footer_counts import README, rule_excluded
 
 HEADER = "patient_id,encounter_id,amount\n"
 FIRST = HEADER + "p-1,1,10.25\np-2,2,20.50\n"
@@ -280,6 +281,55 @@ def test_dataset_schema_reads_the_newest_partition_with_no_job(spark, landing):
     assert dataset_schema(spark, os.path.join(str(landing.root), "nowhere")) is None
 
 
+def test_dataset_schema_passes_over_partitions_with_no_data_file(spark, landing):
+    """A newer directory that holds no data file (a write set up and not
+    yet committed, or a crashed writer's) is passed over: the schema
+    still comes from a footer, with no job, and the next matching
+    landing is still the one contract write."""
+    root = landing.root / "curated" / "athena"
+    (root / "ingest_date=2026-12-31" / "_temporary" / "0").mkdir(parents=True)
+    (root / "ingest_date=2026-12-30").mkdir()
+    schema, jobs = _jobs(spark, lambda: dataset_schema(spark, str(root)))
+    assert jobs == 0
+    assert [(f.name, f.dataType.simpleString()) for f in schema.fields] == [
+        ("patient_id", "string"), ("encounter_id", "int"), ("amount", "double"),
+    ]
+    out, jobs = landing.land(landing.put("match.csv", HEADER + "p-3,3,30.75\n"))
+    assert out is not None and jobs == 1
+
+
+def test_empty_object_into_an_existing_partition(landing):
+    """A header-only object landed into a partition that holds data adds
+    no file: the one empty file the write commits is removed, and the
+    directory and its data stay."""
+    before = landing.files()
+    out, jobs = landing.land(landing.put("empty.csv", HEADER), FIRST_DATE)
+    assert out == landing.config("empty.csv", FIRST_DATE).output_path and jobs == 1
+    assert landing.files() == before
+    assert _rows(landing.partition(FIRST_DATE)) == [("p-1", 1, 10.25), ("p-2", 2, 20.5)]
+
+
+def test_failed_write_leaves_no_partition_directory(landing, monkeypatch):
+    """The directory a failed contract write's job set up is removed:
+    before the fallback write of an object that breaks the schema, and
+    after an error that propagates."""
+    athena = landing.root / "curated" / "athena"
+    seen = []
+    write = csv_ingest.write_partitioned
+
+    def spy(df, cfg):
+        seen.append((athena / f"ingest_date={cfg.ingest_date}").exists())
+        return write(df, cfg)
+
+    monkeypatch.setattr(csv_ingest, "write_partitioned", spy)
+    out, jobs = landing.land(landing.put("bad.csv", HEADER + "p-3,three,30.75\n"))
+    assert out is not None and jobs == 4
+    assert seen == [False, False]  # before the contract write and before the fallback
+    with pytest.raises(Py4JJavaError, match="TextParsingException"):
+        landing.land(landing.put("wide.csv", HEADER + "p-4,4,40.5\n"), "2026-06-03", extra_read_options={"maxColumns": "2"})
+    assert sorted(os.listdir(athena)) == [f"ingest_date={FIRST_DATE}", f"ingest_date={DATE}"]
+
+
 EDGE_HEADER = "id,amount,note"
 EDGE_FIRST = f"{EDGE_HEADER}\n1,1.5,a\n2,2.5,b\n"
 
@@ -304,39 +354,42 @@ def scan_modes(monkeypatch):
 
 STREAMED = ["stream"]
 RE_READ = ["stream", "lines"]  # the guard raised; the line reader lands it
-STREAM_BREAKS = ["stream", "infer"]  # the stream's parse broke the schema
+STREAM_BREAKS = ["stream", "infer"]  # a value the stream parsed breaks the schema
 BOTH_BREAK = ["stream", "lines", "infer"]
 
 
-@pytest.mark.parametrize(
-    "body, modes",
-    [
-        pytest.param("\n3,3.5,c\n4,4.5,d\n", STREAMED, id="lf"),
-        pytest.param("\r\n3,3.5,c\r\n4,4.5,d\r\n", STREAMED, id="crlf"),
-        pytest.param("\r3,3.5,c\r4,4.5,d\r", STREAMED, id="cr-only"),
-        # CRLF detected first: the lone LF joins two rows, which do not parse
-        pytest.param("\r\n3,3.5,c\r\n4,4.5,d\n5,5.5,e\r\n", STREAM_BREAKS, id="mixed-crlf-first"),
-        # LF detected first: the stream would keep 'c\r'
-        pytest.param("\n3,3.5,c\r\n4,4.5,d\n", RE_READ, id="mixed-lf-first"),
-        pytest.param("\n3,3.5,c\n4,4.5,d", STREAMED, id="no-final-newline"),
-        pytest.param("\n\n3,3.5,c\n\n\n4,4.5,d\n\n", STREAMED, id="blank-lines"),
-        pytest.param("\n3,,c\n,4.5,\n,,\n", STREAMED, id="empty-fields"),
-        pytest.param('\n3,3.5,"c,d"\n4,4.5,"e ""q"""\n', STREAMED, id="quoted-delimiter-and-quote"),
-        # the stream would land 2 rows; line mode breaks the row in two
-        pytest.param('\n3,3.5,"c\nd"\n4,4.5,e\n', BOTH_BREAK, id="quoted-lf"),
-        pytest.param('\n3,3.5,"c\r\nd"\n4,4.5,e\n', BOTH_BREAK, id="quoted-crlf"),
-        # the stream's open quote would swallow the next row
-        pytest.param('\n3,3.5,"c\n4,4.5,d\n', RE_READ, id="unclosed-quote-at-eof"),
-        pytest.param("\n3,3.5,c\n4,4.5,d\r", RE_READ, id="trailing-cr-in-string"),
-        pytest.param("\n3,3.5,c\rd\n4,4.5,e\n", BOTH_BREAK, id="lone-cr-mid-line"),
-        # a double's CSV parse would drop these line breaks
-        pytest.param('\n3,"3.5\n",c\n4,4.5,d\n', BOTH_BREAK, id="quoted-lf-in-double"),
-        pytest.param("\n3,3.5\r,c\n4,4.5,d\n", BOTH_BREAK, id="lone-cr-after-double"),
-        # parsed by the CSV reader's NaN and infinity strings, not by a cast
-        pytest.param("\n3,NaN,c\n4,Inf,d\n5,-Inf,e\n", RE_READ, id="nan-and-infinities"),
-        pytest.param("\n3,x,c\n", BOTH_BREAK, id="double-that-does-not-parse"),
-    ],
-)
+EDGE_CASES = [
+    pytest.param("\n3,3.5,c\n4,4.5,d\n", STREAMED, id="lf"),
+    pytest.param("\r\n3,3.5,c\r\n4,4.5,d\r\n", STREAMED, id="crlf"),
+    pytest.param("\r3,3.5,c\r4,4.5,d\r", STREAMED, id="cr-only"),
+    # CRLF detected first: the lone LF joins two rows, which do not
+    # parse; the record holds a line break, so the line reader reads it
+    pytest.param("\r\n3,3.5,c\r\n4,4.5,d\n5,5.5,e\r\n", RE_READ, id="mixed-crlf-first"),
+    # a value that does not parse on any reader goes straight to inference
+    pytest.param("\n3,3.5,c\nx,4.5,d\n", STREAM_BREAKS, id="int-that-does-not-parse"),
+    # LF detected first: the stream would keep 'c\r'
+    pytest.param("\n3,3.5,c\r\n4,4.5,d\n", RE_READ, id="mixed-lf-first"),
+    pytest.param("\n3,3.5,c\n4,4.5,d", STREAMED, id="no-final-newline"),
+    pytest.param("\n\n3,3.5,c\n\n\n4,4.5,d\n\n", STREAMED, id="blank-lines"),
+    pytest.param("\n3,,c\n,4.5,\n,,\n", STREAMED, id="empty-fields"),
+    pytest.param('\n3,3.5,"c,d"\n4,4.5,"e ""q"""\n', STREAMED, id="quoted-delimiter-and-quote"),
+    # the stream would land 2 rows; line mode breaks the row in two
+    pytest.param('\n3,3.5,"c\nd"\n4,4.5,e\n', BOTH_BREAK, id="quoted-lf"),
+    pytest.param('\n3,3.5,"c\r\nd"\n4,4.5,e\n', BOTH_BREAK, id="quoted-crlf"),
+    # the stream's open quote would swallow the next row
+    pytest.param('\n3,3.5,"c\n4,4.5,d\n', RE_READ, id="unclosed-quote-at-eof"),
+    pytest.param("\n3,3.5,c\n4,4.5,d\r", RE_READ, id="trailing-cr-in-string"),
+    pytest.param("\n3,3.5,c\rd\n4,4.5,e\n", BOTH_BREAK, id="lone-cr-mid-line"),
+    # a double's CSV parse would drop these line breaks
+    pytest.param('\n3,"3.5\n",c\n4,4.5,d\n', BOTH_BREAK, id="quoted-lf-in-double"),
+    pytest.param("\n3,3.5\r,c\n4,4.5,d\n", BOTH_BREAK, id="lone-cr-after-double"),
+    # parsed by the CSV reader's NaN and infinity strings, not by a cast
+    pytest.param("\n3,NaN,c\n4,Inf,d\n5,-Inf,e\n", RE_READ, id="nan-and-infinities"),
+    pytest.param("\n3,x,c\n", BOTH_BREAK, id="double-that-does-not-parse"),
+]
+
+
+@pytest.mark.parametrize("body, modes", EDGE_CASES)
 def test_edge_case_lands_as_the_line_reader_does(spark, tmp_path, scan_modes, body, modes):
     """Each input lands what the inference path lands from it (the
     dataset's types are the ones inference finds here), along the
@@ -353,6 +406,57 @@ def test_edge_case_lands_as_the_line_reader_does(spark, tmp_path, scan_modes, bo
     assert out == want_out == landing.config(name, DATE).output_path
     assert got.dtypes == want.dtypes
     assert repr(_rows(got)) == repr(_rows(want))  # NaN-safe
+
+
+def _partitions(spark, athena) -> dict:
+    """Each ``ingest_date=`` directory's file count, rows and footer Spark
+    row metadata."""
+    out = {}
+    for name in sorted(n for n in os.listdir(athena) if n.startswith("ingest_date=")):
+        files = sorted(f for f in os.listdir(athena / name) if f.endswith(".parquet"))
+        meta = {pq.read_metadata(athena / name / f).metadata[csv_ingest._ROW_METADATA.encode()] for f in files}
+        out[name] = (len(files), repr(_rows(spark.read.parquet(str(athena / name)))), meta)
+    return out
+
+
+def _golden(spark, athena) -> list:
+    view = f"landing_{uuid.uuid4().hex[:8]}"
+    spark.read.parquet(str(athena)).createOrReplaceTempView(view)
+    try:
+        with rule_excluded(spark):
+            scanned = spark.sql(README.format(t=view)).collect()
+        assert spark.sql(README.format(t=view)).collect() == scanned
+        return scanned
+    finally:
+        spark.catalog.dropTempView(view)
+
+
+def _assert_as_partition_by(spark, tmp_path, body: str, date: str) -> None:
+    """Land EDGE_FIRST, then ``body`` at ``date``, into two datasets:
+    by append, which writes straight into the partition directory, and
+    by ``overwrite_partition``, which keeps ``partitionBy``. Both must
+    hold the same directories, files, rows, schema and footers."""
+    direct, partitioned = tmp_path / "direct", tmp_path / "partitioned"
+    for root, mode in ((direct, "append"), (partitioned, "overwrite_partition")):
+        landing = Landing(spark, root, first=EDGE_FIRST)
+        landing.land(landing.put("edge.csv", EDGE_HEADER + body), date, mode=mode)
+    athena = [root / "curated" / "athena" for root in (direct, partitioned)]
+    got, want = (_partitions(spark, a) for a in athena)
+    assert len(got) == 2 and got == want
+    assert spark.read.parquet(str(athena[0])).dtypes == spark.read.parquet(str(athena[1])).dtypes
+    assert _golden(spark, athena[0]) == _golden(spark, athena[1])
+
+
+@pytest.mark.parametrize("body", [pytest.param(p.values[0], id=p.id) for p in EDGE_CASES])
+def test_direct_write_matches_partition_by(spark, tmp_path, body):
+    _assert_as_partition_by(spark, tmp_path, body, DATE)
+
+
+@pytest.mark.parametrize("date", ["2026/06/02", "2026=06=02", "100%", "10:30", "2026 06 02"])
+def test_escaped_partition_value_matches_partition_by(spark, tmp_path, date):
+    """Spark escapes these characters in a partition directory name (a
+    space is kept); the direct write names the directory the same way."""
+    _assert_as_partition_by(spark, tmp_path, "\n3,3.5,c\n", date)
 
 
 def test_utf8_bom_lands_as_inference_does(spark, tmp_path, scan_modes):
@@ -378,6 +482,21 @@ def test_re_read_keeps_the_dataset_types(spark, tmp_path, scan_modes):
     got = landing.partition(DATE)
     assert dict(got.dtypes)["amount"] == "double"
     assert _rows(got) == [(3, 3.0, "c"), (4, 4.0, "d")]
+
+
+def test_split_record_is_re_read_under_the_dataset_types(spark, tmp_path, scan_modes):
+    """LF first, then a CRLF line ending on a long column: the stream's
+    long parse fails on '3\\r'. That value holds a line break, so the
+    object is re-read line by line and stored as the dataset's bigint,
+    not as the int inference would find."""
+    landing = Landing(spark, tmp_path, first="id,note,n\n1,a,3000000000\n")
+    name = landing.put("split.csv", "id,note,n\n3,c,3\r\n4,d,4\n")
+    scan_modes.clear()
+    landing.land(name)
+    assert scan_modes == RE_READ
+    got = landing.partition(DATE)
+    assert dict(got.dtypes)["n"] == "bigint"
+    assert _rows(got) == [(3, "c", 3), (4, "d", 4)]
 
 
 def test_timestamp_dataset_is_read_line_by_line(spark, tmp_path, scan_modes):
