@@ -6,13 +6,16 @@ import java.util.Arrays;
 import java.util.Collections;
 import java.util.HashMap;
 import java.util.IdentityHashMap;
+import java.util.Iterator;
 import java.util.LinkedHashMap;
 import java.util.List;
 import java.util.Map;
 import java.util.Set;
+import java.util.concurrent.atomic.AtomicLong;
 
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.FileStatus;
+import org.apache.hadoop.fs.Path;
 import org.apache.parquet.HadoopReadOptions;
 import org.apache.parquet.ParquetReadOptions;
 import org.apache.parquet.hadoop.ParquetFileReader;
@@ -48,7 +51,13 @@ import org.apache.spark.sql.catalyst.plans.logical.Sort;
 import org.apache.spark.sql.catalyst.rules.Rule;
 import org.apache.spark.sql.catalyst.trees.TreePattern$;
 import org.apache.spark.sql.catalyst.util.UnsafeRowUtils$;
+import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition;
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils$;
+import org.apache.spark.sql.catalyst.catalog.SessionCatalog;
+import org.apache.spark.sql.classic.SparkSession;
+import org.apache.spark.sql.execution.datasources.CatalogFileIndex;
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy$;
+import org.apache.spark.sql.execution.datasources.FileStatusCache;
 import org.apache.spark.sql.execution.datasources.FileStatusWithMetadata;
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation;
 import org.apache.spark.sql.execution.datasources.LogicalRelation;
@@ -79,14 +88,26 @@ import scala.jdk.javaapi.CollectionConverters;
  * <p>The subtree becomes one {@link LocalRelation}: the relation's own file
  * index lists the files under the partition filters (the listing the scan
  * would do), and each group counts the row-group rows in its files' footers.
+ * For a catalog table whose relation has every selected partition's listing
+ * cached, the files are taken from that cache as the file index would take
+ * them, without building a file index over every partition.
  * An empty file counts 0, as the scan makes no split of it. A group whose
  * files hold no rows is dropped, as the scan would not see it; an empty
  * grouping always gives one row. A Project above is folded by Spark's
  * {@code ConvertToLocalRelation}, a global Sort by Spark's own ordering.
  *
- * <p>Cost: the driver reads one footer per listed file, serially, during
- * optimization. It grows with the number of files, not rows, and runs no
- * Spark job.
+ * <p>Cost: the driver reads the footer of each listed file it has not read
+ * before, serially, during optimization, and runs no Spark job. The row
+ * counts it read are kept per JVM by path, length and modification time, for
+ * at most {@code spark.sparkgraft.footerRowCounts.cachedFiles} files (20000;
+ * least recently used go first), so a query over a table that grew by one
+ * file reads one footer. A file replaced under its path has a new length or
+ * time and is read again; a count is kept only once the file's time is
+ * {@link PartitionRefresh#settled}, so a rewrite within the filesystem's
+ * timestamp granularity cannot reuse it. A catalog table's listing is
+ * cached by Spark and kept up to date by {@link PartitionRefresh}, so a
+ * query after a landing lists no files and reads one footer per new file; a
+ * path read's listing is taken per query.
  *
  * <p>Every other shape is left to the scan: COUNT of a column, DISTINCT,
  * FILTER or any other aggregate; a filter or grouping on a data column or on
@@ -99,6 +120,25 @@ import scala.jdk.javaapi.CollectionConverters;
  * spark.sql.optimizer.excludedRules}.
  */
 public class FooterRowCounts extends Rule<LogicalPlan> {
+  static final String CACHED_FILES = "spark.sparkgraft.footerRowCounts.cachedFiles";
+
+  /** Row counts by (path, length, modification time), least recently used first. */
+  private static final LinkedHashMap<List<Object>, Long> ROWS = new LinkedHashMap<>(16, 0.75f, true);
+
+  private static final AtomicLong FOOTERS_READ = new AtomicLong();
+
+  /** Footers read since the JVM started. */
+  public static long footersRead() {
+    return FOOTERS_READ.get();
+  }
+
+  /** Files whose row count is kept. */
+  public static int cachedFiles() {
+    synchronized (ROWS) {
+      return ROWS.size();
+    }
+  }
+
   @Override
   public LogicalPlan apply(LogicalPlan plan) {
     if (!plan.containsPattern(TreePattern$.MODULE$.AGGREGATE())) {
@@ -213,19 +253,28 @@ public class FooterRowCounts extends Rule<LogicalPlan> {
       }
     }
 
-    List<PartitionDirectory> dirs;
+    List<Listed> dirs;
     long[] counts;
     try {
       @SuppressWarnings("unchecked")
       Seq<Attribute> output = (Seq<Attribute>) (Seq<?>) rel.output();
       Seq<Expression> partitionFilters =
           DataSourceStrategy$.MODULE$.normalizeExprs(seq(conjuncts), output);
-      dirs = list(fs.location().listFiles(partitionFilters, seq(List.of())));
-      List<FileStatus> files = new ArrayList<>();
-      for (PartitionDirectory dir : dirs) {
-        for (FileStatusWithMetadata f : list(dir.files())) {
-          files.add(f.fileStatus());
+      dirs = fs.location() instanceof CatalogFileIndex index
+          ? cachedListing(fs, index, partitionFilters) : null;
+      if (dirs == null) {
+        dirs = new ArrayList<>();
+        for (PartitionDirectory dir : list(fs.location().listFiles(partitionFilters, seq(List.of())))) {
+          List<FileStatus> files = new ArrayList<>();
+          for (FileStatusWithMetadata f : list(dir.files())) {
+            files.add(f.fileStatus());
+          }
+          dirs.add(new Listed(dir.values(), files));
         }
+      }
+      List<FileStatus> files = new ArrayList<>();
+      for (Listed dir : dirs) {
+        files.addAll(dir.files());
       }
       counts = rowCounts(fs, files);
     } catch (IOException | RuntimeException e) {
@@ -236,7 +285,7 @@ public class FooterRowCounts extends Rule<LogicalPlan> {
     // group the partition directories; two paths may parse to one value
     Map<List<Object>, long[]> groups = new LinkedHashMap<>();
     int next = 0;
-    for (PartitionDirectory dir : dirs) {
+    for (Listed dir : dirs) {
       InternalRow values = dir.values().copy();
       Object[] key = new Object[groupIndex.size()];
       for (int g = 0; g < key.length; g++) {
@@ -266,21 +315,93 @@ public class FooterRowCounts extends Rule<LogicalPlan> {
     return new LocalRelation(agg.output(), seq(rows), false, Option.empty());
   }
 
+  /** One partition directory of a listing: its values and its data files. */
+  private record Listed(InternalRow values, List<FileStatus> files) {}
+
   /**
-   * Sum of the row-group row counts in each file's footer, read on the driver
-   * with one set of read options for all files.
+   * A catalog table's listing as {@code CatalogFileIndex.listFiles} gives it
+   * (the catalog's partitions under the filters; in each, the non-empty data
+   * files directly inside its directory), read from the listing the relation
+   * has cached, without building a file index over the partitions; null when
+   * a partition's listing is not cached, so the file index lists it.
+   */
+  private List<Listed> cachedListing(
+      HadoopFsRelation fs, CatalogFileIndex index, Seq<Expression> filters) {
+    FileStatusCache cache = PartitionRefresh.statusCache(index);
+    if (cache == null || index.table().partitionColumnNames().isEmpty()) {
+      return null;
+    }
+    SessionCatalog catalog = ((SparkSession) fs.sparkSession()).sessionState().catalog();
+    String tz = conf().sessionLocalTimeZone();
+    List<Listed> out = new ArrayList<>();
+    for (CatalogTablePartition p : list(ExternalCatalogUtils$.MODULE$.listPartitionsByFilter(
+        conf(), catalog, index.table(), filters))) {
+      if (p.location().getScheme() == null) {
+        return null; // CatalogFileIndex qualifies it against the filesystem
+      }
+      Path dir = new Path(p.location());
+      Option<FileStatus[]> leaves = cache.getLeafFiles(dir);
+      if (leaves.isEmpty()) {
+        return null;
+      }
+      String prefix = dir.toUri().getRawPath() + "/";
+      List<FileStatus> files = new ArrayList<>();
+      for (FileStatus f : leaves.get()) {
+        String path = f.getPath().toUri().getRawPath();
+        String name = f.getPath().getName();
+        if (path.startsWith(prefix) && path.indexOf('/', prefix.length()) < 0 && f.getLen() > 0
+            && !(name.startsWith("_") && !name.contains("=")) && !name.startsWith(".")) {
+          files.add(f);
+        }
+      }
+      out.add(new Listed(p.toRow(index.partitionSchema(), tz), files));
+    }
+    return out;
+  }
+
+  /**
+   * Sum of the row-group row counts in each file's footer: kept from an
+   * earlier read, or read on the driver with one set of read options.
    */
   private long[] rowCounts(HadoopFsRelation fs, List<FileStatus> files) throws IOException {
-    Configuration conf = fs.getHadoopConf(fs.sparkSession(), fs.options());
-    ParquetReadOptions options = HadoopReadOptions.builder(conf).build();
+    int limit = Integer.parseInt(conf().getConfString(CACHED_FILES, "20000"));
+    long readAt = System.currentTimeMillis();
+    Configuration conf = null;
+    ParquetReadOptions options = null;
     long[] out = new long[files.size()];
     for (int i = 0; i < out.length; i++) {
       FileStatus status = files.get(i);
-      if (status.getLen() > 0) { // the scan makes no split of an empty file
-        InputFile in = HadoopInputFile.fromStatus(status, conf);
-        try (SeekableInputStream stream = in.newStream()) {
-          for (BlockMetaData block : ParquetFileReader.readFooter(in, options, stream).getBlocks()) {
-            out[i] += block.getRowCount();
+      if (status.getLen() == 0) {
+        continue; // the scan makes no split of an empty file
+      }
+      List<Object> key =
+          List.of(status.getPath().toString(), status.getLen(), status.getModificationTime());
+      Long known;
+      synchronized (ROWS) {
+        known = ROWS.get(key);
+      }
+      if (known != null) {
+        out[i] = known;
+        continue;
+      }
+      if (conf == null) {
+        conf = fs.getHadoopConf(fs.sparkSession(), fs.options());
+        options = HadoopReadOptions.builder(conf).build();
+      }
+      InputFile in = HadoopInputFile.fromStatus(status, conf);
+      try (SeekableInputStream stream = in.newStream()) {
+        for (BlockMetaData block : ParquetFileReader.readFooter(in, options, stream).getBlocks()) {
+          out[i] += block.getRowCount();
+        }
+      }
+      FOOTERS_READ.incrementAndGet();
+      if (PartitionRefresh.settled(status.getModificationTime(), readAt)) {
+        synchronized (ROWS) {
+          ROWS.put(key, out[i]);
+          Iterator<List<Object>> eldest = ROWS.keySet().iterator();
+          while (ROWS.size() > limit) {
+            eldest.next();
+            eldest.remove();
           }
         }
       }

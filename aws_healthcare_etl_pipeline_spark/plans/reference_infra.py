@@ -119,7 +119,9 @@ def ref_streaming_ingest_exactly_once(
     "priority digit) in two waves — priorities 1-2 exist when the "
     "table is registered (crawler parity, main.tf:196-204), priorities "
     "3-5 land AFTER registration and only become queryable via "
-    "recoverPartitions (MSCK). The query reads through spark.table(), "
+    "catalog.refresh_partitions (MSCK): the package jar's "
+    "PartitionRefresh in a get_spark session, recoverPartitions in a "
+    "JVM without the jar. The query reads through spark.table(), "
     "so missing recovery loses three partitions and fails the row "
     "count; schema inference from files is exercised by registration. "
     "Scale: both writes and the final group-by are distributed; only "

@@ -26,6 +26,9 @@ goes on the driver and executor classpath and does two things:
   (the README's Athena query, ``df.count()``). Its Javadoc states the
   shapes it answers and those it leaves to the scan.
 
+``catalog.refresh_partitions`` also calls into the jar
+(``sparkgraft.sql.PartitionRefresh``) when the running JVM can load it.
+
 Rebuild the jar after editing the source (``javac`` 17+)::
 
     cd aws_healthcare_etl_pipeline_spark/jvm
@@ -36,6 +39,7 @@ Rebuild the jar after editing the source (``javac`` 17+)::
 
 from __future__ import annotations
 
+import functools
 import os
 
 from py4j.java_gateway import JavaClass
@@ -51,17 +55,34 @@ _LISTS = {
 }
 
 
-def _jar_conf() -> dict[str, str]:
-    """Register the fork-free ``file://`` filesystem and the SQL extension.
+def jar_class(name: str) -> JavaClass | None:
+    """The jar's class ``name`` in the running JVM, or None if it cannot load it.
 
     The jar must be on the driver JVM's classpath when it launches. A
     JVM that is already up (a session stopped and rebuilt in one
-    process) keeps its classpath, so the classes are named only if it
-    can load them: naming a class it cannot load breaks every path.
+    process, or a session built without ``get_spark``) keeps its
+    classpath; py4j resolves a name it cannot load to a package.
     """
-    if SparkContext._jvm is not None and not isinstance(
-        SparkContext._jvm.sparkgraft.fs.ForkFreeLocalFileSystem, JavaClass
-    ):
+    return _jar_class(SparkContext._jvm, name)
+
+
+@functools.lru_cache(maxsize=None)
+def _jar_class(jvm, name: str) -> JavaClass | None:
+    # per JVM view: each lookup of a name that is not a class searches
+    # the whole classpath (about 0.5 ms for a dotted name)
+    cls = jvm
+    for part in name.split("."):
+        cls = getattr(cls, part)
+    return cls if isinstance(cls, JavaClass) else None
+
+
+def _jar_conf() -> dict[str, str]:
+    """Register the fork-free ``file://`` filesystem and the SQL extension.
+
+    In a JVM that is already up, the classes are named only if it can
+    load them: naming a class it cannot load breaks every path.
+    """
+    if SparkContext._jvm is not None and jar_class("sparkgraft.fs.ForkFreeLocalFileSystem") is None:
         return {}
     return {
         "spark.driver.extraClassPath": _JAR,

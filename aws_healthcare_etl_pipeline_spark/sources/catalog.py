@@ -6,32 +6,41 @@ database main.tf:114-116); Athena then queries ``"<db>"."athena"``
 (README.md:94-101).
 
 Spark-native: register the parquet location as an external table once;
-new partitions are picked up synchronously with
-``spark.catalog.recoverPartitions`` (= ``MSCK REPAIR TABLE``) — the
-15-minute crawler latency disappears.
+new partitions are picked up synchronously by ``refresh_partitions``
+(what ``MSCK REPAIR TABLE`` does) — the 15-minute crawler latency
+disappears.
 
-What a refresh costs: a driver-side listing of the partition
-directories under the table location, then catalog calls registering
-them (already registered ones are skipped). No Spark job: ``get_spark`` sets
-``spark.sql.hive.gatherFastStats=false``, so the repair does not re-list
-every partition's files to store per-partition numFiles/totalSize
-(with the default it does, as a Spark job, once the table passes
-``spark.rdd.parallelListingThreshold`` = 10 partitions). Those figures
-feed no plan: scans of the table list the pruned partitions' files
-themselves. The listing of partition directories still grows with the
-partition count.
+What a refresh costs: one driver-side listing of the table root, then
+catalog calls registering the partition directories the catalog lacks.
+No Spark job, and the table's cached relation and file listing stay:
+``sparkgraft.sql.PartitionRefresh`` (in the package jar) lists again only
+a partition directory that changed since its listing was cached, or
+that changed too recently to tell, and gives a vanished one an empty
+listing. Its Javadoc states that rule and what falls back to
+``spark.catalog.recoverPartitions``, which also runs when the JVM cannot
+load the jar (a session not built by ``get_spark``). That fallback
+refreshes the whole table, so the next query lists every partition's
+files again, as a Spark job past
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) paths.
+``get_spark`` sets ``spark.sql.hive.gatherFastStats=false``: with the
+default, the repair lists every partition's files to store
+numFiles/totalSize, as a Spark job once the table passes
+``spark.rdd.parallelListingThreshold`` (10) partitions, and no plan here
+reads those figures.
 
 What the README's Athena query costs (``SELECT ingest_date, COUNT(*) ...
 GROUP BY ingest_date ORDER BY ingest_date DESC``): no Spark job either.
-The session's optimizer rule answers it from the table's file listing
-and one Parquet footer read per file on the driver; which shapes it
-answers and which still scan is stated in
-``jvm/sparkgraft/sql/FooterRowCounts.java``.
+The session's optimizer rule answers it from the table's cached file
+listing and the Parquet footers of the files it has not read before,
+on the driver; which shapes it answers and which still scan is stated
+in ``jvm/sparkgraft/sql/FooterRowCounts.java``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+
+from ..session import jar_class
 
 
 def register_parquet_table(
@@ -67,4 +76,8 @@ def register_parquet_table(
 
 def refresh_partitions(spark: SparkSession, fq_table: str) -> None:
     """MSCK REPAIR equivalent — makes newly-written partitions visible."""
-    spark.catalog.recoverPartitions(fq_table)
+    refresh = jar_class("sparkgraft.sql.PartitionRefresh")
+    if refresh is None:
+        spark.catalog.recoverPartitions(fq_table)
+    else:
+        refresh.run(spark._jsparkSession, fq_table)

@@ -46,7 +46,8 @@ def test_refresh_runs_no_spark_job_past_listing_threshold(spark, tmp_path):
     """Past spark.rdd.parallelListingThreshold (10) partitions a refresh
     with gatherFastStats on runs a job listing every partition's files;
     get_spark turns that off, so a refresh of a 12-partition table runs
-    none and still makes the new partition queryable."""
+    none and still makes the new partition queryable. At 40 partitions a
+    refresh plus the README query run none either."""
     from pyspark.sql import functions as F
 
     location = str(tmp_path / "t")
@@ -73,6 +74,24 @@ def test_refresh_runs_no_spark_job_past_listing_threshold(spark, tmp_path):
     assert jobs == []
     assert spark.table(fq).where("ingest_date = '2026-07-12'").count() == 1
     assert spark.table(fq).count() == 12
+
+    # Past parallelPartitionDiscovery.threshold (32) paths a listing of every
+    # partition is a Spark job; the refresh keeps the table's cached listing,
+    # so a landing, its refresh and the README query run none at 40.
+    land(12, 27)
+    refresh_partitions(spark, fq)
+    readme = f"SELECT ingest_date, COUNT(*) AS num_rows FROM {fq} GROUP BY ingest_date ORDER BY ingest_date DESC"
+    spark.sql(readme).collect()
+    land(39, 1)
+    sc.setJobGroup("refresh_40", "refresh")
+    try:
+        refresh_partitions(spark, fq)
+        rows = spark.sql(readme).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup("refresh_40")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert jobs == []
+    assert len(rows) == 40 and rows[0].ingest_date == "2026-07-40" and rows[0].num_rows == 1
     spark.sql(f"DROP TABLE {fq}")
     spark.sql("DROP DATABASE etl_refresh_db")
 

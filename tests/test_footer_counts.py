@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import time
 import uuid
 
 import pyarrow as pa
@@ -23,6 +24,7 @@ from aws_healthcare_etl_pipeline_spark.sources import catalog
 from aws_healthcare_etl_pipeline_spark.sources.csv_ingest import IngestConfig, ingest_csv
 
 RULE = "sparkgraft.sql.FooterRowCounts"
+CACHED_FILES = "spark.sparkgraft.footerRowCounts.cachedFiles"
 EXCLUDED = "spark.sql.optimizer.excludedRules"
 README = "SELECT ingest_date, COUNT(*) AS num_rows FROM {t} GROUP BY ingest_date ORDER BY ingest_date DESC"
 DATES = ["2026-01-01", "2026-01-02", "2026-01-03", None]
@@ -268,6 +270,69 @@ def test_batch_landing_runs_three_jobs_then_one(spark, tmp_path):
     assert jobs == 1  # parsed once, under the dataset's schema, by the write
 
 
+def _settle(root) -> None:
+    """Date every file an hour back, so a count read from it may be kept."""
+    old = time.time() - 3600
+    for d, _, names in os.walk(root):
+        for n in names:
+            os.utime(os.path.join(d, n), (old, old))
+
+
+def _count_and_reads(spark, make):
+    """(sorted counts, footers read) of ``make`` with the rule active; asserts it answered."""
+    rule = spark._jvm.sparkgraft.sql.FooterRowCounts
+    before = rule.footersRead()
+    rows, plan = both(spark, make)
+    assert answered(plan), plan
+    return sorted(r[-1] for r in rows), rule.footersRead() - before
+
+
+def test_replaced_file_is_read_again(spark, tmp_path):
+    part = tmp_path / "replaced" / "ingest_date=2026-05-01"
+    part.mkdir(parents=True)
+    make = lambda: spark.read.parquet(str(part.parent)).groupBy().count()  # noqa: E731
+
+    def write(n):
+        pq.write_table(pa.table({"id": pa.array(range(n), pa.int64())}), str(part / "part-0.parquet"))
+        _settle(part)
+
+    write(3)
+    assert _count_and_reads(spark, make) == ([3], 1)
+    assert _count_and_reads(spark, make) == ([3], 0)  # the count was kept
+    write(7)  # the same path, another row count
+    assert _count_and_reads(spark, make) == ([7], 1)
+    assert _count_and_reads(spark, make) == ([7], 0)
+
+
+def test_recent_file_count_is_not_kept(spark, tmp_path):
+    part = tmp_path / "recent" / "ingest_date=2026-05-02"
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"id": pa.array(range(4), pa.int64())}), str(part / "part-0.parquet"))
+    stamp = time.time() + 60  # a time the clock has not passed: a rewrite could keep it
+    os.utime(part / "part-0.parquet", (stamp, stamp))
+    make = lambda: spark.read.parquet(str(part.parent)).groupBy().count()  # noqa: E731
+    assert _count_and_reads(spark, make) == ([4], 1)
+    assert _count_and_reads(spark, make) == ([4], 1)
+
+
+def test_kept_counts_stay_bounded(spark, tmp_path):
+    root = tmp_path / "bounded"
+    for k in range(8):
+        part = root / f"ingest_date=2026-06-0{k + 1}"
+        part.mkdir(parents=True)
+        pq.write_table(pa.table({"id": pa.array(range(k + 1), pa.int64())}), str(part / "part-0.parquet"))
+    _settle(root)
+    rule = spark._jvm.sparkgraft.sql.FooterRowCounts
+    spark.conf.set(CACHED_FILES, "3")
+    try:
+        for _ in range(2):
+            counts, _ = _count_and_reads(spark, lambda: spark.read.parquet(str(root)).groupBy("ingest_date").count())
+            assert counts == list(range(1, 9))
+            assert rule.cachedFiles() <= 3
+    finally:
+        spark.conf.unset(CACHED_FILES)
+
+
 def test_caller_extensions_are_appended(spark):
     conf = session._session_conf(
         {"spark.sql.extensions": "a.Ext", "spark.driver.extraClassPath": "/x.jar", "k": "v"}
@@ -309,6 +374,7 @@ def test_count_shaped_registry_queries_agree(spark, sf_dir, name):
 
     fn = REGISTRY[name].fn
     rows = sorted(map(repr, fn(spark, sf_dir).collect()))
+    again = sorted(map(repr, fn(spark, sf_dir).collect()))  # from the kept counts
     with rule_excluded(spark):
         ref = sorted(map(repr, fn(spark, sf_dir).collect()))
-    assert rows == ref
+    assert rows == again == ref
