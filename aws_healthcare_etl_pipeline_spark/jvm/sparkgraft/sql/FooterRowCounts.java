@@ -6,7 +6,6 @@ import java.util.Arrays;
 import java.util.Collections;
 import java.util.HashMap;
 import java.util.IdentityHashMap;
-import java.util.Iterator;
 import java.util.LinkedHashMap;
 import java.util.List;
 import java.util.Map;
@@ -99,12 +98,11 @@ import scala.jdk.javaapi.CollectionConverters;
  * <p>Cost: the driver reads the footer of each listed file it has not read
  * before, serially, during optimization, and runs no Spark job. The row
  * counts it read are kept per JVM by path, length and modification time, for
- * at most {@code spark.sparkgraft.footerRowCounts.cachedFiles} files (20000;
- * least recently used go first), so a query over a table that grew by one
- * file reads one footer. A file replaced under its path has a new length or
- * time and is read again; a count is kept only once the file's time is
- * {@link PartitionRefresh#settled}, so a rewrite within the filesystem's
- * timestamp granularity cannot reuse it. A catalog table's listing is
+ * at most {@link #CACHED_FILES} files (least recently used go first), so a
+ * query over a table that grew by one file reads one footer. A file replaced
+ * under its path has a new length or time and is read again; a count is kept
+ * only once the file's time is {@link PartitionRefresh#settled}, so a rewrite
+ * within the filesystem's timestamp granularity cannot reuse it. A catalog table's listing is
  * cached by Spark and kept up to date by {@link PartitionRefresh}, so a
  * query after a landing lists no files and reads one footer per new file; a
  * path read's listing is taken per query.
@@ -120,10 +118,11 @@ import scala.jdk.javaapi.CollectionConverters;
  * spark.sql.optimizer.excludedRules}.
  */
 public class FooterRowCounts extends Rule<LogicalPlan> {
-  static final String CACHED_FILES = "spark.sparkgraft.footerRowCounts.cachedFiles";
+  /** Most files whose row count is kept. */
+  public static final int CACHED_FILES = 20000;
 
-  /** Row counts by (path, length, modification time), least recently used first. */
-  private static final LinkedHashMap<List<Object>, Long> ROWS = new LinkedHashMap<>(16, 0.75f, true);
+  /** Row counts by (path, length, modification time). */
+  private static final Counts ROWS = new Counts(CACHED_FILES);
 
   private static final AtomicLong FOOTERS_READ = new AtomicLong();
 
@@ -136,6 +135,21 @@ public class FooterRowCounts extends Rule<LogicalPlan> {
   public static int cachedFiles() {
     synchronized (ROWS) {
       return ROWS.size();
+    }
+  }
+
+  /** Row counts by file key, least recently used first, at most {@code limit} of them. */
+  public static final class Counts extends LinkedHashMap<List<Object>, Long> {
+    private final int limit;
+
+    public Counts(int limit) {
+      super(16, 0.75f, true);
+      this.limit = limit;
+    }
+
+    @Override
+    protected boolean removeEldestEntry(Map.Entry<List<Object>, Long> eldest) {
+      return size() > limit;
     }
   }
 
@@ -364,7 +378,6 @@ public class FooterRowCounts extends Rule<LogicalPlan> {
    * earlier read, or read on the driver with one set of read options.
    */
   private long[] rowCounts(HadoopFsRelation fs, List<FileStatus> files) throws IOException {
-    int limit = Integer.parseInt(conf().getConfString(CACHED_FILES, "20000"));
     long readAt = System.currentTimeMillis();
     Configuration conf = null;
     ParquetReadOptions options = null;
@@ -398,11 +411,6 @@ public class FooterRowCounts extends Rule<LogicalPlan> {
       if (PartitionRefresh.settled(status.getModificationTime(), readAt)) {
         synchronized (ROWS) {
           ROWS.put(key, out[i]);
-          Iterator<List<Object>> eldest = ROWS.keySet().iterator();
-          while (ROWS.size() > limit) {
-            eldest.next();
-            eldest.remove();
-          }
         }
       }
     }

@@ -66,18 +66,22 @@ import scala.jdk.javaapi.CollectionConverters;
  *   <li>a directory that is gone gets an empty listing (the scan would find
  *       no files there either);
  *   <li>a directory whose modification time differs from the one seen when
- *       its listing was last taken, or whose time was not yet {@link
- *       #settled} then, is listed again by Spark's own listing code;
- *   <li>a relation this class has not seen before (resolved by a query after
- *       another refresh) has its listing dropped once, as {@code refreshTable}
- *       would.
+ *       its listing was last taken, or that was not settled then (its time or
+ *       a listed file's time was not yet {@link #settled}, or a listed data
+ *       file was empty), is listed again by Spark's own listing code;
+ *   <li>a relation this class has not seen before (the table's first refresh,
+ *       or a relation resolved by a query after another refresh) has every
+ *       partition listed again, as the query after {@code refreshTable} would.
  * </ul>
  *
  * <p>A directory's modification time changes when a file is created in it,
- * removed from it or renamed into it, which is how Spark's committers and
- * the package's writer publish files. A file rewritten in place in a settled
- * partition (same name, no rename) is not seen; {@code REFRESH TABLE} covers
- * that.
+ * removed from it or renamed into it, but not when a file in it is written.
+ * So only files published whole are tracked: renamed into place, as Spark's
+ * committers and the package's writer do, or written with no pause longer
+ * than the margin of {@link #settled} (a file listed while being written has
+ * a recent time, or is empty, and its directory is listed again by the next
+ * refresh). A file that pauses longer half written, or is rewritten in place
+ * in a settled partition, is not seen; {@code REFRESH TABLE} covers that.
  *
  * <p>{@link #run} falls back to {@code recoverPartitions} for what it cannot
  * reason about: a view, a Hive-format table, a table without exactly one
@@ -92,8 +96,8 @@ import scala.jdk.javaapi.CollectionConverters;
  * {@code refreshTable} does.
  */
 public final class PartitionRefresh {
-  /** What a refresh saw of one partition directory. */
-  private record Seen(Path path, long mtime, long seenAt) {}
+  /** What a refresh saw of one partition directory when it listed it. */
+  private record Seen(Path path, long mtime, boolean settled) {}
 
   /**
    * File-status cache of a resolved table relation -> directory name -> what
@@ -177,30 +181,28 @@ public final class PartitionRefresh {
     if (dirs == null) {
       return false;
     }
-    boolean done;
-    if (seen != null) {
-      synchronized (seen) {
-        done = update(session, table, hadoopConf, files, seen, root, dirs, seenAt);
+    if (seen == null) {
+      if (files == null) {
+        files = statusCache(session.table(name).queryExecution().analyzed().collectLeaves().head());
       }
+      if (files == null || !start(session, table, fs, root, dirs, conf)) {
+        return false;
+      }
+      files.invalidateAll(); // listings cached at times unknown here
+      seen = new HashMap<>();
+      listInto(session, hadoopConf, files, seen, root, dirs, new ArrayList<>(dirs.keySet()), seenAt);
+      SEEN.put(files, seen);
     } else {
-      done = start(session, table, fs, root, dirs, conf);
-      if (done && cached == null) {
-        // resolve the relation now: its listing starts empty, so every
-        // listing it caches is taken after seenAt
-        LogicalPlan rel = session.table(name).queryExecution().analyzed().collectLeaves().head();
-        files = statusCache(rel);
-        if (files != null) {
-          SEEN.put(files, seen(root, dirs, seenAt));
+      synchronized (seen) {
+        if (!update(session, table, hadoopConf, files, seen, root, dirs, seenAt)) {
+          return false;
         }
-      } else if (done && files != null) {
-        SEEN.put(files, seen(root, dirs, seenAt));
-        files.invalidateAll(); // listings cached at times unknown here
       }
     }
-    if (done && !cache.isEmpty()) {
+    if (!cache.isEmpty()) {
       cache.recacheByPlan(session, session.table(name).queryExecution().analyzed());
     }
-    return done;
+    return true;
   }
 
   /** First refresh of a relation: register what the catalog lacks. */
@@ -240,7 +242,7 @@ public final class PartitionRefresh {
       if (last == null) {
         added.add(dir.getKey());
         stale.add(dir.getKey());
-      } else if (last.mtime() != dir.getValue() || !settled(last.mtime(), last.seenAt())) {
+      } else if (last.mtime() != dir.getValue() || !last.settled()) {
         stale.add(dir.getKey());
       }
     }
@@ -255,23 +257,39 @@ public final class PartitionRefresh {
         it.remove();
       }
     }
-    if (stale.isEmpty()) {
-      return true;
+    listInto(session, hadoopConf, files, seen, root, dirs, stale, seenAt);
+    return true;
+  }
+
+  /**
+   * Lists directories {@code names} (from {@code dirs}, whose times were read
+   * at {@code seenAt}) into the relation's listing cache, with Spark's own
+   * listing code, and records what was seen of each.
+   */
+  private static void listInto(
+      SparkSession session, Configuration hadoopConf, FileStatusCache files, Map<String, Seen> seen,
+      Path root, Map<String, Long> dirs, List<String> names, long seenAt) {
+    if (names.isEmpty()) {
+      return;
     }
     List<Path> paths = new ArrayList<>();
-    for (String dir : stale) {
+    for (String dir : names) {
       Seen last = seen.get(dir);
       paths.add(last != null ? last.path() : child(root, dir));
     }
-    for (Tuple2<Path, Seq<FileStatus>> listed : list(InMemoryFileIndex$.MODULE$.bulkListLeafFiles(
-        seq(paths), hadoopConf, null, session, Map$.MODULE$.empty()))) {
-      files.putLeafFiles(listed._1(), list(listed._2()).toArray(new FileStatus[0]));
+    // listed in the order of the paths given
+    List<Tuple2<Path, Seq<FileStatus>>> listed = list(InMemoryFileIndex$.MODULE$.bulkListLeafFiles(
+        seq(paths), hadoopConf, null, session, Map$.MODULE$.empty()));
+    for (int i = 0; i < names.size(); i++) {
+      FileStatus[] leaves = list(listed.get(i)._2()).toArray(new FileStatus[0]);
+      files.putLeafFiles(listed.get(i)._1(), leaves);
+      long mtime = dirs.get(names.get(i));
+      boolean settled = settled(mtime, seenAt);
+      for (FileStatus f : leaves) {
+        settled &= f.getLen() > 0 && settled(f.getModificationTime(), seenAt);
+      }
+      seen.put(names.get(i), new Seen(paths.get(i), mtime, settled));
     }
-    for (int i = 0; i < stale.size(); i++) {
-      String dir = stale.get(i);
-      seen.put(dir, new Seen(paths.get(i), dirs.get(dir), seenAt));
-    }
-    return true;
   }
 
   /**
@@ -369,14 +387,6 @@ public final class PartitionRefresh {
   /** The directory's path as Hadoop's listing builds it (a colon stays in the name). */
   private static Path child(Path root, String name) {
     return new Path(root, new Path(null, null, name));
-  }
-
-  private static Map<String, Seen> seen(Path root, Map<String, Long> dirs, long seenAt) {
-    Map<String, Seen> out = new HashMap<>();
-    for (Map.Entry<String, Long> dir : dirs.entrySet()) {
-      out.put(dir.getKey(), new Seen(child(root, dir.getKey()), dir.getValue(), seenAt));
-    }
-    return out;
   }
 
   /** The file-status cache of a catalog table's relation, or null. */

@@ -15,8 +15,10 @@ catalog calls registering the partition directories the catalog lacks.
 No Spark job, and the table's cached relation and file listing stay:
 ``sparkgraft.sql.PartitionRefresh`` (in the package jar) lists again only
 a partition directory that changed since its listing was cached, or
-that changed too recently to tell, and gives a vanished one an empty
-listing. Its Javadoc states that rule and what falls back to
+whose time or files were too recent to tell, and gives a vanished one an
+empty listing. Only a table's first refresh (the one
+``register_parquet_table`` runs) lists every partition, as the first
+query after a full refresh would. Its Javadoc states that rule and what falls back to
 ``spark.catalog.recoverPartitions``, which also runs when the JVM cannot
 load the jar (a session not built by ``get_spark``). That fallback
 refreshes the whole table, so the next query lists every partition's

@@ -24,7 +24,6 @@ from aws_healthcare_etl_pipeline_spark.sources import catalog
 from aws_healthcare_etl_pipeline_spark.sources.csv_ingest import IngestConfig, ingest_csv
 
 RULE = "sparkgraft.sql.FooterRowCounts"
-CACHED_FILES = "spark.sparkgraft.footerRowCounts.cachedFiles"
 EXCLUDED = "spark.sql.optimizer.excludedRules"
 README = "SELECT ingest_date, COUNT(*) AS num_rows FROM {t} GROUP BY ingest_date ORDER BY ingest_date DESC"
 DATES = ["2026-01-01", "2026-01-02", "2026-01-03", None]
@@ -316,6 +315,12 @@ def test_recent_file_count_is_not_kept(spark, tmp_path):
 
 
 def test_kept_counts_stay_bounded(spark, tmp_path):
+    counts = getattr(spark._jvm.sparkgraft.sql, "FooterRowCounts$Counts")(3)
+    for key in "abcd":
+        counts.put(key, 1)
+        counts.get("a")  # used last: "b" goes first
+    assert sorted(counts.keySet()) == ["a", "c", "d"]
+
     root = tmp_path / "bounded"
     for k in range(8):
         part = root / f"ingest_date=2026-06-0{k + 1}"
@@ -323,14 +328,9 @@ def test_kept_counts_stay_bounded(spark, tmp_path):
         pq.write_table(pa.table({"id": pa.array(range(k + 1), pa.int64())}), str(part / "part-0.parquet"))
     _settle(root)
     rule = spark._jvm.sparkgraft.sql.FooterRowCounts
-    spark.conf.set(CACHED_FILES, "3")
-    try:
-        for _ in range(2):
-            counts, _ = _count_and_reads(spark, lambda: spark.read.parquet(str(root)).groupBy("ingest_date").count())
-            assert counts == list(range(1, 9))
-            assert rule.cachedFiles() <= 3
-    finally:
-        spark.conf.unset(CACHED_FILES)
+    counts, _ = _count_and_reads(spark, lambda: spark.read.parquet(str(root)).groupBy("ingest_date").count())
+    assert counts == list(range(1, 9))
+    assert 8 <= rule.cachedFiles() <= rule.CACHED_FILES == 20000
 
 
 def test_caller_extensions_are_appended(spark):

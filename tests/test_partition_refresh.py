@@ -299,17 +299,59 @@ def test_footers_read_once_per_file(spark, root):
     assert [tuple(r) for r in rows][0] == ("2027-01-05", 5)
 
 
-
 def test_relation_resolved_after_another_refresh(spark, root):
-    """A relation this refresh has not seen has its listing dropped once."""
+    """A relation this refresh has not seen has its listing taken again."""
     d = write(root, "2027-02-01", range(5))
+    gone = write(root, "2027-02-02", range(100, 103))
     fq = register(spark, root)
     answers(spark, fq)
     spark.sql(f"REFRESH TABLE {fq}")  # drops the relation
     answers(spark, fq)  # a new relation lists and caches the files
     write(root, "2027-02-01", range(5, 9))
+    shutil.rmtree(gone)
     old = time.time() - 60  # as if long settled: only the unknown relation tells
     os.utime(d, (old, old))
     assert kept(spark, fq)
     readme, totals = check(spark, fq, root)
     assert readme == [("2027-02-01", 9)] and totals == [(9, sum(range(9)))]
+
+
+def test_file_created_empty_then_written(spark, root):
+    """A writer that creates a file and writes it later (no rename) is still seen."""
+    d = write(root, "2027-04-01", range(5))
+    fq = register(spark, root)
+    answers(spark, fq)
+    late = os.path.join(d, "late.parquet")
+    open(late, "wb").close()
+    old = time.time() - 3600  # times that look settled: only the empty file tells
+    for p in (late, d):
+        os.utime(p, (old, old))
+    assert kept(spark, fq)
+    assert answers(spark, fq)[1] == [(5, sum(range(5)))]
+    pq.write_table(pa.table({"id": pa.array(range(5, 12), pa.int64())}), late)
+    for p in (late, d):
+        os.utime(p, (old, old))
+    assert kept(spark, fq)
+    readme, totals = check(spark, fq, root)
+    assert readme == [("2027-04-01", 12)] and totals == [(12, sum(range(12)))]
+
+
+def test_file_listed_half_written(spark, root):
+    """A file still being written in a settled directory is listed again."""
+    d = write(root, "2027-04-02", range(5))
+    fq = register(spark, root)
+    answers(spark, fq)
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.table({"id": pa.array(range(5, 9), pa.int64())}), sink)
+    data = sink.getvalue().to_pybytes()
+    slow = os.path.join(d, "slow.parquet")
+    with open(slow, "wb") as f:
+        f.write(data[:4])  # the leading magic bytes only
+    old = time.time() - 3600  # the directory's time settled; the file's is recent
+    os.utime(d, (old, old))
+    assert kept(spark, fq)
+    with open(slow, "ab") as f:
+        f.write(data[4:])
+    assert kept(spark, fq)
+    readme, totals = check(spark, fq, root)
+    assert readme == [("2027-04-02", 9)] and totals == [(9, sum(range(9)))]
